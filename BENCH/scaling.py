@@ -217,18 +217,18 @@ pretending the bound is tight). Reading:
   fixed splits that quantized a 1.4 GB corpus into a ragged 8+3 two-wave
   schedule at 8 cores).
 
-## Broadcast ↔ SMJ tile-path crossover
+## Tile lookup at scale
 
-The flagship enriches points with AEZ codes via a broadcast searchsorted
-lookup (tile dim ships to every executor). At planet scale the 300 m land
-grid (~2.5×10⁹ cells ≈ 20+ GB) cannot broadcast: `documents.with_aez(...,
-broadcast_tiles=False)` joins against a tiles table bucketed+sorted on the
-join key — sort-merge join with NO Exchange on the tile side (verified:
-`Bucketed: true` scan in PLANS.md). Measured at 200k docs both paths are
-within noise of each other (bench queries flagship_docs vs
-flagship_docs_smj), so the crossover is governed by tile-dim size alone:
-broadcast while the non-blank dim fits comfortably in executor memory
-(≲ a few hundred MB), bucketed SMJ beyond.
+The flagship looks up each point's AEZ code inside its fused kernel through
+one path: a broadcast shard manifest ({{tile_id → shard paths}}) over the
+clustered tile sink that `io.write_tiles` writes; each worker reads just the
+shards its points touch, through an LRU (`joins.tile_shard_lookup`, built
+once per world by `World.tile_lookup()`). Per-worker memory is bounded by
+the LRU, not by the grid, so the timed plan is the one that survives the
+300 m land grid (~2.5×10⁹ cells ≈ 20+ GB, too large to broadcast). The
+earlier broadcast-array and bucketed sort-merge tile paths are gone; the
+shard path also measured faster than the broadcast arrays (BENCH_r07.json,
+200k docs at local[32]: 1.104 s vs 1.736 s).
 
 ## Reference comparison
 

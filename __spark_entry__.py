@@ -859,19 +859,14 @@ def q_sp_within_distance(spark, sf_dir):
 
 def q_sp_doc_zone_counts(spark, sf_dir):
     """The production flagship aggregation under the full value-parity gate:
-    ONE Arrow kernel fusing PIP + kNN + tile lookup + partition-local
-    distinct-doc dedup (assign_points emit='zone_counts') — match rows never
-    cross the Arrow boundary; the shuffle carries only (country, aez, n)
-    partials. The composed forms (with_aez + doc_zone_counts / doc_local)
+    ONE Arrow kernel fusing PIP + kNN + shard-manifest tile lookup
+    (World.tile_lookup) + partition-local distinct-doc dedup (assign_points
+    emit='zone_counts') — match rows never cross the Arrow boundary; the
+    shuffle carries only (country, aez, n) partials. The composed forms (with_aez + doc_zone_counts / doc_local)
     are parity-pinned in tests/test_doc_zone_counts.py."""
-    from aezspark.joins import tile_lookup_broadcast
-
     w = _world(spark)
-    key = "_tile_lookup"
-    if not hasattr(w, key):
-        setattr(w, key, tile_lookup_broadcast(spark, w.tiles()))
     return (docs_mod.assign_zone_counts(w.documents(), w.bidx,
-                                        getattr(w, key), w.fine)
+                                        w.tile_lookup(), w.fine)
             .select("country", "aez_code", "n_docs"))
 
 

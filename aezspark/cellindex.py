@@ -116,20 +116,6 @@ def kring(cell, k: int = 1):
     return (np.int64(r) << RES_SHIFT) | (yy << Y_SHIFT) | xx
 
 
-def cover_bbox(lat_min, lat_max, lon_min, lon_max, res: int):
-    """All cells at `res` intersecting a lat/lon bbox (no antimeridian split —
-    fixture worlds avoid it, SURVEY §7 'hard' list). Returns 1-D int64 array."""
-    px = res_px(res)
-    x0 = max(int(np.floor((lon_min + 180.0) / px)), 0)
-    x1 = min(int(np.floor((lon_max + 180.0) / px)), nx(res) - 1)
-    y0 = max(int(np.floor((90.0 - lat_max) / px)), 0)
-    y1 = min(int(np.floor((90.0 - lat_min) / px)), ny(res) - 1)
-    ys = np.arange(y0, y1 + 1, dtype=np.int64)
-    xs = np.arange(x0, x1 + 1, dtype=np.int64)
-    yy, xx = np.meshgrid(ys, xs, indexing="ij")
-    return ((np.int64(res) << RES_SHIFT) | (yy << Y_SHIFT) | xx).ravel()
-
-
 # ---- Spark Column variants (JVM-side, codegen-friendly) ----
 
 def encode_col(lat_col, lon_col, res: int):

@@ -104,15 +104,6 @@ def cover56(lccs: Column) -> Column:
             .when(lccs == 220, 'ice'))
 
 
-def soil_health(wk: Column) -> Column:
-    """P7 (populate_soil_health, process_imagery.py:127-134); NULL = none."""
-    return (F.when(wk == 1, 'prime')
-            .when(wk == 2, 'good')
-            .when(wk.isin(3, 4, 6), 'marginal')
-            .when(wk == 5, 'barren')
-            .when(wk == 7, 'water'))
-
-
 def workability4(wk: Column) -> Column:
     """P10 degraded-analysis variant (degraded_analysis.py:139-145) — a
     DIFFERENT mapping than P7, reproduced as-is."""

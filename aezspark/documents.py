@@ -81,8 +81,8 @@ def assign_documents(docs: DataFrame, index, index_res: int = 6,
     # project the kernel payload to what downstream consumers read
     # (doc_id, span_idx for identity; lat/lon for with_aez's tile key):
     # mapInPandas ships its ENTIRE input schema across the Arrow boundary
-    # both ways, so offset/index_cell would otherwise ride every batch and
-    # the SMJ shuffle for nothing (guide §4.1). index_cell remains
+    # both ways, so offset/index_cell would otherwise ride every batch for
+    # nothing (guide §4.1). index_cell remains
     # available via indexed_points for partition-keying consumers
     # (jobs/run_aez.py builds it there).
     return assign_points(pts, index, knn_fallback=knn_fallback,
@@ -92,11 +92,12 @@ def assign_documents(docs: DataFrame, index, index_res: int = 6,
 def assign_zone_counts(docs: DataFrame, index, tile_lookup,
                        fine: GridSpec) -> DataFrame:
     """The fully-fused flagship aggregation: span explode → geo parse → cell
-    index → ONE Arrow kernel doing PIP + kNN + tile lookup + partition-local
-    distinct-doc dedup + partial zonal count — match rows NEVER cross the
-    Arrow boundary; each partition emits only (country, aez_code, n) partials
-    and the single shuffle carries those few-thousand rows. Identical values
-    to doc_zone_counts(with_aez(assign_documents(...)))
+    index → ONE Arrow kernel doing PIP + kNN + shard-manifest tile lookup
+    (`tile_lookup`: World.tile_lookup() or joins.tile_shard_lookup) +
+    partition-local distinct-doc dedup + partial zonal count — match rows
+    NEVER cross the Arrow boundary; each partition emits only (country,
+    aez_code, n) partials and the single shuffle carries those few-thousand
+    rows. Identical values to doc_zone_counts(with_aez(assign_documents(...)))
     (tests/test_doc_zone_counts.py pins the parity).
 
     The kernel input is projected to exactly (doc_key, lat, lon) — span_idx /
@@ -123,26 +124,23 @@ def assign_zone_counts(docs: DataFrame, index, tile_lookup,
             .agg(F.sum("n_docs").alias("n_docs")))
 
 
-def with_aez(assigned: DataFrame, tiles_df: DataFrame, fine: GridSpec,
-             broadcast_tiles: bool = True) -> DataFrame:
-    """Enrich assigned points with the AEZ tile code of their fine-grid pixel.
-    Equi-join against the tiles table (raster→vector lookup); blank = 255
-    (C_TMR_BLNK, process_imagery.py:41).
+def with_aez(assigned: DataFrame, tiles_df: DataFrame, fine: GridSpec) -> DataFrame:
+    """Enrich assigned points with the AEZ tile code of their fine-grid pixel:
+    a broadcast equi-join against the tiles table; blank = 255 (C_TMR_BLNK,
+    process_imagery.py:41).
 
-    broadcast_tiles=True ships the 2-column (cell_id, aez_code) dim to every
-    executor and makes the enrichment a map-side join — no shuffle of the
-    (much larger) points side. Right whenever the tile dim fits in executor
-    memory; for planet-scale fine grids (8.4e9 cells at 300 m) set False and
-    pre-bucket both sides by cell_id so the join is a co-partitioned SMJ."""
+    The composed, row-level form: it keeps every input column, so it serves
+    the per-span outputs (the docs phase of jobs/run_aez.py, the assigned-row
+    queries) and is the reference the fused kernel is tested against. The
+    fused flagship (assign_zone_counts) uses the shard-manifest lookup
+    instead, which needs no tile dim in executor memory."""
     pts = assigned.withColumn(
         "fine_cell_id", lonlat_to_cell_col(fine, F.col("lat"), F.col("lon")))
     # blank (255) tiles need not be joined at all — the left-join coalesce
     # reproduces them; dropping them shrinks the dim to land tiles only
     t = (tiles_df.filter(F.col("aez_code") != 255)
          .select(F.col("cell_id").alias("fine_cell_id"), "aez_code"))
-    if broadcast_tiles:
-        t = F.broadcast(t)
-    return (pts.join(t, "fine_cell_id", "left")
+    return (pts.join(F.broadcast(t), "fine_cell_id", "left")
             .withColumn("aez_code", F.coalesce(F.col("aez_code"), F.lit(255))))
 
 

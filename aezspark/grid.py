@@ -142,17 +142,6 @@ def lonlat_to_cell_col(grid: GridSpec, lat_col, lon_col):
     return cell_id_col(grid.grid_id, y, x)
 
 
-def coarsen_cols(y_col, x_col, factor: int = 3):
-    """Spark Columns: fine (y,x) → containing coarse (y,x).
-
-    The integer-arithmetic form of the reference's ×3 np.repeat alignment
-    (process_imagery.py:255-267): fine pixel (yf,xf) ↔ coarse (yf//3, xf//3).
-    """
-    from pyspark.sql import functions as F
-
-    return (F.floor(y_col / factor).cast("int"), F.floor(x_col / factor).cast("int"))
-
-
 # Canonical grids for the fixture world. The coarse grid mimics the reference's
 # 0.5° test raster (Beck_KG_V1_present_0p5.tif, 720×360 px — test_geoutil.py:14
 # uses the 1km 43200×21600 grid; tests there scale the same formula). We default

@@ -11,7 +11,11 @@ downstream aggregation shuffle is salted explicitly (hot countries/cells).
 Two probe shapes:
   * assign_points: arbitrary (lat, lon) rows → many-to-many feature matches,
     with optional kNN nearest-zone fallback for points inside no polygon
-    (cell-ring candidate expansion, then exact min boundary distance).
+    (cell-ring candidate expansion, then exact min boundary distance), and
+    an optional AEZ tile lookup fused into the same kernel. The lookup has
+    one form: a broadcast shard manifest of the clustered tile sink
+    (tile_shard_lookup), whose memory is bounded by a per-worker LRU at any
+    grid size.
   * build_assignment: enumerate every grid cell inside each feature's bbox
     (driver emits only tiny per-feature bbox ranges; executors explode them
     with sequence()), PIP-filter the (cell, feature) pairs. This is the
@@ -28,10 +32,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .geometry import BoundaryIndex
-from .grid import GridSpec, km2_col, cell_id_col
+from .grid import GridSpec
 
 
 def broadcast_index(spark: SparkSession, index: BoundaryIndex):
@@ -193,45 +198,25 @@ def _match_arrays(idx: BoundaryIndex, lon, lat, knn_fallback: bool,
     return take, ppos, isknn
 
 
-def _tile_codes(tl, fine: GridSpec, lon, lat) -> np.ndarray:
-    """Fused raster→vector lookup: AEZ code of each point's fine-grid pixel;
-    blank/miss = 255 (C_TMR_BLNK, process_imagery.py:41). Two backends with
-    identical semantics: broadcast sorted (cell_id, code) arrays
-    (tile_lookup_broadcast — fast while the land-tile dim fits in memory),
-    or the shard-manifest lookup (TileShardLookup — bounded memory at any
-    grid size; the scale path)."""
-    if isinstance(tl, TileShardLookup):
-        return _tile_codes_sharded(tl, fine, lon, lat)
-    cells_sorted, codes = tl
-    if len(cells_sorted) == 0:
-        return np.full(len(lon), 255, dtype=np.int32)
-    fy, fx = fine.lonlat_to_yx(lon, lat)
-    fcell = fine.cell_id(fy, fx)
-    pos = np.searchsorted(cells_sorted, fcell)
-    pos_c = np.minimum(pos, len(cells_sorted) - 1)
-    hit = cells_sorted[pos_c] == fcell
-    return np.where(hit, codes[pos_c], 255).astype(np.int32)
-
-
 class TileShardLookup:
     """Shard MANIFEST of a clustered tile sink (io.write_tiles layout: one
-    cell-sorted parquet file per tile_id partition) for the fused kernel's
-    raster→vector lookup — the broadcast-free scale path (VERDICT r5 #1).
+    cell-sorted parquet file per tile_id partition): the fused kernel's
+    raster→vector lookup, and its only one.
 
-    tile_lookup_broadcast collects every non-blank tile cell to the driver:
-    at the reference's full 300 m grid (129600×64800 ≈ 2.4 B land cells,
-    data/copernicus/README.txt:3) that broadcast is tens of GB and the
-    fused plan dies. This object broadcasts only {tile_id → shard paths}
-    (a few MB at 90k tiles); each kernel batch computes its points'
-    tile_ids arithmetically and loads JUST those shards via pyarrow,
-    through a worker-process-persistent LRU (`max_cached_shards`, default
-    64 × ~1 MB/shard) — per-worker memory is bounded by the LRU, not the
-    grid, while per-executor I/O stays ≤ one read of the tile table (the
-    same bound a broadcast pays, minus the shards nobody's points touch).
-    Geo-clustered inputs drop shard touches to near-minimal; randomly
-    ordered inputs degrade gracefully to cache misses, never to OOM.
+    The broadcast carries just {tile_id → shard paths} (a few MB at 90k
+    tiles), never tile cells: at the reference's full 300 m grid
+    (129600×64800 ≈ 2.4 B land cells, data/copernicus/README.txt:3) a
+    driver-collected cell dim would be tens of GB. Each kernel batch computes
+    its points' tile_ids arithmetically and loads JUST those shards via
+    pyarrow, through a worker-process-persistent LRU (`max_cached_shards`,
+    default 64 × ~1 MB/shard) — per-worker memory is bounded by the LRU, not
+    the grid, while per-executor I/O stays ≤ one read of the tile table
+    (minus the shards nobody's points touch). A small world is just an LRU
+    large enough to hold every shard. Geo-clustered inputs drop shard
+    touches to near-minimal; randomly ordered inputs degrade gracefully to
+    cache misses, never to OOM (GeoBlocks' block-granular cell cache shape).
 
-    Lookup inside a shard is the same searchsorted over sorted cell ids —
+    Lookup inside a shard is a searchsorted over sorted cell ids —
     write_tiles sorts cells within each tile file exactly so this (and
     parquet row-group pruning) works. Blank (255) cells resolve either by
     shard hit (the sink stores them) or by missing-tile fallback, so a
@@ -268,8 +253,10 @@ def _load_shard(path: str, max_cached: int):
     return ent
 
 
-def _tile_codes_sharded(tsl: TileShardLookup, fine: GridSpec,
-                        lon, lat) -> np.ndarray:
+def _tile_codes(tsl: TileShardLookup, fine: GridSpec, lon, lat) -> np.ndarray:
+    """Fused raster→vector lookup: AEZ code of each point's fine-grid pixel
+    through the shard manifest; blank/miss = 255 (C_TMR_BLNK,
+    process_imagery.py:41)."""
     fy, fx = fine.lonlat_to_yx(lon, lat)
     fcell = fine.cell_id(fy, fx)
     tid = (fy // tsl.tile_px) * tsl.n_tiles_x + (fx // tsl.tile_px)
@@ -362,6 +349,24 @@ def _validate_shard_geometry(shard_paths: dict, fine: GridSpec,
             f"nx={fine.nx} — wrong tile_px or grid for this sink")
 
 
+def _check_tile_lookup(tile_lookup, fine: GridSpec | None) -> None:
+    """A wrong tile_lookup (e.g. a broadcast of bare arrays) would otherwise
+    fail only inside a Python worker, as an AttributeError."""
+    if not isinstance(tile_lookup, Broadcast):
+        got = type(tile_lookup).__name__
+    elif not isinstance(tile_lookup.value, TileShardLookup):
+        got = f"a Broadcast of {type(tile_lookup.value).__name__}"
+    else:
+        got = None
+    if got is not None:
+        raise ValueError(
+            f"assign_points: tile_lookup must be a Broadcast of "
+            f"TileShardLookup (World.tile_lookup() or joins.tile_shard_lookup), "
+            f"got {got}")
+    if fine is None:
+        raise ValueError("assign_points: tile_lookup requires the fine grid")
+
+
 def assign_points(points: DataFrame, index, lat_col: str = "lat",
                   lon_col: str = "lon", knn_fallback: bool = True,
                   many_to_many: bool = True, tile_lookup=None,
@@ -375,14 +380,12 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
     every input column and appends (feature_id, country, method) where method
     ∈ {'pip','knn'}; many-to-many preserves overlapping claims.
 
-    tile_lookup (+ fine): optional Broadcast of either (sorted_cell_ids,
-    codes) numpy arrays (tile_lookup_broadcast) or a TileShardLookup
-    manifest (tile_shard_lookup) — the AEZ raster→vector lookup fused into
-    this same kernel, adding an aez_code column with zero extra stages.
-    Arrays while the land-tile dim fits in memory; the shard manifest at
-    any grid size (per-worker LRU over the clustered sink); or leave None
-    and equi-join the tiles table (documents.with_aez SMJ — the only
-    variant that un-fuses the downstream dedup).
+    tile_lookup (+ fine): optional Broadcast of a TileShardLookup
+    (World.tile_lookup() or tile_shard_lookup) — the AEZ raster→vector
+    lookup fused into this same kernel, adding an aez_code column with zero
+    extra stages. Anything else is refused here, at plan-build time, not
+    inside a Python worker. Leave None and equi-join the tiles table
+    (documents.with_aez) for the composed form.
 
     project: input columns to keep in the output (default: all). Projecting
     INSIDE the kernel matters at scale — dropped columns never cross the
@@ -414,6 +417,7 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
 
     extra = list(POINT_ASSIGN_FIELDS)
     if tile_lookup is not None:
+        _check_tile_lookup(tile_lookup, fine)
         extra = extra + [T.StructField("aez_code", T.IntegerType())]
     keep = _validate_projection(points, project, [f.name for f in extra],
                                 "assign_points")
@@ -660,45 +664,6 @@ def knn_topk_join(points: DataFrame, index, k: int,
     return points.mapInPandas(kernel, schema)
 
 
-def tile_lookup_broadcast(spark: SparkSession, tiles_df: DataFrame):
-    """Collect the non-blank (cell_id → aez_code) tile dim as sorted numpy
-    arrays and broadcast it for the fused assign kernel. Blank (255) cells
-    are reconstructed by the lookup miss path, so only land tiles ship.
-
-    CEILING: the collect is driver-memory-bound — right up to ~10⁸ land
-    cells (a couple of GB). At the reference's full 300 m grid (~2.4 B land
-    cells) use tile_shard_lookup instead: same fused kernel, same answers,
-    memory bounded by a per-worker LRU over the clustered tile sink.
-
-    Fast path (r7): when `tiles_df` is a PLAIN parquet scan (a static tile
-    sink, the common case — the computed tile_codes plan still takes the
-    Spark route below), the dim is read driver-side with pyarrow instead
-    of a Spark collect job: same files, same filter/projection, measured
-    1.5 s → ~0.2 s of the flagship's timed first run. The broadcast that
-    ships to executors is identical either way (pinned by
-    tests/test_tile_lookup.py::test_broadcast_fast_path_parity)."""
-    plan_cls = (tiles_df._jdf.queryExecution().optimizedPlan()
-                .getClass().getSimpleName())
-    files = tiles_df.inputFiles() if plan_cls == "LogicalRelation" else []
-    if files and all(f.endswith(".parquet") for f in files):
-        import pyarrow.dataset as pads
-
-        paths = [f[len("file:"):] if f.startswith("file:") else f
-                 for f in files]
-        tbl = (pads.dataset(sorted(paths), format="parquet")
-               .to_table(columns=["cell_id", "aez_code"],
-                         filter=pads.field("aez_code") != 255))
-        cells = tbl.column("cell_id").to_numpy().astype(np.int64, copy=False)
-        codes = tbl.column("aez_code").to_numpy().astype(np.int32, copy=False)
-    else:
-        pdf = (tiles_df.filter(F.col("aez_code") != 255)
-               .select("cell_id", "aez_code").toPandas())
-        cells = pdf["cell_id"].to_numpy(dtype=np.int64)
-        codes = pdf["aez_code"].to_numpy(dtype=np.int32)
-    order = np.argsort(cells)
-    return spark.sparkContext.broadcast((cells[order], codes[order]))
-
-
 # ------------------------------------------------------------------ salting
 
 def salted_sum(df: DataFrame, keys: list[str], sums: dict[str, str],
@@ -716,30 +681,3 @@ def salted_sum(df: DataFrame, keys: list[str], sums: dict[str, str],
                .agg(*[F.sum(F.expr(expr)).alias(alias) for alias, expr in sums.items()]))
     return (partial.groupBy(*keys)
             .agg(*[F.sum(alias).alias(alias) for alias in sums]))
-
-
-def align_fine_to_coarse(df: DataFrame, y_col: str = "y", x_col: str = "x",
-                         factor: int = 3) -> DataFrame:
-    """×k resolution-align join key (P14): adds (yc, xc) = (y//k, x//k) —
-    the integer-arithmetic form of the reference's np.repeat upsample
-    (process_imagery.py:255-267)."""
-    return (df.withColumn("yc", F.floor(F.col(y_col) / factor).cast("int"))
-            .withColumn("xc", F.floor(F.col(x_col) / factor).cast("int")))
-
-
-def explode_coarse_to_fine(asg: DataFrame, coarse: GridSpec,
-                           fine: GridSpec) -> DataFrame:
-    """Coarse assignment → fine-pixel universe: each coarse cell becomes its
-    9 fine pixels carrying km²/9 (process_imagery.py:252-255). Narrow op
-    (explode), no shuffle."""
-    return (asg
-            .withColumn("km2", km2_col(coarse, F.col("y")) / F.lit(9.0))
-            .withColumn("dy", F.explode(F.sequence(F.lit(0), F.lit(2))))
-            .withColumn("dx", F.explode(F.sequence(F.lit(0), F.lit(2))))
-            .select(
-                "feature_id", "country", "km2",
-                F.col("y").alias("yc"), F.col("x").alias("xc"),
-                (F.col("y") * 3 + F.col("dy")).cast("int").alias("yf"),
-                (F.col("x") * 3 + F.col("dx")).cast("int").alias("xf"))
-            .withColumn("fine_cell_id",
-                        cell_id_col(fine.grid_id, F.col("yf"), F.col("xf"))))

@@ -4,18 +4,23 @@ One `World` per (spark, fx_dir): loads the cell tables, builds the broadcast
 boundary index and the cell→country assignment tables (the engine's analog of
 the reference's masks/ directory — computed once, reused by every zonal
 pipeline, like prepare_feature_masks.py's offline build feeding every
-process_map run).
+process_map run) — and, on first use, the tile sink's shard manifest
+that the fused flagship kernel looks AEZ codes up in.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import sources, zonal, tiles as tilesmod, regions as regionsmod
 from .fixtures import generate as genmod
-from .joins import build_assignment, broadcast_index
+from .io import write_tiles
+from .joins import build_assignment, broadcast_index, tile_shard_lookup
 from .geometry import BoundaryIndex
 
 
@@ -36,6 +41,7 @@ class World:
         self._regions_dim: DataFrame | None = None
         self._asg: DataFrame | None = None
         self._asg_fine: DataFrame | None = None
+        self._tile_lookup = None
         self._docs_cache: dict = {}
         self._cache = cache_assignment
 
@@ -153,6 +159,21 @@ class World:
             self.spark, self.cells("cells_kg"), self.cells("cells_slope"),
             self.cells("cells_wk"), self.cells("cells_lc"),
             self.coarse, self.fine)
+
+    def tile_lookup(self):
+        """Broadcast shard manifest (joins.tile_shard_lookup) over this
+        world's tile table: the fused kernel's raster→vector lookup.
+
+        Built on first call: self.tiles() is written through io.write_tiles
+        into a fresh temporary directory, removed at interpreter exit. A sink
+        left by an earlier run is never reused — fixture regeneration does
+        not clear extra directories, so it could be stale."""
+        if self._tile_lookup is None:
+            root = tempfile.mkdtemp(prefix="aezspark-tiles-")
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            sink = write_tiles(self.tiles(), os.path.join(root, "tiles"))
+            self._tile_lookup = tile_shard_lookup(self.spark, sink, self.fine)
+        return self._tile_lookup
 
     def documents(self) -> DataFrame:
         """The interleaved documents corpus, read through the snapshot-table

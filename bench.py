@@ -41,142 +41,26 @@ def bench_fx_dir(n_docs: int) -> str:
     return f"/root/repo/build/fixtures/bench_{n_docs}"
 
 
-def _tiles_cache(spark, w):
-    """The tiles table is a build-once static index (the reference's
-    results/AEZ.tif analog); materialize it next to the bench fixtures and
-    reuse across runs/corpora."""
-    import os
-
-    path = os.path.join(w.fx_dir, "tiles_cache.parquet")
-    if not os.path.isdir(path):
-        w.tiles().write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 _WORLD_CACHE: dict = {}
 
 
 def _flagship(spark, n_docs: int):
-    """documents/sec pipeline: interleaved docs → geo spans → cell index →
-    broadcast PIP (+kNN) → AEZ tile enrichment → zonal doc counts."""
+    """documents/sec pipeline: interleaved docs → geo spans → PIP (+kNN) →
+    AEZ tile lookup through the shard manifest → zonal doc counts. The
+    World and its tile lookup are untimed static-index setup (main builds
+    them before timing)."""
     from pyspark.sql import functions as F
 
     from aezspark import documents as docs_mod
-    from aezspark.pipelines import World
-    from aezspark.fixtures.generate import ensure_fixtures
 
-    fx = ensure_fixtures(bench_fx_dir(n_docs), coarse_px=0.5, n_docs=n_docs,
-                         with_expected=False)
-    from aezspark.joins import assign_points, tile_lookup_broadcast
-
-    if id(spark) not in _WORLD_CACHE:
-        w = World(spark, fx)
-        tl = tile_lookup_broadcast(spark, _tiles_cache(spark, w))
-        _WORLD_CACHE[id(spark)] = (w, tl)
-    w, tl = _WORLD_CACHE[id(spark)]
-    docs = w.documents()
+    w = _bench_world(spark, bench_fx_dir(n_docs))
     # fully-fused kernel path: PIP + kNN + tile lookup + partition-local
     # distinct-doc dedup + partial zonal count in ONE Arrow pass — match rows
     # never leave the kernel; the single shuffle carries only the
     # per-partition (country, aez, n) partials (round 2's 20M-row distinct
     # shuffle AND round 3's interim second kernel pass are both gone)
-    out = docs_mod.assign_zone_counts(docs, w.bidx, tl, w.fine)
-    return out.agg(F.sum("n_docs")).collect()[0][0]
-
-
-def ensure_bucketed_tiles(spark, n_docs: int) -> str:
-    """Build-once static index for the SMJ path: the non-blank tile dim as a
-    parquet table bucketed+sorted on the join key (the analog of writing
-    results/AEZ.tif once). Untimed setup — the catalog is in-memory, so each
-    session re-registers it, but the overwrite is cheap at bench scale."""
-    from pyspark.sql import functions as F
-
-    from aezspark.fixtures.generate import ensure_fixtures
-
-    table = f"bench_tiles_bucketed_{n_docs}"
-    if not spark.catalog.tableExists(table):
-        # the catalog is session-scoped but the warehouse dir persists:
-        # clear a stale location left by a previous session
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
-        fx = ensure_fixtures(bench_fx_dir(n_docs), coarse_px=0.5,
-                             n_docs=n_docs, with_expected=False)
-        w = _bench_world(spark, fx)
-        (_tiles_cache(spark, w)
-         .filter(F.col("aez_code") != 255)
-         .select(F.col("cell_id").alias("fine_cell_id"), "aez_code")
-         .write.bucketBy(32, "fine_cell_id").sortBy("fine_cell_id")
-         .mode("overwrite").format("parquet").saveAsTable(table))
-    return table
-
-
-def ensure_tiles_sink(spark, n_docs: int) -> str:
-    """Build-once clustered tile sink (io.write_tiles layout: one cell-sorted
-    file per tile_id partition) for the shard-lookup flagship variant —
-    untimed static-index setup, same terms as the broadcast/SMJ paths."""
-    from aezspark.fixtures.generate import ensure_fixtures
-    from aezspark.io import write_tiles
-
-    fx = ensure_fixtures(bench_fx_dir(n_docs), coarse_px=0.5, n_docs=n_docs,
-                         with_expected=False)
-    path = os.path.join(fx, "tiles_sink")
-    if not os.path.isdir(path):
-        w = _bench_world(spark, fx)
-        write_tiles(_tiles_cache(spark, w), path)
-    return path
-
-
-def _flagship_shard(spark, n_docs: int):
-    """The flagship fused pipeline with the SHARD-MANIFEST tile lookup
-    (VERDICT r5 #1): same fused emit='zone_counts' kernel, but the kernel
-    loads only the tile shards its points touch via the clustered-sink
-    manifest + a worker LRU — no driver-collected tile broadcast, so the
-    fast fused path survives the real 300 m grid where the broadcast dim
-    is tens of GB. Should sit within the A/A band of flagship_docs."""
-    from pyspark.sql import functions as F
-
-    from aezspark import documents as docs_mod
-    from aezspark.fixtures.generate import ensure_fixtures
-    from aezspark.joins import tile_shard_lookup
-
-    fx = ensure_fixtures(bench_fx_dir(n_docs), coarse_px=0.5, n_docs=n_docs,
-                         with_expected=False)
-    w = _bench_world(spark, fx)
-    key = ("shard_lookup", id(spark))
-    if key not in _WORLD_CACHE:
-        _WORLD_CACHE[key] = tile_shard_lookup(
-            spark, ensure_tiles_sink(spark, n_docs), w.fine)
-    sl = _WORLD_CACHE[key]
-    out = docs_mod.assign_zone_counts(w.documents(), w.bidx, sl, w.fine)
-    return out.agg(F.sum("n_docs")).collect()[0][0]
-
-
-def _flagship_smj(spark, n_docs: int):
-    """The flagship pipeline via the NON-broadcast tile path: tiles stored as
-    a bucketed table on the join key, points shuffled to it (co-partitioned
-    sort-merge join, no Exchange on the tile side). This is the plan shape
-    for planet-scale tile dims (~2.5e9 land cells at 300 m) that cannot ship
-    as a broadcast; the broadcast↔SMJ crossover is documented in
-    BENCH/BASELINE.md."""
-    from pyspark.sql import functions as F
-
-    from aezspark import documents as docs_mod
-    from aezspark.fixtures.generate import ensure_fixtures
-
-    fx = ensure_fixtures(bench_fx_dir(n_docs), coarse_px=0.5, n_docs=n_docs,
-                         with_expected=False)
-    # static-index setup (World build + bucketed table) is shared/untimed —
-    # the same terms as the broadcast path, whose World rides _WORLD_CACHE
-    w = _bench_world(spark, fx)
-    table = ensure_bucketed_tiles(spark, n_docs)
-    tiles = (spark.table(table)
-             .select(F.col("fine_cell_id").alias("cell_id"), "aez_code"))
-    assigned = docs_mod.assign_documents(w.documents(), w.bidx)
-    enriched = docs_mod.with_aez(assigned, tiles, w.fine, broadcast_tiles=False)
-    out = docs_mod.doc_zone_counts(enriched)
+    out = docs_mod.assign_zone_counts(w.documents(), w.bidx, w.tile_lookup(),
+                                      w.fine)
     return out.agg(F.sum("n_docs")).collect()[0][0]
 
 
@@ -194,7 +78,8 @@ def _flagship_stages(spark, n_docs: int) -> dict:
     from aezspark import documents as docs_mod
     from aezspark.joins import assign_points
 
-    w, tl = _WORLD_CACHE[id(spark)]
+    w = _bench_world(spark, bench_fx_dir(n_docs))
+    tl = w.tile_lookup()
     docs = w.documents()
     out = {}
     t0 = time.monotonic()
@@ -243,14 +128,8 @@ def _table_scan_planning(spark, n_docs: int, n_commits: int = 128) -> dict:
     fx = ensure_fixtures(bench_fx_dir(n_docs), coarse_px=0.5, n_docs=n_docs,
                          with_expected=False)
     w = _bench_world(spark, fx)
-    cached = _WORLD_CACHE.get(id(spark))
-    if cached is not None:
-        tl = cached[1]
-    else:
-        from aezspark.joins import tile_lookup_broadcast
-
-        tl = tile_lookup_broadcast(spark, _tiles_cache(spark, w))
-    pdf = (docs_mod.assign_zone_counts(w.documents(), w.bidx, tl, w.fine)
+    pdf = (docs_mod.assign_zone_counts(w.documents(), w.bidx, w.tile_lookup(),
+                                       w.fine)
            .toPandas().sort_values(["country", "aez_code"])
            .reset_index(drop=True))
     path = os.path.join(fx, "zc_table_bench")
@@ -300,12 +179,9 @@ def _bench_world(spark, fx):
     assignment are build-once static indexes (the reference's masks/
     directory analog), shared across bench queries exactly as a production
     session would share them."""
-    cached = _WORLD_CACHE.get(id(spark))
-    if cached is not None and cached[0].fx_dir == fx:
-        return cached[0]
     from aezspark.pipelines import World
 
-    key = ("world-only", id(spark), fx)
+    key = (id(spark), fx)
     if key not in _WORLD_CACHE:
         _WORLD_CACHE[key] = World(spark, fx)
     return _WORLD_CACHE[key]
@@ -568,8 +444,6 @@ def main():
 
     benches = {
         "flagship_docs": lambda: _flagship(spark, n_docs),
-        "flagship_docs_shard": lambda: _flagship_shard(spark, n_docs),
-        "flagship_docs_smj": lambda: _flagship_smj(spark, n_docs),
         "aez_by_country": lambda: _aez(spark, fx),
         "tile_classify": lambda: _tiles(spark, fx),
         "relational_core": lambda: _relational(spark, sf_dir),
@@ -580,10 +454,8 @@ def main():
     }
     if only:
         benches = {k: v for k, v in benches.items() if k in only}
-    if "flagship_docs_smj" in benches:
-        ensure_bucketed_tiles(spark, n_docs)  # untimed static-index setup
-    if "flagship_docs_shard" in benches:
-        ensure_tiles_sink(spark, n_docs)  # untimed static-index setup
+    if "flagship_docs" in benches:
+        _bench_world(spark, fx).tile_lookup()  # untimed static-index setup
 
     reps = int(os.environ.get("BENCH_REPS", "1"))
     queries = {}

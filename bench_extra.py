@@ -50,8 +50,6 @@ def _benches(spark):
     fx = bench.bench_fx_dir(N_DOCS)
     return {
         "flagship_docs": lambda: bench._flagship(spark, N_DOCS),
-        "flagship_docs_shard": lambda: bench._flagship_shard(spark, N_DOCS),
-        "flagship_docs_smj": lambda: bench._flagship_smj(spark, N_DOCS),
         "aez_by_country": lambda: bench._aez(spark, fx),
         "tile_classify": lambda: bench._tiles(spark, fx),
         "relational_core": lambda: bench._relational(spark, SF_DIR),
@@ -69,37 +67,14 @@ def _query_dfs(spark):
 
     import __spark_entry__ as E
     from aezspark import corpus, documents as docs_mod
-    from aezspark.joins import tile_lookup_broadcast, tile_shard_lookup
 
-    fx = bench.bench_fx_dir(N_DOCS)
-    w = bench._bench_world(spark, fx)
-    if id(spark) not in bench._WORLD_CACHE:
-        tl = tile_lookup_broadcast(spark, bench._tiles_cache(spark, w))
-        bench._WORLD_CACHE[id(spark)] = (w, tl)
-    tl = bench._WORLD_CACHE[id(spark)][1]
-    key = ("shard_lookup", id(spark))
-    if key not in bench._WORLD_CACHE:
-        bench._WORLD_CACHE[key] = tile_shard_lookup(
-            spark, bench.ensure_tiles_sink(spark, N_DOCS), w.fine)
-    sl = bench._WORLD_CACHE[key]
-    table = bench.ensure_bucketed_tiles(spark, N_DOCS)
-    tiles_b = (spark.table(table)
-               .select(F.col("fine_cell_id").alias("cell_id"), "aez_code"))
-
-    def smj_df():
-        assigned = docs_mod.assign_documents(w.documents(), w.bidx)
-        enriched = docs_mod.with_aez(assigned, tiles_b, w.fine,
-                                     broadcast_tiles=False)
-        return docs_mod.doc_zone_counts(enriched)
-
+    w = bench._bench_world(spark, bench.bench_fx_dir(N_DOCS))
+    tl = w.tile_lookup()
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     sh = corpus.simhash(docs, bits=64)
     return {
         "flagship_docs": lambda: docs_mod.assign_zone_counts(
             w.documents(), w.bidx, tl, w.fine),
-        "flagship_docs_shard": lambda: docs_mod.assign_zone_counts(
-            w.documents(), w.bidx, sl, w.fine),
-        "flagship_docs_smj": smj_df,
         "aez_by_country": lambda: w.aez(),
         "tile_classify": lambda: (w.tiles()
                                   .filter(F.col("aez_code") != 255)

@@ -56,27 +56,35 @@ def test_doc_local_precondition_is_load_bearing(spark):
 
 def test_fused_kernel_equals_composed(spark, world):
     """assign_points(emit='zone_counts') — dedup + partial count fused into
-    the assign kernel — must equal the composed pipeline exactly."""
-    from aezspark.joins import tile_lookup_broadcast
-
-    tl = tile_lookup_broadcast(spark, world.tiles())
-    fused = _as_dict(docs_mod.assign_zone_counts(world.documents(),
-                                                 world.bidx, tl, world.fine))
+    the assign kernel, tile codes from the shard-manifest lookup — must
+    equal the composed pipeline (broadcast with_aez join) exactly."""
+    fused = _as_dict(docs_mod.assign_zone_counts(
+        world.documents(), world.bidx, world.tile_lookup(), world.fine))
     composed = _as_dict(docs_mod.doc_zone_counts(_enriched(world)))
     assert fused == composed and sum(fused.values()) > 0
 
 
 def test_fused_kernel_validates_inputs(spark, world):
+    import numpy as np
     import pytest
-    from aezspark.joins import assign_points, tile_lookup_broadcast
+    from aezspark.joins import assign_points
 
     pts = docs_mod.indexed_points(world.documents())
     with pytest.raises(ValueError, match="requires tile_lookup"):
         assign_points(pts, world.bidx, emit="zone_counts")
-    tl = tile_lookup_broadcast(spark, world.tiles())
+    tl = world.tile_lookup()
     with pytest.raises(ValueError, match="doc_id.*must survive"):
         assign_points(pts, world.bidx, tile_lookup=tl, fine=world.fine,
                       project=["span_idx"], emit="zone_counts")
+    # anything but a Broadcast of TileShardLookup — an old (cells, codes)
+    # array broadcast, or an unbroadcast manifest — is refused at plan-build
+    # time, not as an AttributeError inside a Python worker
+    arrays = spark.sparkContext.broadcast(
+        (np.array([], dtype=np.int64), np.array([], dtype=np.int32)))
+    for bad in (arrays, tl.value):
+        with pytest.raises(ValueError, match="World.tile_lookup"):
+            assign_points(pts, world.bidx, tile_lookup=bad, fine=world.fine,
+                          emit="zone_counts")
 
 
 def test_doc_local_counts_null_keys_like_spark(spark):
@@ -98,9 +106,7 @@ def test_fused_kernel_compaction_budget_parity(spark, world, monkeypatch):
     """The incremental-compaction path (pending pairs > budget → in-place
     concat+dedup) must be output-identical to the unlimited path — budget=1
     forces a compaction after every batch."""
-    from aezspark.joins import tile_lookup_broadcast
-
-    tl = tile_lookup_broadcast(spark, world.tiles())
+    tl = world.tile_lookup()
     base = _as_dict(docs_mod.assign_zone_counts(world.documents(),
                                                 world.bidx, tl, world.fine))
     monkeypatch.setenv("AEZSPARK_ZC_DEDUP_BUDGET_ROWS", "1")
@@ -125,8 +131,7 @@ def test_fused_kernel_null_country_is_true_null(spark, world):
     idx = BoundaryIndex(polys)
     pts = spark.createDataFrame([(1, 4.0, 4.0), (2, 24.0, 4.0)],
                                 "doc_id LONG, lon DOUBLE, lat DOUBLE")
-    tl = spark.sparkContext.broadcast(
-        (np.array([], dtype=np.int64), np.array([], dtype=np.int32)))
+    tl = world.tile_lookup()
     fused = assign_points(pts, idx, tile_lookup=tl, fine=world.fine,
                           emit="zone_counts", project=["doc_id"])
     counts = {r.country: r.n_docs

@@ -9,7 +9,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from aezspark import documents as docs_mod, streaming as st
-from aezspark.joins import assign_points, tile_lookup_broadcast
+from aezspark.joins import assign_points
 
 
 def _write_drops(world, in_dir, n_drops=3):
@@ -38,7 +38,7 @@ def test_stream_matches_batch(world, tmp_path):
     cp_dir = str(tmp_path / "cp")
     _write_drops(world, in_dir)
 
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
     q = st.enrich_stream(st.stream_documents(world.spark, in_dir),
                          world.bidx, tl, world.fine, out_dir, cp_dir)
     q.start().awaitTermination()
@@ -60,7 +60,7 @@ def test_stream_resumes_from_checkpoint(world, tmp_path):
     cp_dir = str(tmp_path / "cp")
     _write_drops(world, in_dir, n_drops=2)
 
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
     st.enrich_stream(st.stream_documents(world.spark, in_dir),
                      world.bidx, tl, world.fine, out_dir, cp_dir).start().awaitTermination()
     n_first = len(os.listdir(out_dir))
@@ -86,7 +86,7 @@ def test_stream_to_snapshot_table_matches_batch(world, tmp_path):
     cp_dir = str(tmp_path / "cp")
     _write_drops(world, in_dir)
 
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
     st.enrich_stream_to_table(st.stream_documents(world.spark, in_dir),
                               world.bidx, tl, world.fine, tbl_dir,
                               cp_dir).start().awaitTermination()
@@ -111,7 +111,7 @@ def test_stream_table_sink_replay_is_idempotent(world, tmp_path):
     tbl_dir = str(tmp_path / "tbl")
     _write_drops(world, in_dir, n_drops=2)
 
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
 
     def run(cp):
         st.enrich_stream_to_table(
@@ -146,7 +146,7 @@ def test_downstream_incremental_consume_and_compact(world, tmp_path):
     tbl_dir = str(tmp_path / "tbl")
     _write_drops(world, in_dir)
 
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
     st.enrich_stream_to_table(
         st.stream_documents(world.spark, in_dir, max_files_per_trigger=1),
         world.bidx, tl, world.fine, tbl_dir,
@@ -215,7 +215,7 @@ def test_stream_table_sink_replay_safe_after_expiry(world, tmp_path):
     tbl_dir = str(tmp_path / "tbl")
     _write_drops(world, in_dir, n_drops=2)
 
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
 
     def run(cp):
         st.enrich_stream_to_table(
@@ -258,7 +258,7 @@ def test_stream_sink_schema_evolution_mid_stream(world, tmp_path, monkeypatch):
     tbl_dir = str(tmp_path / "tbl")
     cp = str(tmp_path / "cp")
     _write_drops(world, in_dir, n_drops=2)
-    tl = tile_lookup_broadcast(world.spark, world.tiles())
+    tl = world.tile_lookup()
 
     def run():
         st.enrich_stream_to_table(

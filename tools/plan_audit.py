@@ -73,10 +73,8 @@ def main():
         docs_mod.doc_zone_counts(docs_mod.with_aez(
             docs_mod.assign_documents(w.documents(), w.bidx),
             w.tiles(), w.fine), doc_local=True)))()
-    from aezspark.joins import tile_lookup_broadcast
-
     plans["flagship_fused"] = docs_mod.assign_zone_counts(
-        w.documents(), w.bidx, tile_lookup_broadcast(spark, w.tiles()), w.fine)
+        w.documents(), w.bidx, w.tile_lookup(), w.fine)
     plans["embedding_neardup"] = E.q_embedding_neardup(spark, sf)
     plans["within_distance"] = E.q_sp_within_distance(spark, sf)
     plans["simhash"] = E.q_simhash(spark, sf)
@@ -102,12 +100,6 @@ def main():
         .select(labels.node,
                 F.least(F.col("label"),
                         F.coalesce("nbr_label", "label")).alias("label")))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    plans["tile_enrich_smj"] = docs_mod.with_aez(
-        docs_mod.assign_documents(w.documents(), w.bidx),
-        w.tiles(), w.fine, broadcast_tiles=False)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
     rows = []
     sections = []
@@ -122,8 +114,7 @@ def main():
     md = f"""# PLANS — physical-plan audit (`.explain("formatted")` excerpts)
 
 Generated by `python tools/plan_audit.py` on the fixture world at local[8]
-(embedding_neardup at sf0.01; tile_enrich_smj with auto-broadcast disabled to
-show the at-scale shape). Per SURVEY §4 / the scale checklist: filters and
+(embedding_neardup at sf0.01). Per SURVEY §4 / the scale checklist: filters and
 projections must reach the parquet scan (PushedFilters / ReadSchema), small
 dims go broadcast, Python appears only as MapInPandas kernels, NO plan
 contains a cartesian, and every Exchange is accounted for.
@@ -136,15 +127,18 @@ contains a cartesian, and every Exchange is accounted for.
 
 Notes:
 - **flagship_docs** is the shape that matters at 10^12 docs: scan → narrow
-  projection → ONE MapInPandas kernel (PIP + kNN; the bench variant fuses the
-  tile lookup too) → tile join → partition-local distinct-doc dedup (round 3:
-  doc_local — docs never cross partitions in this chain, so NO doc_id enters
-  any Exchange; only (country, aez, n) partials shuffle) → zone rollup. The
-  polygon index and tile array ride SparkContext broadcasts.
+  projection → ONE MapInPandas kernel (PIP + kNN) → broadcast tile join
+  (with_aez, the composed form) → partition-local distinct-doc dedup
+  (round 3: doc_local — docs never cross partitions in this chain, so NO
+  doc_id enters any Exchange; only (country, aez, n) partials shuffle) →
+  zone rollup. The polygon index rides a SparkContext broadcast.
 - **flagship_fused** (round 3, the benched production path): the dedup and
   partial count run INSIDE the assign kernel (`emit='zone_counts'`) — one
   MapInPandas, one Exchange carrying only per-partition (country, aez, n)
-  partials; join output rows never cross the Arrow boundary at all. Round 4:
+  partials; join output rows never cross the Arrow boundary at all. Its
+  tile codes come from the broadcast shard manifest (`World.tile_lookup()`:
+  per-worker LRU over the clustered tile sink), so no tile dim is
+  broadcast. Round 4:
   the kernel input ships `xxhash64(doc_id)` (int64, computed JVM-side —
   visible as the xxhash64 projection feeding MapInPandas) instead of the
   doc_id string, and the in-kernel dedup is a pandas hash-dedup
@@ -170,11 +164,6 @@ Notes:
 - **fao_slope_assembly** (round 4): 8-file tagged union scan → ONE
   conditional-aggregate pivot on the pixel key — a single Exchange, no
   8-way self-join (the S6 shape for the FAO band-assembly script).
-- **tile_enrich_smj** (round 2): the non-broadcast tile path as it plans at
-  scale — SortMergeJoin with the tiles side bucketed (`Bucketed: true`, no
-  Exchange on that side when read from the bucketed bench table; the audit
-  here uses the unbucketed fixture table, so it shows the generic
-  shuffle-both-sides form).
 - **tiles** (round 2): the AEZ last-writer-wins projection is a nested CASE
   (was greatest(29 whens), which overflowed Janino's 64 KB method limit and
   silently fell back to interpreted eval); the whole classify now stays
