@@ -23,7 +23,10 @@ from __future__ import annotations
 import os
 from functools import lru_cache
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources import local_dim
 
 _DATA_DIR = os.path.join(os.path.dirname(__file__), "data")
 
@@ -65,12 +68,14 @@ def region_mapping() -> dict[str, list[str]]:
 def admin_dim(spark: SparkSession) -> DataFrame:
     """(admin, canonical) normalization dim; canonical is null for dropped
     features. Tiny — always broadcast."""
-    rows = [(a, c) for a, c in adminmap().items()]
-    return spark.createDataFrame(rows, "admin STRING, canonical STRING")
+    rows = list(adminmap().items())
+    return local_dim(spark, pd.DataFrame(rows, columns=["admin", "canonical"]),
+                     "admin STRING, canonical STRING")
 
 
 def region_memberships_dim(spark: SparkSession) -> DataFrame:
     """(country, region) exploded membership dim — the production input to
     regions.rollup. Tiny — always broadcast."""
     rows = [(c, r) for c, regions in region_mapping().items() for r in regions]
-    return spark.createDataFrame(rows, "country STRING, region STRING")
+    return local_dim(spark, pd.DataFrame(rows, columns=["country", "region"]),
+                     "country STRING, region STRING")

@@ -27,9 +27,11 @@ import os
 import time
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import __version__
+from .sources import local_dim
 
 
 class PartitionCheckpointer:
@@ -56,7 +58,8 @@ class PartitionCheckpointer:
         if not os.path.exists(self.manifest_path):
             keys = (df.select(key_col).distinct().orderBy(key_col)
                     .toPandas()[key_col].tolist())
-            self.spark.createDataFrame([(k,) for k in keys], f"{key_col} BIGINT") \
+            local_dim(self.spark, pd.DataFrame({key_col: keys}),
+                      f"{key_col} BIGINT") \
                 .coalesce(1).write.mode("overwrite").parquet(self.manifest_path)
         pdf = self.spark.read.parquet(self.manifest_path).toPandas()
         return sorted(pdf[key_col].tolist())
@@ -123,8 +126,9 @@ class PartitionCheckpointer:
                 ledger_rows = [(int(k), int(observed[f"k{j}"]),
                                 float(wall_ms / len(batch)), batch_id)
                                for j, k in enumerate(batch)]
-                (self.spark.createDataFrame(
-                    ledger_rows,
+                ledger_cols = ["key", "rows_out", "wall_ms", "batch_id"]
+                (local_dim(
+                    self.spark, pd.DataFrame(ledger_rows, columns=ledger_cols),
                     "key BIGINT, rows_out BIGINT, wall_ms DOUBLE, batch_id STRING")
                  .coalesce(1).write.mode("append").parquet(self.ledger_dir))
                 n_batches += 1

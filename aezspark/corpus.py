@@ -332,7 +332,7 @@ def simhash(docs: DataFrame, text_col: str = "text",
     # spread guard is new. Both alternates remain parity-pinned in
     # tests/test_lsh_fused.py.
     # 4 MB spread floor: below it the extra Exchange costs more than the
-    # serialized token-md5 work it parallelizes (measured at the 0.6 MB
+    # serialized token-md5 work it spreads over tasks (measured at the 0.6 MB
     # sf0.1 corpus); above it an unsplittable scan carries seconds of
     # single-task digest work. Work-per-byte here is ~6× lower than the
     # shingle path, hence the higher floor than char_shingles' 256 KB.
@@ -361,11 +361,6 @@ def simhash(docs: DataFrame, text_col: str = "text",
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def simhash16(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """16-bit SimHash (the pre-round-5 surface): simhash(bits=16)."""
-    return simhash(docs, text_col, bits=16)
-
-
 def simhash_pairs(sh: DataFrame, max_hamming: int = 3,
                   bits: int = 64, max_bucket_size: int | None = 64,
                   observation=None) -> DataFrame:
@@ -381,7 +376,7 @@ def simhash_pairs(sh: DataFrame, max_hamming: int = 3,
     collisions.
 
     `bits` must be the width of the fingerprints actually in `sh`
-    (ADVICE r5): declaring 64 over simhash16 output leaves 3 of the 4
+    (ADVICE r5): declaring 64 over 16-bit fingerprints leaves 3 of the 4
     pigeonhole blocks all-zero for EVERY document — every doc collides in
     those bands and the self-join goes quadratic over the corpus while
     staying "correct". The plan therefore asserts each fingerprint fits

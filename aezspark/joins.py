@@ -17,10 +17,11 @@ Two probe shapes:
     (tile_shard_lookup), whose memory is bounded by a per-worker LRU at any
     grid size.
   * build_assignment: enumerate every grid cell inside each feature's bbox
-    (driver emits only tiny per-feature bbox ranges; executors explode them
-    with sequence()), PIP-filter the (cell, feature) pairs. This is the
-    distributed equivalent of the reference's whole mask build
-    (prepare_feature_masks.py:66-91) as one Spark job, and its output —
+    (driver emits only per-feature bbox row-range chunks, as one Arrow local
+    relation; executors explode them with sequence()), PIP-filter the
+    (cell, feature) pairs. This is the distributed equivalent of the
+    reference's whole mask build (prepare_feature_masks.py:66-91) as one
+    Spark job, and its output —
     assignment(cell_id, y, x, feature_id, country) — is the moral equivalent
     of the masks/ directory: a reusable CTAS index for all zonal pipelines.
 """
@@ -37,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .geometry import BoundaryIndex
 from .grid import GridSpec
+from .sources import local_dim
 
 
 def broadcast_index(spark: SparkSession, index: BoundaryIndex):
@@ -51,19 +53,17 @@ def build_assignment(spark: SparkSession, grid: GridSpec,
     features both keep the cell — the double-counting semantics of per-country
     masks, SURVEY §7).
 
-    Plan shape: tiny driver-side dim of per-feature bbox row-ranges →
-    explode(sequence) twice (row, col) → repartition for even work →
-    mapInPandas PIP filter. No driver loops over cells; scales with
+    Plan shape: a local_dim of per-feature bbox row-range chunks (a
+    LocalTableScan) → explode(sequence) twice (row, col) → mapInPandas PIP
+    filter, with no Exchange. No driver loops over cells; scales with
     Σ bbox areas, not features × grid.
     """
-    # Work distribution WITHOUT an Exchange (r7): the driver already emits
-    # per-feature bbox ranges; splitting each feature's y-range into
-    # bbox-area-proportional chunks (targeting ~3 chunks/core overall)
-    # makes the tiny dim itself the parallelism unit — createDataFrame
-    # spreads its rows across defaultParallelism slices, so the explode +
-    # PIP kernel stage starts balanced with no repartition (the previous
-    # plan paid a (poly_pos, y) hash Exchange for the same balance).
-    # Driver cost stays O(features × chunks), never O(cells).
+    # Work distribution WITHOUT an Exchange: each feature's y-range is split
+    # into bbox-area-proportional chunks (~3 chunks/core overall), so a large
+    # feature spreads over several tasks. The chunk rows are one local_dim;
+    # its LocalTableScan slices them contiguously over the default
+    # parallelism, which starts the explode + PIP kernel stage balanced with
+    # no repartition. Driver cost stays O(features × chunks), never O(cells).
     bboxes = []
     for pos, poly in enumerate(index.polygons):
         lat_min, lat_max, lon_min, lon_max = poly.bbox
@@ -84,22 +84,10 @@ def build_assignment(spark: SparkSession, grid: GridSpec,
             ya = y0 + int(k * span)
             yb = y0 + int((k + 1) * span) - 1 if k < n_chunks - 1 else y1
             rows.append((pos, fid, country, ya, yb, x0, x1))
-    # JVM-literal dim: range over chunk ids + element_at on literal arrays,
-    # NOT createDataFrame — a parallelized python list is evaluated by the
-    # pickle-runner Python worker pool, and on a cold pool every one of
-    # these tasks serially pays the worker import chain (~3.5 s/worker
-    # measured) before the PIP kernel even starts. Range→project is pure
-    # codegen; one chunk per range partition keeps the kernel balanced.
-    def arr(i, typ):
-        return F.array(*[F.lit(r[i]) for r in rows]).getItem(
-            F.col("id").cast("int")).cast(typ)
-
-    dim = (spark.range(0, len(rows), 1, len(rows))
-           .select(arr(0, "int").alias("poly_pos"),
-                   arr(1, "int").alias("feature_id"),
-                   arr(2, "string").alias("country"),
-                   arr(3, "int").alias("y0"), arr(4, "int").alias("y1"),
-                   arr(5, "int").alias("x0"), arr(6, "int").alias("x1")))
+    cols = ["poly_pos", "feature_id", "country", "y0", "y1", "x0", "x1"]
+    dim = local_dim(spark, pd.DataFrame(rows, columns=cols),
+                    "poly_pos INT, feature_id INT, country STRING, "
+                    "y0 INT, y1 INT, x0 INT, x1 INT")
 
     cand = (dim
             .withColumn("y", F.explode(F.sequence("y0", "y1")))

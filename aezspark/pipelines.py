@@ -30,14 +30,13 @@ class World:
         self.spark = spark
         self.fx_dir = fx_dir or genmod.ensure_fixtures()
         self.coarse, self.fine = genmod.load_grids(self.fx_dir)
-        # boundaries DF: lazily constructed (it backs the countries/regions
-        # dims); the broadcast index itself is built from a driver-side
-        # pyarrow read — same rows, no Spark actions in World construction
-        # (which sits inside the flagship's timed first run)
+        # boundaries DF: lazily constructed (it backs the regions dim); the
+        # broadcast index itself is built from a driver-side pyarrow read —
+        # same rows, no Spark actions in World construction (which sits
+        # inside the flagship's timed first run)
         self._boundaries: DataFrame | None = None
         self.index = sources.boundary_index_from_path(self.fx_dir)
         self.bidx = broadcast_index(spark, self.index)
-        self._countries: DataFrame | None = None
         self._regions_dim: DataFrame | None = None
         self._asg: DataFrame | None = None
         self._asg_fine: DataFrame | None = None
@@ -55,29 +54,11 @@ class World:
         return self._boundaries
 
     @property
-    def countries_list(self) -> list:
-        """Driver-side distinct-country list (same normalization as
-        countries_dim) — the zonal seed grids are built from this literal,
-        skipping the crossJoin subtree entirely."""
+    def countries_list(self) -> list[str]:
+        """Driver-side distinct-country list from the boundary index — the
+        same post-normalization set as sources.countries_dim, with no
+        boundaries scan. zonal.seed_zeros builds its seeding grid from it."""
         return sorted({p.country for p in self.index.polygons})
-
-    @property
-    def countries(self) -> DataFrame:
-        if self._countries is None:
-            # LocalRelation from the driver-side boundary index: the same
-            # post-normalization distinct-country set countries_dim computes
-            # (boundaries_to_polygons and countries_dim apply the identical
-            # null-country drop), without a boundaries scan + 2-phase
-            # distinct in front of every zonal query's seed_zeros
-            vals = sorted({p.country for p in self.index.polygons})
-            # coalesce(1): createDataFrame parallelizes even 16 rows over
-            # defaultParallelism slices, and a multi-slice side multiplies
-            # the seed_zeros crossJoin's partition count (measured: the
-            # 2.3k-row seeding grid exploded into ~1000 near-empty tasks,
-            # +12 s on aez)
-            self._countries = self.spark.createDataFrame(
-                [(c,) for c in vals], "country STRING").coalesce(1)
-        return self._countries
 
     @property
     def regions_dim(self) -> DataFrame:

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .zonal import seed_grid
+
 REGIONS = ["OECD90", "Eastern Europe", "Asia (Sans Japan)", "Middle East and Africa",
            "Latin America", "China", "India", "EU", "USA"]
 
@@ -23,21 +25,12 @@ def rollup(long_df: DataFrame, regions_dim: DataFrame,
     Countries with region=None simply don't join (reference skips them,
     extract_country_data.py:260-261). The dim is tiny → broadcast join.
     """
-    spark = long_df.sparkSession
     agg = (long_df
            .join(F.broadcast(regions_dim), "country")
            .groupBy("region", "class")
            .agg(F.sum("km2").alias("km2")))
-    reg = spark.createDataFrame([(r,) for r in REGIONS], "region STRING")
-    cls = spark.createDataFrame([(c,) for c in classes], "class STRING")
-    # full outer + raise_error: a membership row naming a region outside the
-    # fixed 9 must fail loudly (the reference's df_region.loc[list] raises
-    # KeyError on an unknown region), not silently vanish from the rollup
-    joined = (reg.crossJoin(cls).withColumn("_expected", F.lit(True))
-              .join(agg, ["region", "class"], "full_outer"))
-    km2 = (F.when(F.col("_expected").isNotNull(),
-                  F.coalesce(F.col("km2"), F.lit(0.0)))
-           .otherwise(F.raise_error(F.concat(
-               F.lit("rollup: region outside the fixed region list: "),
-               F.col("region"))).cast("double")))
-    return joined.select("region", "class", km2.alias("km2"))
+    # a membership row naming a region outside the fixed 9 must fail loudly
+    # (the reference's df_region.loc[list] raises KeyError on an unknown
+    # region), not silently vanish from the rollup
+    return seed_grid(agg, "region", REGIONS, classes,
+                     "rollup: region outside the fixed region list: ")

@@ -93,14 +93,12 @@ _WARMED: set = set()
 
 
 def _warm_worker_pools(spark, parallelism: int) -> None:
-    """Pre-fork BOTH Python worker pools and run the engine's kernel import
-    chain in them, once per session (guide §4.5 — heavyweight init once):
-    the first Arrow-kernel stage otherwise pays ~3.5 s PER WORKER importing
-    aezspark/pyarrow/pandas inside the timed query (measured: med task
-    init 3.7 s → 0.17 s with this warmup), and the pickle-runner pool
-    (python-list createDataFrame evals) is a separate pool the usual
-    pandas warmup never touches. ~3 s at session creation, outside any
-    timed region. AEZSPARK_WARM_WORKERS=0 disables."""
+    """Pre-fork the Arrow Python worker pool and run the engine's kernel
+    import chain in it, once per session (guide §4.5 — heavyweight init
+    once): the first Arrow-kernel stage otherwise pays ~3.5 s PER WORKER
+    importing aezspark/pyarrow/pandas inside the timed query (measured: med
+    task init 3.7 s → 0.17 s with this warmup). ~3 s at session creation,
+    outside any timed region. AEZSPARK_WARM_WORKERS=0 disables."""
     key = id(spark)
     if key in _WARMED:
         return
@@ -117,7 +115,5 @@ def _warm_worker_pools(spark, parallelism: int) -> None:
 
         n = max(parallelism * 2, 2)
         (spark.range(0, n, 1, n).mapInPandas(_warm, "id long").count())
-        # pickle-runner pool (plain RDD evals)
-        spark.sparkContext.parallelize(range(n), n).map(lambda x: x).count()
     except Exception:
         pass  # warmup must never break session creation

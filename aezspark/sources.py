@@ -12,9 +12,23 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .geometry import BoundaryIndex, Polygon
+
+
+def local_dim(spark: SparkSession, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """The one way to build a small driver-side dim: `pdf` (columns named as
+    in the DDL `schema`) shipped to the JVM as Arrow batches. The plan leaf
+    is a LocalTableScan, evaluated in the JVM alone — no Python worker, and
+    no per-row literal expressions for analysis and codegen to carry. Its
+    partitioning is LocalTableScan's own: min(rows, default parallelism)
+    contiguous row slices. Going through a pyarrow Table keeps the Arrow
+    path whatever the session's Arrow conf, and for an empty `pdf` too."""
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False),
+                                 schema)
 
 
 def read_cells(spark: SparkSession, fx_dir: str, name: str) -> DataFrame:

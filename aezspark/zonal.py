@@ -12,11 +12,13 @@ reference's wide CSV layout happens in io.py at the sink.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F
 
 from . import decoders as D
 from .grid import GridSpec, km2_col, cell_id_col
 from .joins import salted_sum
+from .sources import local_dim
 
 AEZ_CLASSES = [f"{t}|AEZ{n}" for t in D.TMR_ORDER for n in range(1, 30)]
 DEG56_CLASSES = [f"{c}:{s}:{d}" for c in ['forest', 'cropland', 'grassland', 'bare',
@@ -25,60 +27,45 @@ DEG56_CLASSES = [f"{c}:{s}:{d}" for c in ['forest', 'cropland', 'grassland', 'ba
                  for s in ['good', 'marginal', 'poor', 'verypoor']]
 
 
-def seed_zeros(agg: DataFrame, countries, classes: list[str]) -> DataFrame:
+def seed_grid(agg: DataFrame, key: str, keys: list[str], classes: list[str],
+              err: str) -> DataFrame:
+    """Pre-seed every (key, class) combination of the (key, class, km2)
+    aggregate `agg` with 0.0. The keys × classes grid is one local_dim —
+    a LocalTableScan, no crossJoin.
+
+    A full outer join makes aggregated labels OUTSIDE the grid fail loudly
+    (raise_error, message `err` + the offending key / class) instead of
+    silently shrinking the totals."""
+    grid_dim = local_dim(
+        agg.sparkSession,
+        pd.DataFrame({key: [k for k in keys for _ in classes],
+                      "class": list(classes) * len(keys)}),
+        f"{key} STRING, class STRING")
+    joined = (grid_dim.withColumn("_expected", F.lit(True))
+              .join(agg, [key, "class"], "full_outer"))
+    km2 = (F.when(F.col("_expected").isNotNull(),
+                  F.coalesce(F.col("km2"), F.lit(0.0)))
+           .otherwise(F.raise_error(F.concat(
+               F.lit(err), F.col(key), F.lit(" / "), F.col("class")))
+               .cast("double")))
+    return joined.select(key, "class", km2.alias("km2"))
+
+
+def seed_zeros(agg: DataFrame, countries: list[str],
+               classes: list[str]) -> DataFrame:
     """Pre-seed every (country, class) combination with 0.0 — the reference
     inserts an all-zero row per country on first sight and keeps every class
     column (extract_country_data.py:216,227-228), so zero cells must exist.
 
-    A full outer join makes aggregated labels OUTSIDE the expected class/
-    country set fail loudly (raise_error) instead of silently shrinking the
-    totals — the reference would KeyError on an unexpected label
-    (df.loc[admin, typ] raises), so a decoder regression must not pass
-    parity by dropping rows."""
-    spark = agg.sparkSession
-    if isinstance(countries, (list, tuple)):
-        # driver-known country set (World passes the boundary-index list):
-        # the whole seeding grid is ONE JVM-literal relation — spark.range
-        # + element_at over literal arrays, NOT createDataFrame, because a
-        # parallelized python list needs a Python-RDD eval task whose
-        # worker comes from the pickle-runner pool; on a cold pool that
-        # single task serially pays the whole worker import chain
-        # (measured 5.2 s on the critical path of the first zonal query —
-        # the arrow-pool warmup does not warm it). Range→project is pure
-        # codegen: no Python worker, no crossJoin subtree, one partition.
-        n_cls = len(classes)
-        country_arr = F.array(*[F.lit(c) for c in countries])
-        class_arr = F.array(*[F.lit(c) for c in classes])
-        grid_dim = (spark.range(0, len(countries) * n_cls, 1, 1)
-                    .select(
-                        F.element_at(country_arr,
-                                     (F.col("id") / n_cls).cast("int") + 1)
-                        .alias("country"),
-                        F.element_at(class_arr,
-                                     (F.col("id") % n_cls).cast("int") + 1)
-                        .alias("class"))
-                    .withColumn("_expected", F.lit(True)))
-    else:
-        # coalesce(1) both tiny sides: a crossJoin's output partitioning
-        # multiplies its inputs' partition counts, and createDataFrame
-        # spreads even a 145-row literal list over defaultParallelism
-        # slices — the seeding grid is a few thousand rows and belongs in
-        # one task
-        cls = spark.createDataFrame([(c,) for c in classes],
-                                    "class STRING").coalesce(1)
-        grid_dim = (countries.coalesce(1).crossJoin(cls)
-                    .withColumn("_expected", F.lit(True)))
-    joined = grid_dim.join(agg, ["country", "class"], "full_outer")
-    km2 = (F.when(F.col("_expected").isNotNull(),
-                  F.coalesce(F.col("km2"), F.lit(0.0)))
-           .otherwise(F.raise_error(F.concat(
-               F.lit("seed_zeros: aggregated label outside the expected "
-                     "(country, class) grid: "),
-               F.col("country"), F.lit(" / "), F.col("class"))).cast("double")))
-    return joined.select("country", "class", km2.alias("km2"))
+    A label outside the grid fails loudly: the reference would KeyError on
+    an unexpected label (df.loc[admin, typ] raises), so a decoder
+    regression must not pass parity by dropping rows."""
+    return seed_grid(agg, "country", countries, classes,
+                     "seed_zeros: aggregated label outside the expected "
+                     "(country, class) grid: ")
 
 
-def _finish(df: DataFrame, countries: DataFrame, classes: list[str],
+def _finish(df: DataFrame, countries: list[str], classes: list[str],
             salt_buckets: int = 16) -> DataFrame:
     agg = salted_sum(df, ["country", "class"], {"km2": "km2w"},
                      buckets=salt_buckets)
@@ -86,7 +73,7 @@ def _finish(df: DataFrame, countries: DataFrame, classes: list[str],
 
 
 def zonal_kg(asg: DataFrame, cells_kg: DataFrame, coarse: GridSpec,
-             countries: DataFrame) -> DataFrame:
+             countries: list[str]) -> DataFrame:
     """Köppen-Geiger zonal histogram (KGlookup.km2,
     extract_country_data.py:59-71)."""
     df = (asg.join(cells_kg.select("cell_id", "kg_class"), "cell_id")
@@ -97,7 +84,7 @@ def zonal_kg(asg: DataFrame, cells_kg: DataFrame, coarse: GridSpec,
 
 
 def zonal_lc(asg_fine: DataFrame, cells_lc: DataFrame, fine: GridSpec,
-             countries: DataFrame) -> DataFrame:
+             countries: list[str]) -> DataFrame:
     """Land-cover zonal histogram on the fine grid (ESA_LC_lookup runs on the
     333m masks, extract_country_data.py:98-109)."""
     df = (asg_fine.join(cells_lc.select("cell_id", "lccs"), "cell_id")
@@ -108,7 +95,7 @@ def zonal_lc(asg_fine: DataFrame, cells_lc: DataFrame, fine: GridSpec,
 
 
 def zonal_slope(asg: DataFrame, cells_slope: DataFrame, coarse: GridSpec,
-                countries: DataFrame) -> DataFrame:
+                countries: list[str]) -> DataFrame:
     """Geomorpho90m slope: 8 fraction bands, per-band NoData 127
     (GeomorphoLookup.km2, extract_country_data.py:127-133). The 8-band wide
     row is melted band→rows with a single explode."""
@@ -127,7 +114,7 @@ def zonal_slope(asg: DataFrame, cells_slope: DataFrame, coarse: GridSpec,
 
 
 def zonal_slope_fao(asg: DataFrame, slope_fao: DataFrame, coarse: GridSpec,
-                    countries: DataFrame) -> DataFrame:
+                    countries: list[str]) -> DataFrame:
     """FAO slope variant: 8 separate files unioned with a band column,
     NoData 255 (FaoSlopeLookup.km2, extract_country_data.py:152-158)."""
     fao_arr = F.array(*[F.lit(s) for s in D.FAO_SLOPES])
@@ -140,7 +127,7 @@ def zonal_slope_fao(asg: DataFrame, slope_fao: DataFrame, coarse: GridSpec,
 
 
 def zonal_wk(asg: DataFrame, cells_wk: DataFrame, coarse: GridSpec,
-             countries: DataFrame) -> DataFrame:
+             countries: list[str]) -> DataFrame:
     """Workability zonal histogram: classes 1..7 kept as-is, 0/255 skipped
     (WorkabilityLookup.km2, extract_country_data.py:173-183)."""
     df = (asg.join(cells_wk.select("cell_id", "wk_class"), "cell_id")
@@ -151,7 +138,7 @@ def zonal_wk(asg: DataFrame, cells_wk: DataFrame, coarse: GridSpec,
 
 
 def zonal_dg(asg: DataFrame, cells_lpd: DataFrame, coarse: GridSpec,
-             countries: DataFrame) -> DataFrame:
+             countries: list[str]) -> DataFrame:
     """Binary degraded-land histogram (DegradedLandLookup.km2,
     extract_country_data.py:193-202). The universe is the whole mask, so this
     LEFT-joins from the assignment: absent LPD rows read as raster fill 0 →
@@ -241,7 +228,7 @@ def _aez_weight_exprs(packed, soili, slope: dict):
 
 def aez_long(asg: DataFrame, cells_kg: DataFrame, cells_slope: DataFrame,
              cells_wk: DataFrame, cells_lc: DataFrame, coarse: GridSpec,
-             fine: GridSpec, countries: DataFrame) -> DataFrame:
+             fine: GridSpec, countries: list[str]) -> DataFrame:
     """AEZ allocation per country (produce_CSV, process_imagery.py:201-281):
     multi-raster align join → class algebra → one grouped aggregation.
 
@@ -310,7 +297,7 @@ def aez_long(asg: DataFrame, cells_kg: DataFrame, cells_slope: DataFrame,
 
 def degraded56_long(asg: DataFrame, cells_lc: DataFrame, cells_lpd: DataFrame,
                     cells_wk: DataFrame, coarse: GridSpec, fine: GridSpec,
-                    countries: DataFrame) -> DataFrame:
+                    countries: list[str]) -> DataFrame:
     """56-way cover × degradation × workability cross-class
     (degraded_analysis.py:35-166). Single narrow groupBy over the coarse
     universe — the reference's triple loop is just a composite group key,

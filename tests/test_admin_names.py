@@ -111,8 +111,7 @@ def test_zonal_rollup_with_real_admin_names(spark):
          for _, _, y, x, _, _ in feats],
         "cell_id LONG, y INT, x INT, wk_class INT")
 
-    countries = spark.createDataFrame(
-        sorted({(p.country,) for p in polys}), "country STRING")
+    countries = sorted({p.country for p in polys})
     long_df = zonal_wk(asg, cells, grid, countries)
 
     # expected: many-to-one features SUM into their canonical country

@@ -163,7 +163,7 @@ def test_simhash_pairs_refuses_width_mismatch(spark):
                        match="wider than declared"):
         corpus.simhash_pairs(wide, bits=16).count()
 
-    narrow = corpus.simhash16(docs)
+    narrow = corpus.simhash(docs, bits=16)
     got = {(r.doc_a, r.doc_b, r.hamming) for r in
            corpus.simhash_pairs(narrow, bits=16,
                                 max_bucket_size=None).collect()}

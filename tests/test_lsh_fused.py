@@ -118,11 +118,12 @@ def test_pyarrow_index_equals_spark_index(spark, fx_dir):
 
 
 def test_world_countries_equals_countries_dim(spark, world, fx_dir):
-    """World.countries (LocalRelation from the pyarrow index) must equal the
-    Spark-side countries_dim over the boundaries table (r7)."""
+    """World.countries_list (from the driver-side pyarrow index; it seeds
+    every zonal grid) must equal the Spark-side countries_dim over the
+    boundaries table."""
     from aezspark import sources
 
-    got = sorted(r["country"] for r in world.countries.collect())
+    got = world.countries_list
     exp = sorted(r["country"] for r in sources.countries_dim(
         spark, sources.read_boundaries(spark, fx_dir)).collect())
     assert got == exp

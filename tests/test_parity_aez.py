@@ -15,9 +15,16 @@ def test_aez_parity(world):
 def test_aez_region_parity(world):
     from aezspark.zonal import AEZ_CLASSES
 
-    got = world.region_rollup(world.aez(), AEZ_CLASSES)
+    aez = world.aez()
+    got = world.region_rollup(aez, AEZ_CLASSES)
     exp = world.expected("region_aez")
     _cmp(got, exp, ["region", "class"])
+    # every small dim (assignment chunks, seeding grids) is a JVM-only
+    # LocalTableScan: no Python-list scan anywhere in the executed plans
+    for df in (aez, world.zonal("wk"), got):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_degraded56_parity(world):

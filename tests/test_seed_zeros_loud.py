@@ -13,7 +13,7 @@ from aezspark.zonal import seed_zeros
 def test_seed_zeros_passes_expected_and_zero_fills(spark):
     agg = spark.createDataFrame([("A", "1", 5.0)],
                                 "country STRING, class STRING, km2 DOUBLE")
-    countries = spark.createDataFrame([("A",), ("B",)], "country STRING")
+    countries = ["A", "B"]
     rows = {(r.country, r["class"]): r.km2
             for r in seed_zeros(agg, countries, ["1", "2"]).collect()}
     assert rows == {("A", "1"): 5.0, ("A", "2"): 0.0,
@@ -23,7 +23,7 @@ def test_seed_zeros_passes_expected_and_zero_fills(spark):
 def test_seed_zeros_raises_on_unexpected_class(spark):
     agg = spark.createDataFrame([("A", "99", 5.0)],
                                 "country STRING, class STRING, km2 DOUBLE")
-    countries = spark.createDataFrame([("A",)], "country STRING")
+    countries = ["A"]
     with pytest.raises(Exception) as ei:
         seed_zeros(agg, countries, ["1", "2"]).collect()
     assert "seed_zeros" in str(ei.value)
@@ -32,7 +32,7 @@ def test_seed_zeros_raises_on_unexpected_class(spark):
 def test_seed_zeros_raises_on_unexpected_country(spark):
     agg = spark.createDataFrame([("GHOST", "1", 5.0)],
                                 "country STRING, class STRING, km2 DOUBLE")
-    countries = spark.createDataFrame([("A",)], "country STRING")
+    countries = ["A"]
     with pytest.raises(Exception) as ei:
         seed_zeros(agg, countries, ["1", "2"]).collect()
     assert "seed_zeros" in str(ei.value)

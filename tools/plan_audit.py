@@ -177,10 +177,10 @@ Notes:
   seed-zeros full-outer join (tiny, driver-seeded).
 - Scans show `PushedFilters: [IsNotNull(cell_id), ...]` and pruned
   `ReadSchema` (e.g. the LC scan reads only cell_id+lccs).
-- The single "cartesian" in zonal/aez is the seed-zeros grid build — a
-  crossJoin of two LITERAL driver-seeded dims (countries × class list,
-  ≤ a few thousand rows total), not a data-dependent product; no data-path
-  plan contains one.
+- The seed-zeros grid in zonal/aez is ONE driver-side local relation
+  (`sources.local_dim`: the countries × class list, ≤ a few thousand rows,
+  planned as a JVM-only LocalTableScan), not a crossJoin — so no plan,
+  seeding included, contains a cartesian.
 
 {chr(10).join(sections)}"""
     out = os.path.join(os.path.dirname(os.path.dirname(
