@@ -18,13 +18,12 @@ Determinism/cross-engine rules (the DuckDB oracle must reproduce values):
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 # ---------------------------------------------------------------- dedup
 
-def _spread(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
+def _spread(df: DataFrame, min_bytes: int) -> DataFrame:
     """Parallelize compute-heavy work above an UNSPLITTABLE scan (guide
     §2.5 'input skew: one huge unsplittable file … repartition immediately
     after the read'): a single-row-group parquet file (or a gzip) scans as
@@ -33,16 +32,11 @@ def _spread(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     moves that work onto all cores — but the extra Exchange only pays when
     a task actually holds a lot of input, so it fires ONLY when (a) the
     planned scan parallelism is below the session's shuffle parallelism
-    AND (b) the average bytes per planned partition exceed
-    AEZSPARK_SPREAD_MIN_BYTES (default 16 MB — a measured 0.3 s Exchange
-    cost against minutes of serialized md5 work at that size; the sub-MB
-    correctness corpora skip it entirely). At production scale the scan
-    has >= shuffle.partitions splits and this is a no-op. Deterministic
-    under retries: sort-before-repartition is on by default
-    (SPARK-23207)."""
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("AEZSPARK_SPREAD_MIN_BYTES",
-                                       str(16 << 20)))
+    AND (b) the average bytes per planned partition exceed `min_bytes`
+    (each caller sets its own floor from its work per input byte). At
+    production scale the scan has >= shuffle.partitions splits and this is
+    a no-op. Deterministic under retries: sort-before-repartition is on by
+    default (SPARK-23207)."""
     # size first: the stats lookup is a cheap driver-side plan property,
     # while .rdd instantiates the physical plan — don't pay the latter for
     # the (common) small-corpus case
@@ -203,6 +197,40 @@ def minhash_band_buckets(shingles: DataFrame, num_hashes: int = 8,
                     F.col("b.bucket").alias("bucket")))
 
 
+def _drop_hot_buckets(df: DataFrame, keys: list[str], cap: int, prefix: str,
+                      observation=None, doc_col: str = "doc_id") -> DataFrame:
+    """The hot-bucket guard shared by lsh_candidate_pairs and simhash_pairs:
+    keep the rows of buckets (groups over `keys`) with 2..cap members.
+    Singletons cannot pair, so dropping them never changes a result; it
+    only keeps the majority of a mostly-unique corpus out of the self-join.
+
+    The bucket size is a window count over the join's own keys, and the
+    kept rows are materialised with localCheckpoint, so the self-join reads
+    the checkpoint instead of re-running the subtree on each side. With an
+    `observation`, the same checkpoint job reports
+    {prefix}_dropped_buckets and {prefix}_dropped_members. Spark refuses
+    window expressions in observed metrics, so the size and a first-member
+    flag are projected first (a doc occurs at most once per bucket). The
+    observation only adds that projection below the checkpoint: the plan
+    that reads it is the same with or without telemetry, and the metrics
+    arrive even when no pair survives."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy(*keys)
+    df = df.withColumn("_bsz", F.count("*").over(w))
+    if observation is not None:
+        over = F.col("_bsz") > cap
+        df = (df.withColumn("_first", F.col(doc_col) == F.min(doc_col).over(w))
+              .observe(observation,
+                       F.sum((over & F.col("_first")).cast("long"))
+                       .alias(f"{prefix}_dropped_buckets"),
+                       F.sum(over.cast("long"))
+                       .alias(f"{prefix}_dropped_members"))
+              .drop("_first"))
+    return (df.filter((F.col("_bsz") >= 2) & (F.col("_bsz") <= cap))
+            .drop("_bsz").localCheckpoint())
+
+
 def lsh_candidate_pairs(buckets: DataFrame, doc_col: str = "doc_id",
                         max_bucket_size: int | None = 64,
                         observation=None) -> DataFrame:
@@ -218,63 +246,21 @@ def lsh_candidate_pairs(buckets: DataFrame, doc_col: str = "doc_id",
     right pipeline routes those through exact_dedup FIRST — N identical texts
     share identical signatures in EVERY band, so the cap removes the N²·bands
     candidate blow-up while exact dedup still collapses them
-    (tests/test_lsh_hot_bucket.py pins both halves). The size filter is one
-    extra aggregation on the same (band, bucket) shuffle key as the join.
+    (tests/test_lsh_hot_bucket.py pins both halves). The guard is a window
+    count over (band, bucket), materialised once before the self-join (see
+    _drop_hot_buckets), so this call runs one Spark job.
     max_bucket_size=None disables the guard (small-N baselines only).
 
     No silent caps: pass a pyspark.sql.Observation as `observation` and the
     run reports how much the guard actually dropped —
-    lsh_dropped_buckets / lsh_dropped_members metrics
-    (jobs/run_aez.py --queries dedup surfaces them;
+    lsh_dropped_buckets / lsh_dropped_members metrics, ready when this call
+    returns (jobs/run_aez.py --queries dedup surfaces them;
     tests/test_lsh_hot_bucket.py asserts them on the adversarial
-    boilerplate fixture). Passing an observation makes the guard
-    aggregation EAGER (observe + localCheckpoint, the neardup_clusters
-    pattern): a lazily observed CollectMetrics can be pruned by AQE's
-    empty-relation propagation when the final pair count is 0 — exactly a
-    run where the drop telemetry matters most — losing the metrics row
-    (obs.get then throws; seen on Spark 4.1). The cost is one extra pass
-    over the bucket table, paid only when telemetry is requested; the
-    checkpointed (tiny) size table is reused by the join."""
-    if max_bucket_size is not None and observation is None:
-        # guard via a window count over the SAME (band, bucket) partitioning
-        # the self-join needs: one exchange serves the size filter and the
-        # join (the aggregate+join formulation below paid a separate sizes
-        # aggregation and an extra join). Kept only for the no-telemetry
-        # path — an Observation needs the eager sizes table (see below).
-        from pyspark.sql import Window as W
-
-        bsz = F.count("*").over(W.partitionBy("band", "bucket"))
-        # merge hint: the self-join below must NOT pick a broadcast build —
-        # a BroadcastExchange side cannot reuse the other side's shuffle, so
-        # the whole shingle→minhash subtree would execute twice (observed:
-        # two full duplicate scan subtrees in the plan). As a sort-merge
-        # join both sides ReuseExchange the single (band, bucket) shuffle
-        # that the window already partitioned AND sorted — zero extra
-        # exchanges, zero extra sorts, one map-side pass.
-        buckets = (buckets.withColumn("_bsz", bsz)
-                   .filter((F.col("_bsz") <= max_bucket_size)
-                           & (F.col("_bsz") >= 2))
-                   .drop("_bsz").hint("merge"))
-    elif max_bucket_size is not None:
-        sizes = (buckets.groupBy("band", "bucket")
-                 .agg(F.count("*").alias("_bsz")))
-        if observation is not None:
-            sizes = sizes.observe(
-                observation,
-                F.sum((F.col("_bsz") > max_bucket_size).cast("long"))
-                .alias("lsh_dropped_buckets"),
-                F.sum(F.when(F.col("_bsz") > max_bucket_size, F.col("_bsz"))
-                      .otherwise(F.lit(0)).cast("long"))
-                .alias("lsh_dropped_members")).localCheckpoint()
-        # _bsz >= 2: a singleton (band, bucket) group cannot produce a pair,
-        # so dropping it here cannot change the result — it only keeps the
-        # (majority, on a mostly-unique corpus) single-member buckets out of
-        # the self-join's shuffle and the pair-distinct (guide §2.3 "shuffle
-        # fewer bytes"). The guard cap is unchanged.
-        sizes = (sizes.filter((F.col("_bsz") <= max_bucket_size)
-                              & (F.col("_bsz") >= 2))
-                 .select("band", "bucket"))
-        buckets = buckets.join(sizes, ["band", "bucket"])
+    boilerplate fixture)."""
+    if max_bucket_size is not None:
+        buckets = _drop_hot_buckets(buckets, ["band", "bucket"],
+                                    max_bucket_size, "lsh", observation,
+                                    doc_col)
     a = buckets.select(F.col(doc_col).alias("doc_a"), "band", "bucket")
     b = buckets.select(F.col(doc_col).alias("doc_b"), "band", "bucket")
     return (a.join(b, ["band", "bucket"])
@@ -383,18 +369,18 @@ def simhash_pairs(sh: DataFrame, max_hamming: int = 3,
     the declared width (one branch-free shift+compare per row; for
     bits=64 any int64 fits and the check is skipped).
 
-    Hot-block guard (same policy + telemetry as `lsh_candidate_pairs`):
-    a degenerate corpus — thousands of empty/boilerplate docs sharing one
-    fingerprint — makes some (block_idx, block_val) bucket quadratic.
-    Buckets over `max_bucket_size` are DROPPED, with the recall trade
-    disclosed via `observation` (simhash_dropped_buckets / _members;
-    eager, see lsh_candidate_pairs on why): an
-    over-cap bucket is a mass of block-identical members, and the right
-    pipeline routes identical docs through exact_dedup FIRST (identical
-    docs share the fingerprint, hence every block). Pigeonhole
-    completeness then holds for every pair with at least one retained
-    agreeing block. max_bucket_size=None disables the guard (small-N
-    baselines and brute-force-parity tests only).
+    Hot-block guard (same policy, helper and telemetry as
+    `lsh_candidate_pairs`): a degenerate corpus — thousands of
+    empty/boilerplate docs sharing one fingerprint — makes some
+    (block_idx, block_val) bucket quadratic. Buckets over
+    `max_bucket_size` are DROPPED, with the recall trade disclosed via
+    `observation` (simhash_dropped_buckets / _members): an over-cap bucket
+    is a mass of block-identical members, and the right pipeline routes
+    identical docs through exact_dedup FIRST (identical docs share the
+    fingerprint, hence every block). Pigeonhole completeness then holds for
+    every pair with at least one retained agreeing block.
+    max_bucket_size=None disables the guard (small-N baselines and
+    brute-force-parity tests only).
 
     Returns (doc_a, doc_b, hamming), doc_a < doc_b."""
     nb = max_hamming + 1
@@ -418,41 +404,9 @@ def simhash_pairs(sh: DataFrame, max_hamming: int = 3,
         off += w
     b = sh.select("doc_id", "simhash",
                   F.posexplode(F.array(*blocks)).alias("block_idx", "block_val"))
-    if max_bucket_size is not None and observation is None:
-        # window-count guard on the join's own partitioning — no separate
-        # sizes aggregation + join (see lsh_candidate_pairs)
-        from pyspark.sql import Window as W
-
-        bsz = F.count("*").over(W.partitionBy("block_idx", "block_val"))
-        # merge hint: keep the self-join off the broadcast path so both
-        # sides ReuseExchange the window's (block_idx, block_val) shuffle
-        # instead of re-executing the fingerprint subtree (see
-        # lsh_candidate_pairs)
-        b = (b.withColumn("_bsz", bsz)
-             .filter((F.col("_bsz") <= max_bucket_size)
-                     & (F.col("_bsz") >= 2))
-             .drop("_bsz").hint("merge"))
-    elif max_bucket_size is not None:
-        sizes = (b.groupBy("block_idx", "block_val")
-                 .agg(F.count("*").alias("_bsz")))
-        if observation is not None:
-            sizes = sizes.observe(
-                observation,
-                F.sum((F.col("_bsz") > max_bucket_size).cast("long"))
-                .alias("simhash_dropped_buckets"),
-                F.sum(F.when(F.col("_bsz") > max_bucket_size, F.col("_bsz"))
-                      .otherwise(F.lit(0)).cast("long"))
-                .alias("simhash_dropped_members")).localCheckpoint()
-        # _bsz >= 2: singleton blocks can't pair — same result, smaller
-        # self-join shuffle (see lsh_candidate_pairs)
-        sizes = (sizes.filter((F.col("_bsz") <= max_bucket_size)
-                              & (F.col("_bsz") >= 2))
-                 .select("block_idx", "block_val"))
-        b = b.join(sizes, ["block_idx", "block_val"])
-    # renamed projections (not .alias() self-join): an Observation's
-    # CollectMetrics node inside BOTH branches of a deduplicated self-join
-    # breaks metric collection — distinct column names keep the branches
-    # structurally separate (the lsh_candidate_pairs shape)
+    if max_bucket_size is not None:
+        b = _drop_hot_buckets(b, ["block_idx", "block_val"], max_bucket_size,
+                              "simhash", observation)
     l = b.select(F.col("doc_id").alias("doc_a"),
                  F.col("simhash").alias("sim_a"), "block_idx", "block_val")
     r = b.select(F.col("doc_id").alias("doc_b"),

@@ -77,15 +77,13 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     # lower): sub-256 KB splits made the shard-lookup kernel's Arrow batches
     # small enough that per-batch fixed work showed (flagship_docs_shard
     # 1.09 s at 64 KB vs 0.89 s at 256 KB, other queries equal-or-better).
-    b = b.config("spark.sql.files.openCostInBytes",
-                 os.environ.get("AEZSPARK_OPEN_COST_BYTES", "262144"))
+    b = b.config("spark.sql.files.openCostInBytes", str(256 << 10))
     mpb = os.environ.get("AEZSPARK_MAX_PARTITION_BYTES")
     if mpb:
         b = b.config("spark.sql.files.maxPartitionBytes", mpb)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("AEZSPARK_WARM_WORKERS", "1") != "0":
-        _warm_worker_pools(spark, shuffle_partitions)
+    _warm_worker_pools(spark, shuffle_partitions)
     return spark
 
 
@@ -98,7 +96,7 @@ def _warm_worker_pools(spark, parallelism: int) -> None:
     once): the first Arrow-kernel stage otherwise pays ~3.5 s PER WORKER
     importing aezspark/pyarrow/pandas inside the timed query (measured: med
     task init 3.7 s → 0.17 s with this warmup). ~3 s at session creation,
-    outside any timed region. AEZSPARK_WARM_WORKERS=0 disables."""
+    outside any timed region."""
     key = id(spark)
     if key in _WARMED:
         return

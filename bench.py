@@ -10,20 +10,6 @@ Env knobs:
   SPARK_GRAFT_CPUS     default 32 (→ master local[N], shuffle partitions N)
   BENCH_ONLY           comma-separated query subset (used by BENCH/scaling.py)
   BENCH_DOCS           flagship corpus size (default 200000)
-  AEZSPARK_PREV_CONTROL    0 disables the prev-commit control (default on)
-  AEZSPARK_CONTROL_QUERIES control subset (default 4 headline queries)
-  AEZSPARK_CONTROL_SAMPLES prev/head control pairs (default 2)
-
-Same-window prev-commit control: BENCH_rN.json files are recorded in
-different ten-minute windows on a shared host whose throughput drifts ~2×
-between windows, so round-over-round comparisons of the raw numbers are
-meaningless (the round-3 record looked 1.47× slower than round 2 purely from
-drift). This harness therefore interleaves, in THIS run's window, the same
-subset of queries against the previous round's commit (checked out into a
-git worktree) and reports the head/prev ratio in
-extras.prev_commit_control — the number a reviewer should read for
-round-over-round deltas. The head-side samples straddle the prev-side run
-(in-process run before, subprocess after), balancing linear drift.
 """
 
 from __future__ import annotations
@@ -206,36 +192,53 @@ def _relational(spark, sf_dir):
     return E.q_latest_event_per_user(spark, sf_dir).count()
 
 
-def _dedup(spark, sf_dir):
-    import __spark_entry__ as E
+_GUARD_DROPS: dict = {}
 
-    return E.q_lsh_candidate_pairs(spark, sf_dir).count()
+
+def _observed_count(df, obs) -> int:
+    """Count `df` and record its hot-bucket guard drops for the bench
+    JSON (extras.guard_drops)."""
+    n = df.count()
+    _GUARD_DROPS.update({k: v or 0 for k, v in obs.get.items()})
+    return n
+
+
+def _dedup(spark, sf_dir):
+    """q_lsh_candidate_pairs' plan, with the guard's Observation attached."""
+    from pyspark.sql import Observation
+
+    from aezspark import corpus
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    sh = corpus.char_shingles(docs, distinct=False)
+    obs = Observation("lsh_guard")
+    return _observed_count(corpus.lsh_candidate_pairs(
+        corpus.minhash_band_buckets(sh), observation=obs), obs)
 
 
 def _simhash(spark, sf_dir):
     """The 64-bit fingerprint aggregation ALONE — the same workload this
-    bench name has measured since round 5, kept stable so the prev-commit
-    control stays apples-to-apples (the driver's q_simhash row additionally
-    folds the banding join since round 6; that join is benched separately
-    as simhash_pairs, outside the control list)."""
-    import os as _os
-
+    bench name has measured since round 5 (the registered q_simhash query
+    additionally folds the banding join since round 6; that join is benched
+    separately as simhash_pairs)."""
     from aezspark import corpus
 
-    docs = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     return corpus.simhash(docs, bits=64).count()
 
 
 def _simhash_pairs(spark, sf_dir):
     """Fingerprints + pigeonhole block-banding near-dup join at Hamming<=3
     (production guard on) — the full SimHash near-dup pipeline."""
-    import os as _os
+    from pyspark.sql import Observation
 
     from aezspark import corpus
 
-    docs = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     sh = corpus.simhash(docs, bits=64)
-    return corpus.simhash_pairs(sh, max_hamming=3).count()
+    obs = Observation("simhash_guard")
+    return _observed_count(
+        corpus.simhash_pairs(sh, max_hamming=3, observation=obs), obs)
 
 
 def _ann(spark, sf_dir):
@@ -243,182 +246,6 @@ def _ann(spark, sf_dir):
 
     E.q_ann_buckets(spark, sf_dir).count()
     return E.q_cosine_topk(spark, sf_dir).count()
-
-
-CONTROL_QUERIES_DEFAULT = "flagship_docs,aez_by_country,dedup_minhash_lsh,simhash"
-
-
-def _prev_round_commit(repo: str | None = None) -> str | None:
-    """The previous round's boundary commit (the driver commits 'round N:
-    ...' at each round end) — the baseline the control compares against.
-
-    Resolved as the newest round-boundary commit whose TREE differs from
-    HEAD's: when the driver runs the bench right after committing this
-    round's snapshot, the latest 'round N:' commit IS HEAD (round 4's
-    recorded control compared itself against itself and reported 0.66 on
-    identical code) — skipping tree-identical candidates makes a
-    post-snapshot run compare rN against r(N-1)."""
-    import subprocess
-
-    if repo is None:
-        repo = os.path.dirname(os.path.abspath(__file__))
-
-    def _git(*args: str) -> str:
-        return subprocess.run(["git", "-C", repo, *args],
-                              capture_output=True, text=True,
-                              timeout=30).stdout.strip()
-
-    try:
-        head_tree = _git("rev-parse", "HEAD^{tree}")
-        for sha in _git("log", "--grep", "^round [0-9]*:", "-n", "20",
-                        "--format=%H").splitlines():
-            sha = sha.strip()
-            if sha and _git("rev-parse", f"{sha}^{{tree}}") != head_tree:
-                return sha
-        return None
-    except Exception:
-        return None
-
-
-def _ensure_prev_worktree(sha: str) -> str | None:
-    import subprocess
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    wt = os.path.join(repo, "build", f"prev_{sha[:12]}")
-    try:
-        if os.path.isdir(wt):
-            head = subprocess.run(["git", "-C", wt, "rev-parse", "HEAD"],
-                                  capture_output=True, text=True, timeout=30
-                                  ).stdout.strip()
-            if head == sha:
-                return wt
-        subprocess.run(["git", "-C", repo, "worktree", "add", "--detach",
-                        wt, sha], capture_output=True, text=True,
-                       timeout=120, check=True)
-        return wt
-    except Exception:
-        return None
-
-
-def _run_bench_subprocess(workdir: str, queries: list[str]) -> dict | None:
-    """One bench.py run (of `workdir`'s tree) in a fresh JVM, control
-    disabled, restricted to `queries`; returns the parsed JSON line."""
-    import subprocess
-    import sys as _sys
-
-    env = dict(os.environ, AEZSPARK_PREV_CONTROL="0",
-               BENCH_ONLY=",".join(queries),
-               BENCH_REPS=os.environ.get("BENCH_REPS", "1"))
-    try:
-        out = subprocess.run([_sys.executable,
-                              os.path.join(workdir, "bench.py")],
-                             cwd=workdir, env=env, capture_output=True,
-                             text=True, timeout=1800)
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        return json.loads(lines[-1]) if lines else None
-    except Exception:
-        return None
-
-
-def _prev_commit_control(head_inproc: dict) -> dict | None:
-    """Interleave prev-commit and head subprocess runs in THIS window and
-    report per-query min-wall both sides plus the head/prev ratio. Any
-    failure degrades to a note — the control must never break the bench."""
-    sha = _prev_round_commit()
-    if sha is None:
-        return {"note": "no round-boundary commit found; control skipped"}
-    wt = _ensure_prev_worktree(sha)
-    if wt is None:
-        return {"note": f"worktree for {sha[:12]} unavailable; control skipped"}
-    queries = [q for q in os.environ.get(
-        "AEZSPARK_CONTROL_QUERIES", CONTROL_QUERIES_DEFAULT).split(",") if q]
-    samples = int(os.environ.get("AEZSPARK_CONTROL_SAMPLES", "2"))
-    budget_s = float(os.environ.get("AEZSPARK_CONTROL_BUDGET_S", "420"))
-    repo = os.path.dirname(os.path.abspath(__file__))
-    prev_runs, head_runs = [], []
-    truncated = False
-    # subprocess-vs-subprocess ONLY (fresh JVM both sides — the in-process
-    # numbers ride a warm JVM/world cache and would flatter head), with the
-    # order ALTERNATED across samples: the first fresh JVM of a window pays
-    # cold page-cache/JIT costs, so a fixed order would bias whichever side
-    # runs first. A wall budget bounds the control's cost — complete pairs
-    # only, so truncation never leaves a one-sided comparison.
-    t0 = time.monotonic()
-    # one DISCARDED warm-up subprocess before any measured pair: the first
-    # fresh JVM of a window pays cold page cache (parquet, spark jars, bench
-    # corpus) — measured 1.7–4.6× on the FIRST sample of both sides even
-    # with order alternation (BENCH/BASELINE.md round-5 control), which is
-    # exactly the spread the min-of-K estimator then has to absorb. Warming
-    # the caches once, outside the measurement, shrinks the disclosed noise
-    # band instead of papering over it. Counts against the wall budget.
-    _run_bench_subprocess(repo, queries[:1])
-    for i in range(samples):
-        if i > 0 and time.monotonic() - t0 > budget_s:
-            truncated = True
-            break
-        order = [(wt, prev_runs), (repo, head_runs)]
-        if i % 2 == 1:
-            order.reverse()
-        for workdir, sink in order:
-            sink.append(_run_bench_subprocess(workdir, queries))
-    prev_runs = [r for r in prev_runs if r]
-    head_runs = [r for r in head_runs if r]
-    if not prev_runs or not head_runs:
-        return {"note": "control subprocess failed; control skipped",
-                "prev_commit": sha}
-    per_query = {}
-    for q in queries:
-        pv = [r["queries"][q] for r in prev_runs if q in r.get("queries", {})]
-        hv = [r["queries"][q] for r in head_runs if q in r.get("queries", {})]
-        if pv and hv:
-            per_query[q] = {"prev_s": min(pv), "head_s": min(hv),
-                            "ratio": round(min(hv) / min(pv), 3),
-                            "prev_samples": pv, "head_samples": hv,
-                            "head_inproc_s": head_inproc.get(q)}
-            # A/A noise band from the SAME-code samples: the spread between
-            # repeated runs of identical code is the smallest delta the A/B
-            # ratio can resolve (round 4's accidental self-comparison
-            # measured 0.66 on identical code — the band must be disclosed)
-            same_code = [s / min(vals) for vals in (pv, hv) if len(vals) > 1
-                         for s in vals]
-            if same_code:
-                per_query[q]["aa_spread"] = round(max(same_code), 3)
-    tot_p = sum(v["prev_s"] for v in per_query.values())
-    tot_h = sum(v["head_s"] for v in per_query.values())
-    # explicit A/A pair ratio: 2nd head subprocess vs 1st (identical code,
-    # same window, same estimator inputs) — deviation from 1.0 is pure noise
-    aa_pairs = []
-    if len(head_runs) >= 2:  # guard BEFORE unpacking: a budget-truncated
-        r0, r1 = head_runs[0], head_runs[1]  # single-pair run has no A/A
-        aa_pairs = [(r0["queries"][q], r1["queries"][q]) for q in queries
-                    if q in r0.get("queries", {})
-                    and q in r1.get("queries", {})]
-    aa_ratio = (round(sum(b for _, b in aa_pairs)
-                      / sum(a for a, _ in aa_pairs), 3)
-                if aa_pairs and sum(a for a, _ in aa_pairs) else None)
-    spreads = [v["aa_spread"] for v in per_query.values() if "aa_spread" in v]
-    noise_band = round(max(spreads), 3) if spreads else None
-    return {
-        "prev_commit": sha,
-        "queries": per_query,
-        "total_prev_s": round(tot_p, 3),
-        "total_head_s": round(tot_h, 3),
-        "head_over_prev_ratio": round(tot_h / tot_p, 3) if tot_p else None,
-        "aa_pair_ratio": aa_ratio,
-        "aa_noise_band": noise_band,
-        "note": ("same-window interleaved A/B vs the previous round's commit,"
-                 " fresh JVM per sample, order alternated; ratio < 1 means"
-                 " this round is faster — compare THIS, not BENCH_rN.json"
-                 " numbers across rounds (host drifts ~2x between windows)."
-                 " aa_pair_ratio is head-vs-head on identical code;"
-                 " aa_noise_band is the max same-code sample spread — A/B"
-                 " ratios inside [1/band, band] are indistinguishable from"
-                 " noise"
-                 + ("; TRUNCATED by AEZSPARK_CONTROL_BUDGET_S after "
-                    f"{len(prev_runs)} pair(s) — the first pair ran"
-                    " prev-first (cold side bias against prev)"
-                    if truncated else "")),
-    }
 
 
 def main():
@@ -483,6 +310,8 @@ def main():
             if "flagship_docs" in queries else None,
         },
     }
+    if _GUARD_DROPS:
+        result["extras"]["guard_drops"] = dict(_GUARD_DROPS)
     if os.environ.get("BENCH_STAGES") and "flagship_docs" in queries:
         result["extras"]["stages"] = _flagship_stages(spark, n_docs)
     # table-layer scan-planning datum (U21 measured): on full runs only,
@@ -493,17 +322,6 @@ def main():
                 _table_scan_planning(spark, n_docs)
         except Exception as e:
             result["extras"]["table_scan_planning"] = {"error": str(e)[:200]}
-    # same-window prev-commit control: only on full (non-subset) runs — the
-    # scaling harness and the control's own subprocesses set BENCH_ONLY
-    if not only and os.environ.get("AEZSPARK_PREV_CONTROL", "1") != "0":
-        try:
-            result["extras"]["prev_commit_control"] = \
-                _prev_commit_control(queries)
-        except Exception as e:  # the control must NEVER break the bench —
-            # the measured numbers above are already in hand
-            result["extras"]["prev_commit_control"] = {
-                "note": f"control crashed ({type(e).__name__}: {e}); "
-                        f"bench numbers unaffected"}
     print(json.dumps(result))
 
 

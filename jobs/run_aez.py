@@ -108,8 +108,8 @@ def main():
 
     if "dedup" in todo:
         # corpus dedup with no-silent-caps telemetry: the LSH hot-bucket
-        # guard reports what it dropped via an Observation riding the same
-        # action that materializes the pairs
+        # guard reports what it dropped via an Observation, collected by
+        # the guard's own checkpoint job
         from pyspark.sql import Observation
 
         from aezspark import corpus

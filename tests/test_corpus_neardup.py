@@ -122,6 +122,14 @@ def test_simhash_pairs_hot_block_guard(spark):
     # the identical mass over-fills its bucket in EVERY one of the 4 blocks
     assert m["simhash_dropped_buckets"] >= 4
     assert m["simhash_dropped_members"] >= 4 * 300
+    # all-hot corpus: the mass alone, every bucket over the cap, no pair
+    # survives; the drops must still be reported
+    obs_hot = Observation("simhash_guard_all_hot")
+    sh_hot = corpus.simhash(docs.filter(F.col("doc_id").startswith("dup-")))
+    assert corpus.simhash_pairs(sh_hot, observation=obs_hot).count() == 0
+    m_hot = obs_hot.get
+    assert m_hot["simhash_dropped_buckets"] >= 4
+    assert m_hot["simhash_dropped_members"] >= 4 * 300
     # uncapped counterfactual: the mass alone is C(300,2) pairs
     assert (corpus.simhash_pairs(sh, max_bucket_size=None).count()
             >= 300 * 299 // 2)

@@ -61,6 +61,17 @@ def test_guard_reports_drops_via_observation(spark):
     assert m["lsh_dropped_buckets"] >= 4
     assert m["lsh_dropped_members"] >= 4 * 300
 
+    # all-hot corpus: every bucket is over the cap, so no pair survives;
+    # the drops must still be reported
+    hot = _adversarial_docs(spark, n_dups=300, n_unique=0)
+    bks_hot = corpus.lsh_buckets(
+        corpus.minhash_signatures(corpus.char_shingles(hot)))
+    obs_hot = Observation("lsh_guard_all_hot")
+    assert corpus.lsh_candidate_pairs(bks_hot, observation=obs_hot).count() == 0
+    m_hot = obs_hot.get
+    assert m_hot["lsh_dropped_buckets"] >= 4
+    assert m_hot["lsh_dropped_members"] >= 4 * 300
+
     obs2 = Observation("lsh_guard_inert")
     small = spark.createDataFrame(
         [(f"d{i}", f"clearly unique text number {i} here") for i in range(10)],
@@ -70,3 +81,26 @@ def test_guard_reports_drops_via_observation(spark):
     m2 = obs2.get
     assert (m2["lsh_dropped_buckets"] or 0) == 0
     assert (m2["lsh_dropped_members"] or 0) == 0
+
+
+def test_guard_plan_same_with_or_without_observation(spark):
+    """Asking for telemetry must not change the plan that runs: for both
+    guarded self-joins, the executed plan with an Observation equals the
+    one without, up to CollectMetrics nodes and expression/plan ids."""
+    import re
+
+    from pyspark.sql import Observation
+
+    def plan(df):
+        text = df._jdf.queryExecution().executedPlan().toString()
+        text = "\n".join(l for l in text.splitlines()
+                         if "CollectMetrics" not in l)
+        return re.sub(r"#\d+|plan_id=\d+", "", text)
+
+    docs = _adversarial_docs(spark)
+    bks = corpus.lsh_buckets(corpus.minhash_signatures(corpus.char_shingles(docs)))
+    assert (plan(corpus.lsh_candidate_pairs(bks, observation=Observation("p1")))
+            == plan(corpus.lsh_candidate_pairs(bks)))
+    sh = corpus.simhash(docs)
+    assert (plan(corpus.simhash_pairs(sh, observation=Observation("p2")))
+            == plan(corpus.simhash_pairs(sh)))

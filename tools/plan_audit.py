@@ -147,7 +147,9 @@ Notes:
 - **simhash** (round 3; widened 16→64 bit in round 5): one row per token
   through the single groupBy — the 64 per-bit sums are conditional
   aggregates on the same row, so the shuffle carries |tokens| rows (was
-  16·|tokens| with the round-2 J-explode, which would be 64· now).
+  16·|tokens| with the round-2 J-explode, which would be 64· now). The
+  pairs half reads the hot-block guard's checkpoint, so its fingerprint
+  subtree runs once, in the guard's own job, outside this plan.
 - **neardup_cc_round** (round 3): one label-propagation round — edge-join +
   min-agg + left-join; these shuffles repeat O(component diameter) times with
   lineage cut per round, and the convergence count rides the checkpoint
