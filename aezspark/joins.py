@@ -141,6 +141,10 @@ POINT_ASSIGN_FIELDS = [
     T.StructField("method", T.StringType()),
 ]
 
+# emit='zone_counts' kernel: pending deduped (combo, doc) pairs above this
+# are compacted in place (4M int64 pairs ≈ 64 MB); see zc_kernel
+ZC_DEDUP_BUDGET_ROWS = 4_000_000
+
 
 def _validate_projection(points: DataFrame, project: list[str] | None,
                          appended: list[str], op: str) -> list[str]:
@@ -201,8 +205,11 @@ class TileShardLookup:
     the grid, while per-executor I/O stays ≤ one read of the tile table
     (minus the shards nobody's points touch). A small world is just an LRU
     large enough to hold every shard. Geo-clustered inputs drop shard
-    touches to near-minimal; randomly ordered inputs degrade gracefully to
-    cache misses, never to OOM (GeoBlocks' block-granular cell cache shape).
+    touches to near-minimal. A randomly ordered batch that touches more
+    shards than the LRU holds probes its cached shards first (_tile_codes),
+    so it reads only the shards it needs that are not cached — never every
+    shard, never more memory than the LRU (GeoBlocks' block-granular cell
+    cache shape).
 
     Lookup inside a shard is a searchsorted over sorted cell ids —
     write_tiles sorts cells within each tile file exactly so this (and
@@ -228,7 +235,9 @@ def _load_shard(path: str, max_cached: int):
     if ent is None:
         import pyarrow.parquet as pq
 
-        t = pq.read_table(path, columns=["cell_id", "aez_code"])
+        # one known file: ParquetFile skips read_table's dataset discovery
+        with pq.ParquetFile(path) as f:
+            t = f.read(columns=["cell_id", "aez_code"])
         cells = t.column("cell_id").to_numpy().astype(np.int64)
         codes = t.column("aez_code").to_numpy().astype(np.int32)
         if len(cells) > 1 and not bool(np.all(cells[:-1] <= cells[1:])):
@@ -244,16 +253,29 @@ def _load_shard(path: str, max_cached: int):
 def _tile_codes(tsl: TileShardLookup, fine: GridSpec, lon, lat) -> np.ndarray:
     """Fused raster→vector lookup: AEZ code of each point's fine-grid pixel
     through the shard manifest; blank/miss = 255 (C_TMR_BLNK,
-    process_imagery.py:41)."""
+    process_imagery.py:41).
+
+    Points are grouped by tile once (a stable argsort, then contiguous
+    slices). Tiles whose shards are all cached are probed first, then the
+    rest in ascending tile id: the hit phase loads nothing, so no cached
+    shard is evicted before this batch uses it. A fixed ascending order
+    would flood the LRU whenever a batch touches more shards than it holds,
+    missing on every access. With write_tiles' one shard per tile, a batch
+    that needs K shards reads exactly K − |cached ∩ needed| of them. A
+    tile's own paths keep their order, so a later shard still overrides an
+    earlier one."""
     fy, fx = fine.lonlat_to_yx(lon, lat)
     fcell = fine.cell_id(fy, fx)
     tid = (fy // tsl.tile_px) * tsl.n_tiles_x + (fx // tsl.tile_px)
     out = np.full(len(fcell), 255, dtype=np.int32)
-    for t in np.unique(tid):
-        paths = tsl.shard_paths.get(int(t))
-        if not paths:
-            continue  # tile absent from the sink: all-blank (255)
-        m = tid == t
+    order = np.argsort(tid, kind="stable")
+    tids, starts = np.unique(tid[order], return_index=True)
+    groups = zip(map(tsl.shard_paths.get, tids.tolist()),
+                 np.split(order, starts[1:]))
+    # tiles absent from the sink stay all-blank (255)
+    todo = [(paths, m) for paths, m in groups if paths]
+    todo.sort(key=lambda pm: not all(p in _SHARD_CACHE for p in pm[0]))
+    for paths, m in todo:
         fc = fcell[m]
         sub = out[m]
         for path in paths:
@@ -444,9 +466,9 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
         T.StructField("aez_code", T.IntegerType()),
         T.StructField("n_docs", T.LongType())])
 
-    # read driver-side and capture in the closure: executor worker daemons
-    # inherit the env of session start, not later driver-side changes
-    zc_budget = int(os.environ.get("AEZSPARK_ZC_DEDUP_BUDGET_ROWS", "4000000"))
+    # read at plan-build time and captured in the closure, so a driver-side
+    # change to ZC_DEDUP_BUDGET_ROWS reaches the workers
+    zc_budget = ZC_DEDUP_BUDGET_ROWS
 
     def zc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Integer dedup path: country → small int code (position in the
@@ -465,8 +487,8 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
         # MB as int64 pairs at the 64 MB local / core-aware split sizing
         # (session.py). Transient growth ABOVE that (per-batch-deduped
         # frames accumulating cross-batch duplicates) is capped by
-        # incremental compaction at AEZSPARK_ZC_DEDUP_BUDGET_ROWS (default
-        # 4M pairs ≈ 64 MB): when the pending frames exceed the budget they
+        # incremental compaction at ZC_DEDUP_BUDGET_ROWS (4M pairs ≈
+        # 64 MB): when the pending frames exceed the budget they
         # are concat+dedup-compacted in place; if the compacted distinct set
         # itself exceeds the budget, the budget doubles (amortized O(n)
         # compaction work) — the kernel then degrades gracefully toward the

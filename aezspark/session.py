@@ -69,14 +69,15 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     # ignores the 3-waves rule above and degenerates to a handful of tasks —
     # measured: the 14 MB bench corpus scanned as 4 splits and a 2.4 MB cell
     # table as ONE split on a 32-core local master, serializing every
-    # Arrow-kernel and decode stage above those scans. 64 KB keeps the floor
+    # Arrow-kernel and decode stage above those scans. 256 KB keeps a floor
     # (tiny files still pack) while letting minPartitionNum size small scans;
     # at cluster scale totalBytes/minPartitionNum >> 4 MB, so this knob is
     # inert there — it is NOT a local-only tuning, it just stops the open-cost
-    # heuristic from overriding the wave rule on small inputs. 256 KB (not
-    # lower): sub-256 KB splits made the shard-lookup kernel's Arrow batches
-    # small enough that per-batch fixed work showed (flagship_docs_shard
-    # 1.09 s at 64 KB vs 0.89 s at 256 KB, other queries equal-or-better).
+    # heuristic from overriding the wave rule on small inputs. Not lower:
+    # smaller splits made the fused docs kernel's Arrow batches small enough
+    # that its per-batch fixed work (the shard-manifest tile lookup) showed —
+    # measured 1.09 s at 64 KB vs 0.89 s at 256 KB on the flagship docs
+    # query, other queries equal-or-better.
     b = b.config("spark.sql.files.openCostInBytes", str(256 << 10))
     mpb = os.environ.get("AEZSPARK_MAX_PARTITION_BYTES")
     if mpb:

@@ -5,7 +5,7 @@ demonstrably load-bearing (a scrambled input over-counts)."""
 
 from pyspark.sql import functions as F
 
-from aezspark import documents as docs_mod
+from aezspark import documents as docs_mod, joins
 
 
 def _enriched(world):
@@ -109,7 +109,7 @@ def test_fused_kernel_compaction_budget_parity(spark, world, monkeypatch):
     tl = world.tile_lookup()
     base = _as_dict(docs_mod.assign_zone_counts(world.documents(),
                                                 world.bidx, tl, world.fine))
-    monkeypatch.setenv("AEZSPARK_ZC_DEDUP_BUDGET_ROWS", "1")
+    monkeypatch.setattr(joins, "ZC_DEDUP_BUDGET_ROWS", 1)
     tight = _as_dict(docs_mod.assign_zone_counts(world.documents(),
                                                  world.bidx, tl, world.fine))
     assert tight == base and sum(base.values()) > 0
