@@ -2,8 +2,9 @@
 
 Three surfaces:
   entry(spark)    flagship: interleaved docs derived from sf0.001 → span
-                  extraction → cell index → salted broadcast PIP join → kNN
-                  fallback → AEZ tile enrichment → zonal doc counts.
+                  extraction → cell index → broadcast PIP join → kNN
+                  fallback → AEZ tile lookup → zonal doc counts, fused
+                  into one Arrow kernel (documents.assign_zone_counts).
   queries()       one entry per implemented operator (SURVEY.md §2): relational
                   core on the driver's TPC-H-ish tables, training-data corpus
                   ops (dedup / similarity / text analysis / multimodal), and
@@ -69,11 +70,10 @@ def _r(col, n=2):
 # entry
 # =====================================================================
 
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: spatial-join + tile pipeline over interleaved documents
+def _interleaved_docs(spark: SparkSession) -> DataFrame:
+    """The flagship's input: interleaved documents
     deterministically derived from /root/testdata/sf0.001/documents.parquet
-    (text span + md5-derived geo span per doc), returning docs per
-    (country, aez_code)."""
+    (text span + md5-derived geo span per doc)."""
     sf_dir = "/root/testdata/sf0.001"
     flat = _t(spark, sf_dir, "documents")
     did = F.col("doc_id").cast("string")
@@ -87,14 +87,17 @@ def entry(spark: SparkSession) -> DataFrame:
     span_g = F.struct(F.lit("geo").alias("kind"),
                       F.format_string("%.6f,%.6f", lat, lon).alias("text"),
                       F.lit("").alias("media_ref"), F.lit(1).alias("offset"))
-    interleaved = flat.select(did.alias("doc_id"),
-                              F.array(span_t, span_g).alias("spans"))
+    return flat.select(did.alias("doc_id"),
+                       F.array(span_t, span_g).alias("spans"))
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: spatial-join + tile pipeline over the interleaved documents
+    of `_interleaved_docs`, returning docs per (country, aez_code) through
+    the fused kernel that sp_doc_zone_counts benches and oracles."""
     w = _world(spark)
-    assigned = docs_mod.assign_documents(interleaved, w.bidx)
-    enriched = docs_mod.with_aez(assigned, w.tiles(), w.fine)
-    # doc_local: the whole chain above is shuffle-free (narrow ops + broadcast
-    # tile join), so the distinct-doc dedup runs partition-locally
-    return (docs_mod.doc_zone_counts(enriched, doc_local=True)
+    return (docs_mod.assign_zone_counts(_interleaved_docs(spark), w.bidx,
+                                        w.tile_lookup(), w.fine)
             .orderBy("country", "aez_code"))
 
 
@@ -862,8 +865,9 @@ def q_sp_doc_zone_counts(spark, sf_dir):
     ONE Arrow kernel fusing PIP + kNN + shard-manifest tile lookup
     (World.tile_lookup) + partition-local distinct-doc dedup (assign_points
     emit='zone_counts') — match rows never cross the Arrow boundary; the
-    shuffle carries only (country, aez, n) partials. The composed forms (with_aez + doc_zone_counts / doc_local)
-    are parity-pinned in tests/test_doc_zone_counts.py."""
+    shuffle carries only (country, aez, n) partials. The composed form
+    (with_aez + doc_zone_counts) is parity-pinned in
+    tests/test_doc_zone_counts.py."""
     w = _world(spark)
     return (docs_mod.assign_zone_counts(w.documents(), w.bidx,
                                         w.tile_lookup(), w.fine)

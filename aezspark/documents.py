@@ -2,7 +2,7 @@
 
 BASELINE.json input_hint: documents(doc_id string, spans array<struct<kind,
 text,media_ref,offset>>). Geo-bearing spans are the points fed to the spatial
-join (span extraction → H3/S2-style cell index → salted broadcast PIP join →
+join (span extraction → H3/S2-style cell index → broadcast PIP join →
 kNN nearest-zone fallback → AEZ tile enrichment → zonal doc aggregation), all
 with built-in functions + Arrow-vectorized kernels — no per-row Python.
 
@@ -71,7 +71,7 @@ def geo_key_points(docs: DataFrame) -> DataFrame:
 
 def assign_documents(docs: DataFrame, index, index_res: int = 6,
                      knn_fallback: bool = True) -> DataFrame:
-    """Salted broadcast PIP join of every geo span against the boundary dim,
+    """Broadcast PIP join of every geo span against the boundary dim,
     with kNN nearest-zone fallback for points inside no polygon.
 
     `index` is a BoundaryIndex or a Broadcast of one. Output: one row per
@@ -177,58 +177,16 @@ def span_invariant_violations(docs_in: DataFrame, docs_out: DataFrame) -> int:
         | (F.col("seq_in") != F.col("seq_out"))).count()
 
 
-def doc_zone_counts(assigned_aez: DataFrame, doc_local: bool = False) -> DataFrame:
+def doc_zone_counts(assigned_aez: DataFrame) -> DataFrame:
     """Zonal doc aggregation: distinct documents per (country, aez_code).
 
-    doc_local=False (general form): global distinct over (country, aez_code,
-    doc_id). Skew handling: the distinct's shuffle key includes the
-    high-cardinality doc_id, so a hot country is spread over all reducers (the
-    salt is intrinsic — same effect as an explicit `pmod(hash(doc_id), k)`
-    salt column without the extra shuffle); the final (country, aez_code)
-    aggregation then runs on the already-deduplicated, much smaller set with
-    map-side partial aggregation.
-
-    doc_local=True (the 10¹²-doc form): NO doc_id ever crosses a shuffle.
-    Precondition: every row of a given doc_id lives in ONE partition of
-    `assigned_aez`. This holds by construction for the engine's whole
-    assignment chain — documents scan → posexplode → mapInPandas PIP/kNN
-    kernel → broadcast tile join are all narrow (zero exchanges), so a doc's
-    spans never leave the scan partition that produced them (pinned by
-    tests/test_doc_zone_counts.py, which also shows the scrambled-input
-    counterexample). Under that precondition a per-partition dedup of
-    (country, aez_code, doc_id) is globally exact, and only the tiny
-    per-partition (country, aez_code, n) partials are shuffled — the 20M-row
-    distinct shuffle (the measured non-scaling residue in BENCH/BASELINE.md
-    round 2) disappears entirely. Memory bound: the distinct triples of one
-    partition (not the rows) are held in the Arrow kernel."""
-    if doc_local:
-        import pandas as pd
-
-        def kernel(batches):
-            parts = []
-            for pdf in batches:
-                if len(pdf):
-                    parts.append(pdf.drop_duplicates())
-            if not parts:
-                return
-            allp = pd.concat(parts, ignore_index=True).drop_duplicates()
-            # dropna=False: Spark's groupBy counts null-keyed groups, so the
-            # doc_local form must too (e.g. country nulls with knn_fallback
-            # disabled) — pandas' default dropna=True would silently diverge
-            out = (allp.groupby(["country", "aez_code"], sort=False,
-                                dropna=False)
-                   .size().reset_index(name="n_docs"))
-            yield pd.DataFrame({
-                "country": out["country"],
-                "aez_code": out["aez_code"].astype("int32"),
-                "n_docs": out["n_docs"].astype("int64")})
-
-        partials = (assigned_aez
-                    .select("country", "aez_code", "doc_id")
-                    .mapInPandas(kernel,
-                                 "country string, aez_code int, n_docs long"))
-        return (partials.groupBy("country", "aez_code")
-                .agg(F.sum("n_docs").alias("n_docs")))
+    The composed reference form: a global distinct over (country, aez_code,
+    doc_id), then the (country, aez_code) count. Its shuffle key includes the
+    high-cardinality doc_id, so a hot country is spread over all reducers;
+    the final count runs on the deduplicated set with map-side partial
+    aggregation. The production path is assign_zone_counts, which dedups
+    inside the assign kernel; tests/test_doc_zone_counts.py pins the two
+    equal."""
     distinct = (assigned_aez
                 .select("country", "aez_code", "doc_id")
                 .distinct())

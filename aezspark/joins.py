@@ -1,4 +1,4 @@
-"""Spatial joins: broadcast PIP (salted), assignment build, kNN nearest-zone.
+"""Spatial joins: broadcast PIP, assignment build, kNN nearest-zone.
 
 The reference's only join is containment via pre-rasterized per-country masks
 (prepare_feature_masks.py:9-63 build; extract_country_data.py:231-245 probe).
@@ -6,7 +6,8 @@ Here it is a true broadcast point-in-polygon join (north_rule): the polygon
 dim — rings + bbox-bucket index (geometry.BoundaryIndex) — is broadcast to all
 executors, and an Arrow-batched mapInPandas kernel evaluates the vectorized
 crossing-number test per batch. No shuffle happens in the join itself; the
-downstream aggregation shuffle is salted explicitly (hot countries/cells).
+downstream grouped aggregations absorb hot countries/cells in their map-side
+partial aggregate.
 
 Two probe shapes:
   * assign_points: arbitrary (lat, lon) rows → many-to-many feature matches,
@@ -401,19 +402,20 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
     INSIDE the kernel matters at scale — dropped columns never cross the
     Arrow boundary back to the JVM nor enter the downstream shuffle.
 
-    emit='zone_counts' fuses the partition-local distinct-doc zonal count
-    (documents.doc_zone_counts doc_local semantics) INTO this kernel: match
-    rows never cross the Arrow boundary at all — each partition emits only
-    its (country, aez_code, n_docs) partials; finish with
-    groupBy(country, aez_code).sum. Requires tile_lookup and a `doc_col`
-    input column (default doc_id; pass an int64 surrogate — e.g.
+    emit='zone_counts' fuses a partition-local distinct-doc zonal count
+    INTO this kernel: match rows never cross the Arrow boundary at all —
+    each partition emits only its (country, aez_code, n_docs) partials;
+    finish with groupBy(country, aez_code).sum. Requires tile_lookup and a
+    `doc_col` input column (default doc_id; pass an int64 surrogate — e.g.
     xxhash64(doc_id) — to keep the Arrow payload and the dedup integer-only:
     distinctness is all the count needs, and the kernel then hash-dedups
-    int64 pairs instead of object rows). The
-    co-location precondition is automatic here because the dedup happens in
-    the SAME kernel that produced the matches. Aggregation pushed into the
-    join — the 10¹²-doc shape where the join output (≈ input rows × match
-    multiplicity) is the dominant data volume."""
+    int64 pairs instead of object rows). Precondition: every row of one doc
+    lives in ONE input partition, else the doc is counted once per partition
+    (tests/test_doc_zone_counts.py pins the scrambled-input counterexample).
+    Points derived from a documents scan by narrow ops
+    (documents.geo_key_points) meet it by construction. Aggregation pushed
+    into the join — the 10¹²-doc shape where the join output (≈ input rows ×
+    match multiplicity) is the dominant data volume."""
     if emit not in ("rows", "zone_counts"):
         raise ValueError(f"assign_points: unknown emit mode {emit!r}")
     if emit == "zone_counts":
@@ -672,22 +674,3 @@ def knn_topk_join(points: DataFrame, index, k: int,
             yield out[out_cols]
 
     return points.mapInPandas(kernel, schema)
-
-
-# ------------------------------------------------------------------ salting
-
-def salted_sum(df: DataFrame, keys: list[str], sums: dict[str, str],
-               buckets: int = 16) -> DataFrame:
-    """Two-stage grouped sum with explicit salting (north_rule: 'skew salting
-    on hot cells'): partial aggregate on (keys, salt) spreads a hot key over
-    `buckets` reducers, final aggregate merges the partials.
-
-    sums: {output_alias: input_expr_sql}.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.spark_partition_id()),
-                  F.lit(buckets)).alias("_salt")
-    partial = (df.withColumn("_salt", salt)
-               .groupBy(*keys, "_salt")
-               .agg(*[F.sum(F.expr(expr)).alias(alias) for alias, expr in sums.items()]))
-    return (partial.groupBy(*keys)
-            .agg(*[F.sum(alias).alias(alias) for alias in sums]))

@@ -2,8 +2,8 @@
 
 Arrow on (all geometry kernels are Arrow-batched pandas UDFs), AQE on
 (runtime coalesce + skew-join for the equi-join paths; the broadcast PIP path
-salts explicitly), shuffle partitions sized to the local core count rather
-than the 200 default.
+has no shuffle to skew), shuffle partitions sized to the local core count
+rather than the 200 default.
 """
 
 from __future__ import annotations

@@ -3,8 +3,9 @@
 The reference's accumulator (`df.loc[admin, col] += block_sum`, country-at-a-
 time over mask blocks, extract_country_data.py:59-71 etc.) becomes one grouped
 sum over the assignment⋈cells join — the big algorithmic win of the Spark
-design (SURVEY §4): one pass over the data instead of O(countries × raster),
-with partial (map-side) aggregation and an explicitly salted shuffle.
+design (SURVEY §4): one pass over the data instead of O(countries × raster).
+Skew handling is the map-side partial aggregate: each map task sends at most
+one row per (country, class) to the shuffle, however hot the country.
 
 All functions return LONG format (country, class, km2); pivoting to the
 reference's wide CSV layout happens in io.py at the sink.
@@ -17,7 +18,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import decoders as D
 from .grid import GridSpec, km2_col, cell_id_col
-from .joins import salted_sum
 from .sources import local_dim
 
 AEZ_CLASSES = [f"{t}|AEZ{n}" for t in D.TMR_ORDER for n in range(1, 30)]
@@ -65,10 +65,9 @@ def seed_zeros(agg: DataFrame, countries: list[str],
                      "(country, class) grid: ")
 
 
-def _finish(df: DataFrame, countries: list[str], classes: list[str],
-            salt_buckets: int = 16) -> DataFrame:
-    agg = salted_sum(df, ["country", "class"], {"km2": "km2w"},
-                     buckets=salt_buckets)
+def _finish(df: DataFrame, countries: list[str],
+            classes: list[str]) -> DataFrame:
+    agg = df.groupBy("country", "class").agg(F.sum("km2w").alias("km2"))
     return seed_zeros(agg, countries, classes)
 
 

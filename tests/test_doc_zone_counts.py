@@ -1,7 +1,10 @@
-"""doc_zone_counts doc_local path: the partition-local distinct-doc dedup
-(zero doc_id shuffle — the round-3 scaling fix) must equal the global
-distinct exactly when docs are partition-local, and its precondition must be
-demonstrably load-bearing (a scrambled input over-counts)."""
+"""The flagship doc count has one production path, the fused kernel
+(documents.assign_zone_counts: assign_points(emit='zone_counts') dedups
+docs partition-locally inside the assign kernel, so no doc id crosses a
+shuffle). It must equal the composed reference
+doc_zone_counts(with_aez(assign_documents(...))) exactly, and its
+co-location precondition must be demonstrably load-bearing (a scrambled
+input over-counts)."""
 
 from pyspark.sql import functions as F
 
@@ -17,41 +20,47 @@ def _as_dict(df):
     return {(r.country, r.aez_code): r.n_docs for r in df.collect()}
 
 
-def test_doc_local_equals_global_on_colocated_input(spark, world):
-    """The engine's whole assignment chain is narrow (scan → posexplode →
-    mapInPandas → broadcast tile join), so docs never cross partitions and
-    the partition-local dedup is globally exact."""
-    enriched = _enriched(world)
-    exact = _as_dict(docs_mod.doc_zone_counts(enriched))
-    local = _as_dict(docs_mod.doc_zone_counts(enriched, doc_local=True))
-    assert local == exact and sum(exact.values()) > 0
-
-
-def test_doc_local_plan_has_no_wide_shuffle_of_doc_ids(spark, world):
-    """The doc_local plan's only Exchange carries (country, aez_code, n)
-    partials — doc_id must not appear in any exchanged schema."""
-    plan = (docs_mod.doc_zone_counts(_enriched(world), doc_local=True)
+def test_fused_plan_has_no_wide_shuffle_of_doc_ids(spark, world):
+    """The fused plan's only Exchange carries (country, aez_code, n)
+    partials — neither doc_id nor its doc_key surrogate may appear in any
+    exchanged schema."""
+    plan = (docs_mod.assign_zone_counts(world.documents(), world.bidx,
+                                        world.tile_lookup(), world.fine)
             ._jdf.queryExecution().executedPlan().toString())
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "doc_id" not in line, line
+    exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+    assert exchanges
+    for line in exchanges:
+        assert "doc_key" not in line and "doc_id" not in line, line
 
 
-def test_doc_local_precondition_is_load_bearing(spark):
+def test_fused_precondition_is_load_bearing(spark, world):
     """Counter-example: rows of one doc spread across partitions are counted
-    once per partition — doc_local on a scrambled input over-counts, which is
-    exactly why the precondition is documented."""
-    schema = "country STRING, aez_code INT, doc_id STRING"
-    # deterministic split: parallelize with 2 slices puts d1's first row in
+    once per partition — the in-kernel dedup on a scrambled input
+    over-counts, which is exactly why the precondition is documented."""
+    import numpy as np
+
+    from aezspark.geometry import BoundaryIndex, Polygon
+    from aezspark.joins import assign_points
+
+    idx = BoundaryIndex([Polygon(1, "X", np.array([0.0, 8.0, 8.0, 0.0, 0.0]),
+                                 np.array([0.0, 0.0, 8.0, 8.0, 0.0]))])
+    # deterministic split: parallelize with 2 slices puts doc 1's first row in
     # partition 0 and its second in partition 1 (slice boundaries are fixed;
     # a plain union of coalesced frames gets re-collapsed by AQE)
-    rows = [("X", 1, "d1"), ("X", 1, "d1"), ("X", 1, "d2")]
-    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    assert df.rdd.getNumPartitions() == 2
-    exact = _as_dict(docs_mod.doc_zone_counts(df))
-    local = _as_dict(docs_mod.doc_zone_counts(df, doc_local=True))
-    assert exact[("X", 1)] == 2
-    assert local[("X", 1)] > exact[("X", 1)]
+    rows = [(1, 4.0, 4.0), (1, 4.0, 4.0), (2, 4.0, 4.0)]
+    pts = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+                                "doc_id LONG, lon DOUBLE, lat DOUBLE")
+    assert pts.rdd.getNumPartitions() == 2
+    tl = world.tile_lookup()
+    exact = _as_dict(docs_mod.doc_zone_counts(
+        assign_points(pts, idx, tile_lookup=tl, fine=world.fine)))
+    fused = _as_dict(assign_points(pts, idx, tile_lookup=tl, fine=world.fine,
+                                   emit="zone_counts", project=["doc_id"])
+                     .groupBy("country", "aez_code")
+                     .agg(F.sum("n_docs").alias("n_docs")))
+    assert list(exact.values()) == [2]
+    assert fused.keys() == exact.keys()
+    assert sum(fused.values()) > 2
 
 
 def test_fused_kernel_equals_composed(spark, world):
@@ -62,6 +71,21 @@ def test_fused_kernel_equals_composed(spark, world):
         world.documents(), world.bidx, world.tile_lookup(), world.fine))
     composed = _as_dict(docs_mod.doc_zone_counts(_enriched(world)))
     assert fused == composed and sum(fused.values()) > 0
+
+
+def test_entry_equals_composed(spark, world):
+    """The driver's flagship entry() runs the fused kernel; over the same
+    interleaved docs it must return the composed reference's rows, row for
+    row in its (country, aez_code) order."""
+    import __spark_entry__ as E
+
+    docs = E._interleaved_docs(spark)
+    composed = docs_mod.doc_zone_counts(docs_mod.with_aez(
+        docs_mod.assign_documents(docs, world.bidx), world.tiles(),
+        world.fine))
+    got = E.entry(spark).collect()
+    assert got == composed.orderBy("country", "aez_code").collect()
+    assert got and got[0].asDict().keys() == {"country", "aez_code", "n_docs"}
 
 
 def test_fused_kernel_validates_inputs(spark, world):
@@ -85,21 +109,6 @@ def test_fused_kernel_validates_inputs(spark, world):
         with pytest.raises(ValueError, match="World.tile_lookup"):
             assign_points(pts, world.bidx, tile_lookup=bad, fine=world.fine,
                           emit="zone_counts")
-
-
-def test_doc_local_counts_null_keys_like_spark(spark):
-    """A null group key must count identically in both advertised-identical
-    forms: pandas groupby defaults to dropna=True, which would silently drop
-    null-country rows only in the doc_local kernel."""
-    schema = "country STRING, aez_code INT, doc_id STRING"
-    rows = [("X", 1, "d1"), (None, 1, "d2"), (None, 1, "d3"), ("X", 2, "d1")]
-    df = spark.createDataFrame(rows, schema).coalesce(1)
-    exact = docs_mod.doc_zone_counts(df)
-    local = docs_mod.doc_zone_counts(df, doc_local=True)
-    as_set = lambda d: {tuple(r) for r in d.collect()}
-    got = as_set(local)
-    assert got == as_set(exact)
-    assert (None, 1, 2) in got
 
 
 def test_fused_kernel_compaction_budget_parity(spark, world, monkeypatch):

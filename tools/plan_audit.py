@@ -5,6 +5,8 @@ sort-merge joins, exchanges, python nodes, codegen spans) and captures
 trimmed formatted-plan excerpts. Run after any plan-shape change:
 
     python tools/plan_audit.py
+
+and update the counts pinned in tests/test_plan_shape.py in the same commit.
 """
 
 from __future__ import annotations
@@ -14,6 +16,9 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# the driver tables the audit reads (sf0.01, as the correctness gate)
+SF_DIR = "/root/testdata/sf0.01"
 
 EXCERPT_PATTERNS = re.compile(
     r"Exchange|Join|MapInPandas|HashAggregate|PushedFilters|ReadSchema|"
@@ -51,10 +56,6 @@ def excerpt(plan: str, max_lines: int = 40) -> str:
 
 
 def main():
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as E
-    from aezspark import corpus, documents as docs_mod
     from aezspark.session import get_spark
     from aezspark.fixtures.generate import ensure_fixtures
     from aezspark.pipelines import World
@@ -62,44 +63,7 @@ def main():
     spark = get_spark("plan-audit", master="local[8]")
     fx = ensure_fixtures("/root/repo/build/fixtures/test")
     w = World(spark, fx)
-    sf = "/root/testdata/sf0.01"
-
-    plans = {}
-
-    plans["zonal_wk"] = w.zonal("wk")
-    plans["aez"] = w.aez()
-    plans["tiles"] = w.tiles()
-    plans["flagship_docs"] = (lambda: (
-        docs_mod.doc_zone_counts(docs_mod.with_aez(
-            docs_mod.assign_documents(w.documents(), w.bidx),
-            w.tiles(), w.fine), doc_local=True)))()
-    plans["flagship_fused"] = docs_mod.assign_zone_counts(
-        w.documents(), w.bidx, w.tile_lookup(), w.fine)
-    plans["embedding_neardup"] = E.q_embedding_neardup(spark, sf)
-    plans["within_distance"] = E.q_sp_within_distance(spark, sf)
-    plans["simhash"] = E.q_simhash(spark, sf)
-    plans["ivf_probe_pruned"] = E.q_ivf_topk(spark, sf)
-    plans["fao_slope_assembly"] = E.q_sp_fao_slope(spark, sf)
-    # one round of the neardup CC loop (the loop itself is iterative — this
-    # is the per-round join+agg shape whose shuffles repeat O(diameter)
-    # times). edges/labels are materialized first, exactly as in production
-    # (edges .cache(), labels .localCheckpoint() per round), so the audited
-    # plan is the real per-round increment, not the inlined full upstream.
-    pairs = E.q_lsh_candidate_pairs(spark, sf)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint()
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")).localCheckpoint())
-    nbr = (edges.join(labels.select(F.col("node").alias("dst"),
-                                    F.col("label").alias("dst_label")), "dst")
-           .groupBy("src").agg(F.min("dst_label").alias("nbr_label")))
-    plans["neardup_cc_round"] = (
-        labels.join(nbr, labels.node == nbr.src, "left")
-        .select(labels.node,
-                F.least(F.col("label"),
-                        F.coalesce("nbr_label", "label")).alias("label")))
+    plans = headline_plans(spark, w, SF_DIR)
 
     rows = []
     sections = []
@@ -126,13 +90,8 @@ contains a cartesian, and every Exchange is accounted for.
 {chr(10).join(rows)}
 
 Notes:
-- **flagship_docs** is the shape that matters at 10^12 docs: scan → narrow
-  projection → ONE MapInPandas kernel (PIP + kNN) → broadcast tile join
-  (with_aez, the composed form) → partition-local distinct-doc dedup
-  (round 3: doc_local — docs never cross partitions in this chain, so NO
-  doc_id enters any Exchange; only (country, aez, n) partials shuffle) →
-  zone rollup. The polygon index rides a SparkContext broadcast.
-- **flagship_fused** (round 3, the benched production path): the dedup and
+- **flagship_fused** (round 3; the one flagship doc-count path, run by
+  `entry()` and the benched, oracled `sp_doc_zone_counts`): the dedup and
   partial count run INSIDE the assign kernel (`emit='zone_counts'`) — one
   MapInPandas, one Exchange carrying only per-partition (country, aez, n)
   partials; join output rows never cross the Arrow boundary at all. Its
@@ -174,9 +133,9 @@ Notes:
   raises instead of interpreting.
 - **zonal/aez**: cell tables auto-broadcast at fixture scale; at 100 TB
   Catalyst flips them to SortMergeJoin, which is why both sides are written
-  bucketable by cell_id. Exchange counts include the explicit two-stage
-  salted aggregation (partial on (keys, salt), final on keys) and the
-  seed-zeros full-outer join (tiny, driver-seeded).
+  bucketable by cell_id. Exchange counts include the one grouped sum
+  (its map-side partial aggregate absorbs hot countries, so no salt
+  stage) and the seed-zeros full-outer join (tiny, driver-seeded).
 - Scans show `PushedFilters: [IsNotNull(cell_id), ...]` and pruned
   `ReadSchema` (e.g. the LC scan reads only cell_id+lccs).
 - The seed-zeros grid in zonal/aez is ONE driver-side local relation
@@ -190,6 +149,50 @@ Notes:
     with open(out, "w") as f:
         f.write(md)
     print(f"wrote {out}")
+
+
+def headline_plans(spark, world, sf_dir: str) -> dict:
+    """The engine's headline plans by name: `world` is the fixture World,
+    `sf_dir` the driver tables (SF_DIR). PLANS.md and the pinned counts in
+    tests/test_plan_shape.py are both built from this dict."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as E
+    from aezspark import documents as docs_mod
+
+    plans = {}
+
+    plans["zonal_wk"] = world.zonal("wk")
+    plans["aez"] = world.aez()
+    plans["tiles"] = world.tiles()
+    plans["flagship_fused"] = docs_mod.assign_zone_counts(
+        world.documents(), world.bidx, world.tile_lookup(), world.fine)
+    plans["embedding_neardup"] = E.q_embedding_neardup(spark, sf_dir)
+    plans["within_distance"] = E.q_sp_within_distance(spark, sf_dir)
+    plans["simhash"] = E.q_simhash(spark, sf_dir)
+    plans["ivf_probe_pruned"] = E.q_ivf_topk(spark, sf_dir)
+    plans["fao_slope_assembly"] = E.q_sp_fao_slope(spark, sf_dir)
+    # one round of the neardup CC loop (the loop itself is iterative — this
+    # is the per-round join+agg shape whose shuffles repeat O(diameter)
+    # times). edges/labels are materialized first, exactly as in production
+    # (edges .cache(), labels .localCheckpoint() per round), so the audited
+    # plan is the real per-round increment, not the inlined full upstream.
+    pairs = E.q_lsh_candidate_pairs(spark, sf_dir)
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    edges = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).localCheckpoint()
+    labels = (edges.select(F.col("src").alias("node")).distinct()
+              .withColumn("label", F.col("node")).localCheckpoint())
+    nbr = (edges.join(labels.select(F.col("node").alias("dst"),
+                                    F.col("label").alias("dst_label")), "dst")
+           .groupBy("src").agg(F.min("dst_label").alias("nbr_label")))
+    plans["neardup_cc_round"] = (
+        labels.join(nbr, labels.node == nbr.src, "left")
+        .select(labels.node,
+                F.least(F.col("label"),
+                        F.coalesce("nbr_label", "label")).alias("label")))
+    return plans
 
 
 if __name__ == "__main__":
