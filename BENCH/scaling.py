@@ -41,9 +41,6 @@ def run_once(cpus: int, n_docs: int, stages: bool = False) -> dict:
                BENCH_DOCS=str(n_docs),
                BENCH_REPS=os.environ.get("BENCH_REPS", "3"),
                BENCH_ONLY="flagship_docs")
-    # optional sensitivity knob: AEZSPARK_MAX_PARTITION_BYTES forces a fixed
-    # split size. Default: the engine's core-aware sizing (minPartitionNum =
-    # 3x cores; see aezspark/session.py).
     if stages:
         env["BENCH_STAGES"] = "1"
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
@@ -163,10 +160,8 @@ ceilings for context (BENCH/membw.py + a compute control, 2→8 procs):
 STREAM-triad bandwidth eff 1.00, L2-resident FLOPs eff 0.92 — the host
 itself scales; pinned efficiency measures the engine.
 `spark.sql.shuffle.partitions` matches cores; scan split sizing =
-{os.environ.get("AEZSPARK_MAX_PARTITION_BYTES",
-                "engine default (minPartitionNum = 3x cores → ~3 task waves "
-                "per core at any input size)")}
-(AEZSPARK_MAX_PARTITION_BYTES overrides with a fixed byte size).
+engine default (minPartitionNum = 3x cores → ~3 task waves per core at any
+input size; see aezspark/session.py).
 
 | corpus | N wall s | 4N wall s | docs/sec N | docs/sec 4N | eff | samples N / 4N (s) |
 |---|---|---|---|---|---|---|

@@ -167,14 +167,13 @@ def _validate_projection(points: DataFrame, project: list[str] | None,
     return keep
 
 
-def _match_arrays(idx: BoundaryIndex, lon, lat, knn_fallback: bool,
-                  many_to_many: bool):
+def _match_arrays(idx: BoundaryIndex, lon, lat, knn_fallback: bool):
     """Shared match core of the fused kernels: (take, ppos, isknn) where
     `take` indexes the batch rows (a row appears once per containing feature,
     plus once for its kNN fallback), `ppos` is the matched polygon position,
     and `isknn` flags the fallback rows. PIP matches first, kNN after — the
     historical kernel order."""
-    pt, pp = idx.pip(lon, lat, many_to_many=many_to_many)
+    pt, pp = idx.pip(lon, lat, many_to_many=True)
     if not knn_fallback:
         return pt, pp, np.zeros(len(pt), dtype=bool)
     un = np.ones(len(lon), dtype=bool)
@@ -292,32 +291,24 @@ def _tile_codes(tsl: TileShardLookup, fine: GridSpec, lon, lat) -> np.ndarray:
 
 
 def tile_shard_lookup(spark: SparkSession, tiles_path: str, fine: GridSpec,
-                      tile_px: int = 256, max_cached_shards: int = 64,
-                      tables_root: str | None = None):
+                      tile_px: int = 256, max_cached_shards: int = 64, *,
+                      tables_root: str):
     """Build + broadcast a TileShardLookup over a write_tiles sink.
 
-    With `tables_root`, the shard list is planned from a snapshot-table
-    manifest (tables.ensure_imported_table — zero-copy add_files import,
-    staleness-keyed by source fingerprint) instead of a directory walk: at
-    object-store scale, listing 90k partition dirs is O(files) LISTs and
-    races with writers; the manifest is one GET. Falls back to the walk for
-    plain directories (tests, local runs).
+    The shard list is planned from a snapshot-table manifest kept under
+    `tables_root` (tables.ensure_imported_table — zero-copy add_files
+    import, staleness-keyed by source fingerprint) instead of a directory
+    walk: at object-store scale, listing 90k partition dirs is O(files)
+    LISTs and races with writers; the manifest is one GET.
 
     Validates the tile geometry against one real shard: a wrong tile_px or
     grid would mis-route every lookup to the wrong shard (silent all-255),
     so the constructor recomputes a sample file's tile_id from its min cell
     and refuses on mismatch."""
-    if tables_root is not None:
-        from .tables import ensure_imported_table
+    from .tables import ensure_imported_table
 
-        files = ensure_imported_table(spark, tiles_path, tables_root
-                                      ).snapshot()["files"]
-    else:
-        files = []
-        for dirpath, _dirs, fnames in os.walk(tiles_path):
-            for f in sorted(fnames):
-                if f.endswith(".parquet"):
-                    files.append(os.path.join(dirpath, f))
+    files = ensure_imported_table(spark, tiles_path, tables_root
+                                  ).snapshot()["files"]
     shard_paths: dict[int, tuple[str, ...]] = {}
     for path in sorted(files):
         tid = _tile_id_of_path(path)
@@ -380,7 +371,7 @@ def _check_tile_lookup(tile_lookup, fine: GridSpec | None) -> None:
 
 def assign_points(points: DataFrame, index, lat_col: str = "lat",
                   lon_col: str = "lon", knn_fallback: bool = True,
-                  many_to_many: bool = True, tile_lookup=None,
+                  tile_lookup=None,
                   fine: GridSpec | None = None,
                   project: list[str] | None = None,
                   emit: str = "rows", doc_col: str = "doc_id") -> DataFrame:
@@ -447,8 +438,7 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
                 continue
             lon = pdf[lon_col].to_numpy(dtype=np.float64)
             lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            take, ppos, isknn = _match_arrays(idx, lon, lat, knn_fallback,
-                                              many_to_many)
+            take, ppos, isknn = _match_arrays(idx, lon, lat, knn_fallback)
             out = pdf.iloc[take].reset_index(drop=True)
             out["feature_id"] = fids[ppos]
             out["country"] = countries[ppos]
@@ -513,8 +503,7 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
                 continue
             lon = pdf[lon_col].to_numpy(dtype=np.float64)
             lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            take, ppos, _ = _match_arrays(idx, lon, lat, knn_fallback,
-                                          many_to_many)
+            take, ppos, _ = _match_arrays(idx, lon, lat, knn_fallback)
             if not len(take):
                 continue
             aez = _tile_codes(tl, fine, lon[take], lat[take]).astype(np.int64)
@@ -605,8 +594,7 @@ def within_distance_join(points: DataFrame, index, d_deg: float,
 def knn_topk_join(points: DataFrame, index, k: int,
                   lat_col: str = "lat", lon_col: str = "lon",
                   unmatched_only: bool = True,
-                  project: list[str] | None = None,
-                  stats_acc=None) -> DataFrame:
+                  project: list[str] | None = None) -> DataFrame:
     """kNN spatial join with k > 1 (SURVEY §2.5 rank-by-distance): for each
     point, the k nearest features by boundary distance, as (feature_id,
     country, dist_deg, rank) rows with rank 1..k ordered by (dist asc,
@@ -619,9 +607,7 @@ def knn_topk_join(points: DataFrame, index, k: int,
     6dp-rounded deg, the user-facing unit. Same broadcast-kernel shape as
     assign_points: zero shuffle, candidate generation via the bbox
     branch-and-bound with a k-element bound
-    (geometry.BoundaryIndex.nearest_k). stats_acc: optional dict collected
-    per-batch for candidate-reduction assertions (test use —
-    single-partition inputs only)."""
+    (geometry.BoundaryIndex.nearest_k)."""
     from .geometry import KM_PER_DEG
 
     spark = points.sparkSession
@@ -656,11 +642,7 @@ def knn_topk_join(points: DataFrame, index, k: int,
                 lon, lat = lon[sel], lat[sel]
             if not len(pdf):
                 continue
-            stats = {} if stats_acc is not None else None
-            pos, dist = idx.nearest_k(lon, lat, k, stats=stats)
-            if stats_acc is not None:
-                for key, v in stats.items():
-                    stats_acc[key] = stats_acc.get(key, 0) + v
+            pos, dist = idx.nearest_k(lon, lat, k)
             k_eff = pos.shape[1]
             rep = np.repeat(np.arange(len(pdf)), k_eff)
             out = pdf.iloc[rep].reset_index(drop=True)

@@ -41,7 +41,7 @@ class World:
         self._asg: DataFrame | None = None
         self._asg_fine: DataFrame | None = None
         self._tile_lookup = None
-        self._docs_cache: dict = {}
+        self._docs: DataFrame | None = None
         self._cache = cache_assignment
 
     def cells(self, name: str) -> DataFrame:
@@ -146,32 +146,34 @@ class World:
         world's tile table: the fused kernel's raster→vector lookup.
 
         Built on first call: self.tiles() is written through io.write_tiles
-        into a fresh temporary directory, removed at interpreter exit. A sink
-        left by an earlier run is never reused — fixture regeneration does
-        not clear extra directories, so it could be stale."""
+        into a fresh temporary directory, removed at interpreter exit, and
+        its shard list is planned from a snapshot-table import kept in the
+        same directory, so neither outlives the other. A sink left by an
+        earlier run is never reused — fixture regeneration does not clear
+        extra directories, so it could be stale."""
         if self._tile_lookup is None:
             root = tempfile.mkdtemp(prefix="aezspark-tiles-")
             atexit.register(shutil.rmtree, root, ignore_errors=True)
             sink = write_tiles(self.tiles(), os.path.join(root, "tiles"))
-            self._tile_lookup = tile_shard_lookup(self.spark, sink, self.fine)
+            self._tile_lookup = tile_shard_lookup(
+                self.spark, sink, self.fine,
+                tables_root=os.path.join(root, "tables"))
         return self._tile_lookup
 
     def documents(self) -> DataFrame:
         """The interleaved documents corpus, read through the snapshot-table
-        layer by default (north rule: "over Iceberg tables"): the fixture
+        layer (north rule: "over Iceberg tables"): the fixture
         parquet is zero-copy imported (Iceberg add_files-style — manifest
         registration, no rewrite) into build/tables/ keyed by the source's
         content fingerprint, and the scan is planned from the manifest's
         file list instead of a directory listing. Same physical files, same
-        plan shape → zero read overhead (bench prev-commit control ≈ 1.0).
-        AEZSPARK_RAW_PARQUET=1 opts out (A/B + oracle independence)."""
+        plan shape → zero read overhead."""
         from .tables import imported_read
 
-        src = os.path.join(self.fx_dir, "documents.parquet")
-        raw = os.environ.get("AEZSPARK_RAW_PARQUET") == "1"
-        if raw not in self._docs_cache:
-            self._docs_cache[raw] = imported_read(self.spark, src)
-        return self._docs_cache[raw]
+        if self._docs is None:
+            self._docs = imported_read(
+                self.spark, os.path.join(self.fx_dir, "documents.parquet"))
+        return self._docs
 
     def expected(self, name: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.fx_dir, f"expected_{name}.parquet"))

@@ -79,9 +79,6 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     # measured 1.09 s at 64 KB vs 0.89 s at 256 KB on the flagship docs
     # query, other queries equal-or-better.
     b = b.config("spark.sql.files.openCostInBytes", str(256 << 10))
-    mpb = os.environ.get("AEZSPARK_MAX_PARTITION_BYTES")
-    if mpb:
-        b = b.config("spark.sql.files.maxPartitionBytes", mpb)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _warm_worker_pools(spark, shuffle_partitions)
@@ -97,22 +94,30 @@ def _warm_worker_pools(spark, parallelism: int) -> None:
     once): the first Arrow-kernel stage otherwise pays ~3.5 s PER WORKER
     importing aezspark/pyarrow/pandas inside the timed query (measured: med
     task init 3.7 s → 0.17 s with this warmup). ~3 s at session creation,
-    outside any timed region."""
+    outside any timed region.
+
+    A failure here raises: a session whose workers cannot run the kernel
+    imports would fail every kernel stage later, so it is not healthy."""
     key = id(spark)
     if key in _WARMED:
         return
-    _WARMED.add(key)
+    import pandas as _pd
+
+    def _warm(it):
+        from aezspark import joins as _j  # noqa: F401 — kernel imports
+        import numpy as _np  # noqa: F401
+        import pyarrow as _pa  # noqa: F401
+        for b_ in it:
+            yield _pd.DataFrame({"id": b_["id"]})
+
+    n = max(parallelism * 2, 2)
     try:
-        import pandas as _pd
-
-        def _warm(it):
-            from aezspark import joins as _j  # noqa: F401 — kernel imports
-            import numpy as _np  # noqa: F401
-            import pyarrow as _pa  # noqa: F401
-            for b_ in it:
-                yield _pd.DataFrame({"id": b_["id"]})
-
-        n = max(parallelism * 2, 2)
-        (spark.range(0, n, 1, n).mapInPandas(_warm, "id long").count())
-    except Exception:
-        pass  # warmup must never break session creation
+        spark.range(0, n, 1, n).mapInPandas(_warm, "id long").count()
+    except Exception as e:
+        raise RuntimeError(
+            "Python worker warm-up failed: the workers could not run the "
+            "engine's kernel imports. Most likely they cannot import "
+            "aezspark: start the driver from the repo root, or ship "
+            "build/aezspark.zip with --py-files "
+            "(python tools/make_pyfiles.py builds it).") from e
+    _WARMED.add(key)

@@ -37,8 +37,7 @@ def read_cells(spark: SparkSession, fx_dir: str, name: str) -> DataFrame:
     the raster cell tables get it here): zero-copy manifest import with
     per-file cell_id min/max stats, so zonal/tile readers can file-skip via
     read(where=) and staleness (U12) covers every input. Plan shape and
-    bytes read are unchanged on a straight scan (same physical files).
-    AEZSPARK_RAW_PARQUET=1 falls back to the raw directory scan."""
+    bytes read are unchanged on a straight scan (same physical files)."""
     from .tables import imported_read
 
     return imported_read(spark, os.path.join(fx_dir, f"{name}.parquet"),

@@ -5,17 +5,15 @@ The reference is strictly batch (`__main__` scripts, process_imagery.py:511-516)
 the natural streaming surface a live corpus needs: a file-source stream of
 document parquet drops, enriched micro-batch by micro-batch with the SAME
 fused flagship kernel as the batch path (foreachBatch →
-documents.assign_zone_counts), with
-counts appended to a zone-count sink. Exactly-once comes from the streaming
-checkpoint + idempotent per-batch output paths.
+documents.assign_zone_counts), with counts appended to a snapshot-table sink
+(enrich_stream_to_table). Exactly-once comes from the streaming checkpoint +
+the sink's skip of already-committed batch ids.
 
 Late data / watermarks are N/A for this corpus (documents carry no event
 time); the offset column orders spans WITHIN a doc, not across the stream.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -41,32 +39,6 @@ def stream_documents(spark: SparkSession, in_dir: str,
             .parquet(in_dir))
 
 
-def enrich_stream(docs_stream: DataFrame, bidx, tile_lookup, fine,
-                  out_dir: str, checkpoint_dir: str):
-    """Streaming enrichment: per micro-batch, run the SAME fused flagship
-    kernel as the batch path (documents.assign_zone_counts: one Arrow pass
-    doing PIP + kNN + tile lookup + partition-local dedup + partial count;
-    the only shuffle carries (country, aez_code, n) partials — no per-batch
-    global distinct of doc rows). foreachBatch reuses the exact batch code
-    path — one engine, one plan shape, two execution modes."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def process(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        counts = (docs_mod.assign_zone_counts(batch_df, bidx, tile_lookup,
-                                              fine)
-                  .withColumn("batch_id", F.lit(batch_id)))
-        # idempotent per-batch path: a replayed batch overwrites itself
-        counts.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}"))
-
-    return (docs_stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
-
-
 def _max_stream_batch_id(tbl) -> int:
     """Highest stream batch_id ever committed to `tbl` (-1 for none).
     O(1): read from the current snapshot's `max_stream_batch_id` table
@@ -88,7 +60,10 @@ def enrich_stream_to_table(docs_stream: DataFrame, bidx, tile_lookup, fine,
                            table_dir: str, checkpoint_dir: str):
     """Streaming zone-count ingestion into a SNAPSHOT TABLE (north rule
     end-to-end: the streaming sink is the Iceberg-style layer too): each
-    micro-batch runs the fused flagship kernel and APPENDS one atomic
+    micro-batch runs the SAME fused flagship kernel as the batch path
+    (documents.assign_zone_counts: one Arrow pass doing PIP + kNN + tile
+    lookup + partition-local dedup + partial count; the only shuffle carries
+    (country, aez_code, n) partials) and APPENDS one atomic
     snapshot whose manifest records the stream batch_id. foreachBatch is
     at-least-once — a recovered stream can replay its last batch — so the
     sink SKIPS any batch_id it has already committed: at-least-once delivery
@@ -131,8 +106,10 @@ def enrich_stream_to_table(docs_stream: DataFrame, bidx, tile_lookup, fine,
 
 def read_zone_counts_table(spark: SparkSession, table_dir: str,
                            country: str | None = None) -> DataFrame:
-    """Merged view over the snapshot-table stream sink (manifest-planned
-    read of the current snapshot; same roll-up as read_zone_counts).
+    """Merged view over the snapshot-table stream sink: a manifest-planned
+    read of the current snapshot, summed per (country, aez_code) — a doc
+    lands in one micro-batch only (file-source semantics), so the sum is
+    exact.
 
     `country` routes through the manifest's per-file min/max stats
     (`read(where=...)`): micro-batch files whose country range provably
@@ -258,11 +235,3 @@ def windowed_event_counts(events_stream: DataFrame,
             .agg(F.count("*").alias("n"))
             .select(F.col("w.start").alias("window_start"),
                     F.col("w.end").alias("window_end"), "event_type", "n"))
-
-
-def read_zone_counts(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Merged view over the per-batch appends (a doc may appear in one batch
-    only — file-source semantics — so summing is exact)."""
-    df = spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
-    return (df.groupBy("country", "aez_code")
-            .agg(F.sum("n_docs").alias("n_docs")))

@@ -827,10 +827,7 @@ def imported_read(spark: SparkSession, src: str,
     the manifest. Same physical files, same plan shape → zero read
     overhead; regenerating the source in place yields a fresh import
     (staleness, U12). `stat_cols` records per-file min/max in the import
-    manifest so read(where=) file-skipping works on these inputs too.
-    AEZSPARK_RAW_PARQUET=1 opts out (A/B + oracle independence)."""
-    if os.environ.get("AEZSPARK_RAW_PARQUET") == "1":
-        return spark.read.parquet(src)
+    manifest so read(where=) file-skipping works on these inputs too."""
     return ensure_imported_table(spark, src, default_tables_root(),
                                  stat_cols=stat_cols).read()
 

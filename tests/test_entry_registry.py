@@ -2,10 +2,6 @@
 a 51st query would silently fall outside the checked window. Pin the invariant
 structurally so a future addition fails loudly here instead."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 DRIVER_WINDOW = 50
 
 

@@ -155,19 +155,17 @@ def test_world_documents_reads_snapshot_table_by_default(spark, world,
                                                          tmp_path,
                                                          monkeypatch):
     """North rule: the flagship documents substrate IS the snapshot-table
-    layer by default — same rows as the raw parquet, import materialized
-    under AEZSPARK_TABLES_ROOT."""
+    layer — same rows as the raw parquet, import materialized under
+    AEZSPARK_TABLES_ROOT."""
     from aezspark.pipelines import World
 
     root = str(tmp_path / "tables")
     monkeypatch.setenv("AEZSPARK_TABLES_ROOT", root)
-    monkeypatch.delenv("AEZSPARK_RAW_PARQUET", raising=False)
-    # fresh World: the fixture-scoped one memoizes documents() per mode
+    # fresh World: the fixture-scoped one memoizes documents()
     fresh = World(spark, world.fx_dir, cache_assignment=False)
     via_table = fresh.documents()
     assert os.listdir(root)  # the import happened here
-    monkeypatch.setenv("AEZSPARK_RAW_PARQUET", "1")
-    raw = fresh.documents()
+    raw = spark.read.parquet(os.path.join(world.fx_dir, "documents.parquet"))
     assert via_table.count() == raw.count()
     assert via_table.schema == raw.schema
     assert via_table.exceptAll(raw).count() == 0
@@ -503,12 +501,10 @@ def test_cell_tables_read_through_imports_with_stats(spark, world, tmp_path,
 
     root = str(tmp_path / "tables")
     monkeypatch.setenv("AEZSPARK_TABLES_ROOT", root)
-    monkeypatch.delenv("AEZSPARK_RAW_PARQUET", raising=False)
     via_table = sources.read_cells(spark, world.fx_dir, "cells_kg")
     imports = os.listdir(root)
     assert imports  # the import happened here
-    monkeypatch.setenv("AEZSPARK_RAW_PARQUET", "1")
-    raw = sources.read_cells(spark, world.fx_dir, "cells_kg")
+    raw = spark.read.parquet(os.path.join(world.fx_dir, "cells_kg.parquet"))
     assert via_table.schema == raw.schema
     assert via_table.exceptAll(raw).count() == 0
 
@@ -521,7 +517,6 @@ def test_cell_tables_read_through_imports_with_stats(spark, world, tmp_path,
     assert all(st.get("cell_id") for st in snap["stats"].values())
 
     # boundaries route through the layer too (no stat cols: broadcast dim)
-    monkeypatch.delenv("AEZSPARK_RAW_PARQUET", raising=False)
     b = sources.read_boundaries(spark, world.fx_dir)
     assert b.count() > 0
     assert len(os.listdir(root)) > len(imports)

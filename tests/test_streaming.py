@@ -1,6 +1,7 @@
 """Streaming ingestion: the file-source stream, enriched micro-batch by
-micro-batch with the same fused kernel, must reproduce the batch pipeline's
-zone counts exactly — and resume from its checkpoint when new files land."""
+micro-batch with the same fused kernel into the snapshot-table sink, must
+reproduce the batch pipeline's zone counts exactly — and resume from its
+checkpoint when new files land."""
 
 import os
 import shutil
@@ -9,7 +10,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from aezspark import documents as docs_mod, streaming as st
-from aezspark.joins import assign_points
 
 
 def _write_drops(world, in_dir, n_drops=3):
@@ -32,50 +32,63 @@ def _write_drops(world, in_dir, n_drops=3):
         shutil.rmtree(src)
 
 
-def test_stream_matches_batch(world, tmp_path):
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    cp_dir = str(tmp_path / "cp")
-    _write_drops(world, in_dir)
-
-    tl = world.tile_lookup()
-    q = st.enrich_stream(st.stream_documents(world.spark, in_dir),
-                         world.bidx, tl, world.fine, out_dir, cp_dir)
-    q.start().awaitTermination()
-
-    got = (st.read_zone_counts(world.spark, out_dir).toPandas()
-           .sort_values(["country", "aez_code"]).reset_index(drop=True))
-
-    pts = docs_mod.indexed_points(world.documents())
-    enriched = assign_points(pts, world.bidx, tile_lookup=tl, fine=world.fine,
-                             project=["doc_id"])
-    exp = (docs_mod.doc_zone_counts(enriched).toPandas()
-           .sort_values(["country", "aez_code"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, exp[got.columns.tolist()], check_dtype=False)
+def _counts(df):
+    return (df.toPandas().sort_values(["country", "aez_code"])
+            .reset_index(drop=True))
 
 
 def test_stream_resumes_from_checkpoint(world, tmp_path):
+    """Late files land after a finished run: the resumed availableNow run on
+    the SAME checkpoint appends snapshots for the late files only, and the
+    merged counts equal the batch counts over every file."""
+    from aezspark.tables import SnapshotTable
+
     in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
+    tbl_dir = str(tmp_path / "tbl")
     cp_dir = str(tmp_path / "cp")
-    _write_drops(world, in_dir, n_drops=2)
+    late_dir = tmp_path / "late"
+    _write_drops(world, in_dir, n_drops=3)
+    late_dir.mkdir()
+    late = [f for f in os.listdir(in_dir) if f.startswith("file_2_")]
+    for f in late:
+        shutil.move(os.path.join(in_dir, f), str(late_dir / f))
 
     tl = world.tile_lookup()
-    st.enrich_stream(st.stream_documents(world.spark, in_dir),
-                     world.bidx, tl, world.fine, out_dir, cp_dir).start().awaitTermination()
-    n_first = len(os.listdir(out_dir))
 
-    # new files land; a resumed availableNow run must process ONLY them
-    docs = world.documents().limit(200)
-    tmp = str(tmp_path / "extra")
-    docs.write.mode("overwrite").parquet(tmp)
-    for f in os.listdir(tmp):
-        if f.endswith(".parquet"):
-            shutil.move(os.path.join(tmp, f), os.path.join(in_dir, f"late_{f}"))
+    def run():
+        st.enrich_stream_to_table(st.stream_documents(world.spark, in_dir),
+                                  world.bidx, tl, world.fine, tbl_dir,
+                                  cp_dir).start().awaitTermination()
 
-    st.enrich_stream(st.stream_documents(world.spark, in_dir),
-                     world.bidx, tl, world.fine, out_dir, cp_dir).start().awaitTermination()
-    assert len(os.listdir(out_dir)) > n_first  # new batch dirs appended
+    run()
+    tbl = SnapshotTable(world.spark, tbl_dir)
+    snaps_first = [s["snapshot_id"] for s in tbl.snapshots()]
+    assert snaps_first
+
+    for f in late:
+        shutil.move(str(late_dir / f), os.path.join(in_dir, f))
+    run()
+    snaps = [s["snapshot_id"] for s in tbl.snapshots()]
+    assert snaps[:len(snaps_first)] == snaps_first
+    assert len(snaps) > len(snaps_first)  # new snapshots appended
+
+    # the appended snapshots hold exactly the late files' counts
+    appended = (tbl.read_appends(snaps_first[-1])
+                .groupBy("country", "aez_code")
+                .agg(F.sum("n_docs").alias("n_docs")))
+    late_docs = world.spark.read.schema(st.DOC_SCHEMA).parquet(
+        *[os.path.join(in_dir, f) for f in late])
+    want_late = _counts(docs_mod.assign_zone_counts(late_docs, world.bidx, tl,
+                                                    world.fine))
+    got_late = _counts(appended)
+    pd.testing.assert_frame_equal(got_late, want_late[got_late.columns.tolist()],
+                                  check_dtype=False)
+
+    got = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
+    exp = _counts(docs_mod.assign_zone_counts(world.documents(), world.bidx,
+                                              tl, world.fine))
+    pd.testing.assert_frame_equal(got, exp[got.columns.tolist()],
+                                  check_dtype=False)
 
 
 def test_stream_to_snapshot_table_matches_batch(world, tmp_path):
@@ -91,11 +104,9 @@ def test_stream_to_snapshot_table_matches_batch(world, tmp_path):
                               world.bidx, tl, world.fine, tbl_dir,
                               cp_dir).start().awaitTermination()
 
-    got = (st.read_zone_counts_table(world.spark, tbl_dir).toPandas()
-           .sort_values(["country", "aez_code"]).reset_index(drop=True))
-    exp = (docs_mod.assign_zone_counts(world.documents(), world.bidx, tl,
-                                       world.fine).toPandas()
-           .sort_values(["country", "aez_code"]).reset_index(drop=True))
+    got = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
+    exp = _counts(docs_mod.assign_zone_counts(world.documents(), world.bidx,
+                                              tl, world.fine))
     pd.testing.assert_frame_equal(got, exp[got.columns.tolist()],
                                   check_dtype=False)
 
@@ -122,16 +133,12 @@ def test_stream_table_sink_replay_is_idempotent(world, tmp_path):
     run("cp1")
     tbl = SnapshotTable(world.spark, tbl_dir)
     snaps_before = [s["snapshot_id"] for s in tbl.snapshots()]
-    counts_before = (st.read_zone_counts_table(world.spark, tbl_dir)
-                     .toPandas().sort_values(["country", "aez_code"])
-                     .reset_index(drop=True))
+    counts_before = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
     assert len(snaps_before) >= 2  # one atomic append per micro-batch
 
     run("cp2")  # full replay: fresh checkpoint, identical batch mapping
     assert [s["snapshot_id"] for s in tbl.snapshots()] == snaps_before
-    counts_after = (st.read_zone_counts_table(world.spark, tbl_dir)
-                    .toPandas().sort_values(["country", "aez_code"])
-                    .reset_index(drop=True))
+    counts_after = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
     pd.testing.assert_frame_equal(counts_after, counts_before)
 
 
@@ -161,10 +168,8 @@ def test_downstream_incremental_consume_and_compact(world, tmp_path):
     merged = (first.unionByName(tail)
               .groupBy("country", "aez_code")
               .agg(F.sum("n_docs").alias("n_docs")))
-    got = (merged.toPandas().sort_values(["country", "aez_code"])
-           .reset_index(drop=True))
-    exp = (st.read_zone_counts_table(world.spark, tbl_dir).toPandas()
-           .sort_values(["country", "aez_code"]).reset_index(drop=True))
+    got = _counts(merged)
+    exp = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
     pd.testing.assert_frame_equal(got, exp[got.columns.tolist()],
                                   check_dtype=False)
 
@@ -230,15 +235,11 @@ def test_stream_table_sink_replay_safe_after_expiry(world, tmp_path):
     tbl.expire_snapshots(keep_last=1)
     assert len(tbl.snapshots()) == 1  # the batch_id summaries are GONE
     assert tbl.snapshots()[0]["operation"] == "replace"
-    counts_before = (st.read_zone_counts_table(world.spark, tbl_dir)
-                     .toPandas().sort_values(["country", "aez_code"])
-                     .reset_index(drop=True))
+    counts_before = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
 
     run("cp2")  # fresh checkpoint: full replay, batch ids 0..1 again
     assert len(tbl.snapshots()) == 1  # nothing committed
-    counts_after = (st.read_zone_counts_table(world.spark, tbl_dir)
-                    .toPandas().sort_values(["country", "aez_code"])
-                    .reset_index(drop=True))
+    counts_after = _counts(st.read_zone_counts_table(world.spark, tbl_dir))
     pd.testing.assert_frame_equal(counts_after, counts_before)
 
 

@@ -2,6 +2,7 @@
 produce exactly the same rows as the two-stage path (assign → with_aez
 equi-join)."""
 
+import glob
 import os
 
 import numpy as np
@@ -36,6 +37,12 @@ def _sink(world):
     return os.path.dirname(os.path.dirname(paths[0]))
 
 
+@pytest.fixture
+def tables(tmp_path):
+    """Where a test's shard-manifest imports live."""
+    return str(tmp_path / "tables")
+
+
 @pytest.fixture(scope="module")
 def sink36(world, tmp_path_factory):
     """A sink with dozens of shards (36 px tiles): more than a small LRU
@@ -54,7 +61,7 @@ def test_fused_kernel_matches_join_path(world):
     pd.testing.assert_frame_equal(got, _join_path(world), check_dtype=False)
 
 
-def test_shard_lookup_matches_broadcast_rows(world, sink36):
+def test_shard_lookup_matches_broadcast_rows(world, sink36, tables):
     """The shard-manifest lookup must produce the with_aez broadcast join's
     rows at the default LRU and with an adversarially tiny LRU (1 shard),
     which can only cost re-reads, never answers — also when the points
@@ -65,16 +72,16 @@ def test_shard_lookup_matches_broadcast_rows(world, sink36):
     pts = docs_mod.indexed_points(world.documents())
     shuffled = pts.orderBy(F.rand(seed=7))
     lru1 = tile_shard_lookup(world.spark, _sink(world), world.fine,
-                             max_cached_shards=1)
+                             max_cached_shards=1, tables_root=tables)
     lru8 = tile_shard_lookup(world.spark, sink36, world.fine, tile_px=36,
-                             max_cached_shards=8)
+                             max_cached_shards=8, tables_root=tables)
     for tl, points in [(world.tile_lookup(), pts), (lru1, pts),
                        (lru1, shuffled), (lru8, shuffled)]:
         pd.testing.assert_frame_equal(_fused(world, points, tl), want,
                                       check_dtype=False)
 
 
-def test_shard_lookup_miss_bound(world, sink36, monkeypatch):
+def test_shard_lookup_miss_bound(world, sink36, tables, monkeypatch):
     """A batch needing K shards, with C < K of them cached, reads exactly
     K - C shards: cached shards are probed before any miss can evict them.
     Probing in ascending tile order instead would miss all K on the repeat
@@ -83,13 +90,13 @@ def test_shard_lookup_miss_bound(world, sink36, monkeypatch):
     lon = rng.uniform(-180.0, 180.0, 20_000)
     lat = rng.uniform(-89.9, 89.9, 20_000)
     big = tile_shard_lookup(world.spark, sink36, world.fine, tile_px=36,
-                            max_cached_shards=10_000).value
+                            max_cached_shards=10_000, tables_root=tables).value
     fy, fx = world.fine.lonlat_to_yx(lon, lat)
     tid = np.unique((fy // 36) * big.n_tiles_x + fx // 36).tolist()
     k = sum(len(big.shard_paths.get(t, ())) for t in tid)
     c = k // 3
     small = tile_shard_lookup(world.spark, sink36, world.fine, tile_px=36,
-                              max_cached_shards=c).value
+                              max_cached_shards=c, tables_root=tables).value
 
     load, reads = joins._load_shard, []
 
@@ -111,7 +118,7 @@ def test_shard_lookup_miss_bound(world, sink36, monkeypatch):
     assert (want != 255).any()
 
 
-def test_shard_lookup_zone_counts_parity(world):
+def test_shard_lookup_zone_counts_parity(world, tables):
     """sp_doc_zone_counts parity with the shard path forced: the fused
     emit='zone_counts' kernel over the shard lookup — at the default LRU and
     at a 1-shard LRU — equals the composed with_aez broadcast join exactly,
@@ -126,7 +133,7 @@ def test_shard_lookup_zone_counts_parity(world):
         world.tiles(), world.fine)
     want = counts(docs_mod.doc_zone_counts(enriched))
     lru1 = tile_shard_lookup(world.spark, _sink(world), world.fine,
-                             max_cached_shards=1)
+                             max_cached_shards=1, tables_root=tables)
     for tl in (world.tile_lookup(), lru1):
         got = counts(docs_mod.assign_zone_counts(
             world.documents(), world.bidx, tl, world.fine))
@@ -145,17 +152,25 @@ def test_shard_lookup_broadcasts_only_the_manifest(world):
     assert len(pickle.dumps(v)) < 64_000
 
 
-def test_shard_lookup_manifest_planned(world, tmp_path):
-    """tables_root routes shard planning through the snapshot-table import
-    (manifest read, no directory walk at scale); results are identical."""
-    manifest = tile_shard_lookup(world.spark, _sink(world), world.fine,
-                                 tables_root=str(tmp_path / "tables"))
-    assert (manifest.value.shard_paths
-            == world.tile_lookup().value.shard_paths)
+def test_shard_lookup_manifest_planned(world, sink36, tables):
+    """The shard list is planned from the snapshot-table import's manifest
+    (no directory walk): its shard set is exactly the sink's
+    tile_id=*/*.parquet files, each under the tile its directory names."""
+    lookup = tile_shard_lookup(world.spark, sink36, world.fine, tile_px=36,
+                               tables_root=tables).value
+    listed = glob.glob(os.path.join(os.path.realpath(sink36),
+                                    "tile_id=*", "*.parquet"))
+    assert len(listed) > 2
+    planned = [p for ps in lookup.shard_paths.values() for p in ps]
+    assert sorted(planned) == sorted(listed)
+    for tid, ps in lookup.shard_paths.items():
+        assert {os.path.basename(os.path.dirname(p)) for p in ps} == {
+            f"tile_id={tid}"}
 
 
-def test_shard_lookup_refuses_wrong_geometry(world):
+def test_shard_lookup_refuses_wrong_geometry(world, tables):
     """A wrong tile_px would silently route every lookup to the wrong shard
     (all-255): the constructor validates against a real shard and refuses."""
     with pytest.raises(ValueError, match="tile geometry mismatch"):
-        tile_shard_lookup(world.spark, _sink(world), world.fine, tile_px=64)
+        tile_shard_lookup(world.spark, _sink(world), world.fine, tile_px=64,
+                          tables_root=tables)

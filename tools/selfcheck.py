@@ -15,7 +15,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SELFCHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
