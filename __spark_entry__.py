@@ -28,10 +28,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 
 from aezspark import corpus, documents as docs_mod
-from aezspark.fixtures.generate import ensure_fixtures
+from aezspark.fixtures.generate import DEFAULT_DIR, ensure_fixtures
 from aezspark.grid import GridSpec, km2_col
 
-FX_DIR = "/root/repo/build/fixtures/test"
+_BUILD = os.path.join(os.path.dirname(os.path.abspath(__file__)), "build")
+FX_DIR = DEFAULT_DIR
 
 _WORLDS: dict[int, object] = {}
 
@@ -487,7 +488,7 @@ def q_ann_buckets(spark, sf_dir):
     return corpus.lsh_bucket_ids(emb, planes)
 
 
-_ANN_INDEX_BASE = "/root/repo/build/ann_index"
+_ANN_INDEX_BASE = os.path.join(_BUILD, "ann_index")
 _ANN_INDEX_CACHE: dict = {}
 _TRAINED_CENTROIDS_CACHE: dict = {}
 
@@ -633,7 +634,7 @@ def q_streaming_dedup(spark, sf_dir):
     # fixed per-repo workdir, wiped on entry: repeated driver/selfcheck runs
     # must not accumulate corpus copies under /tmp (which shares space with
     # the tmpfs shuffle dirs)
-    work = "/root/repo/build/tmp/streamdedup"
+    work = os.path.join(_BUILD, "tmp", "streamdedup")
     shutil.rmtree(work, ignore_errors=True)
     in_dir = os.path.join(work, "in")
     out_dir = os.path.join(work, "out")

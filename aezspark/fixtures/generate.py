@@ -225,7 +225,9 @@ def gen_raw_slope(ny: int = 240, nx: int = 240) -> pa.Table:
                      "slope": pa.array(slope[keep])})
 
 
-DEFAULT_DIR = "/root/repo/build/fixtures/test"
+DEFAULT_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "build", "fixtures", "test")
 
 
 def ensure_fixtures(out_dir: str = DEFAULT_DIR, coarse_px: float = 2.5,

@@ -4,13 +4,21 @@ Arrow on (all geometry kernels are Arrow-batched pandas UDFs), AQE on
 (runtime coalesce + skew-join for the equi-join paths; the broadcast PIP path
 has no shuffle to skew), shuffle partitions sized to the local core count
 rather than the 200 default.
+
+On local masters the Python workers start through ``aezspark/worker-python``,
+which keeps Spark's own archives off the workers' import path (see
+``_create``).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "worker-python")
 
 
 def get_spark(app: str = "aezspark", master: str | None = None,
@@ -77,12 +85,55 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     # smaller splits made the fused docs kernel's Arrow batches small enough
     # that its per-batch fixed work (the shard-manifest tile lookup) showed —
     # measured 1.09 s at 64 KB vs 0.89 s at 256 KB on the flagship docs
-    # query, other queries equal-or-better.
+    # query, other queries equal-or-better. Both timings predate
+    # WORKER_PYTHON, when every task also paid ~0.2 s re-reading Spark's
+    # archives, so they overstate what an extra split costs now.
     b = b.config("spark.sql.files.openCostInBytes", str(256 << 10))
-    spark = b.getOrCreate()
+    spark = _create(b, master)
     spark.sparkContext.setLogLevel("WARN")
+    _require_matching_pyspark(spark.version, pyspark.__version__, "driver")
     _warm_worker_pools(spark, shuffle_partitions)
     return spark
+
+
+def _create(builder, master: str) -> SparkSession:
+    """getOrCreate, with local-master Python workers started through
+    WORKER_PYTHON, which saves each task ~0.2 s of re-reading Spark's
+    archives (BENCH/BASELINE.md "Per-task Python floor").
+
+    The in-process driver reads the worker interpreter only from
+    PYSPARK_PYTHON (a builder spark.pyspark.python is ignored), so that
+    points at the launcher while the session is created and is restored
+    after; the user's interpreter reaches the launcher as the workers' own
+    PYSPARK_PYTHON. Executors of other masters do not share this
+    filesystem (README "Worker interpreter"), and an aezspark imported from
+    a --py-files archive has no launcher file to exec: their workers start
+    as Spark starts them."""
+    if not (master.startswith("local") and os.access(WORKER_PYTHON, os.X_OK)):
+        return builder.getOrCreate()
+    configured = os.environ.get("PYSPARK_PYTHON")
+    builder.config("spark.executorEnv.PYSPARK_PYTHON", configured or "python3")
+    os.environ["PYSPARK_PYTHON"] = WORKER_PYTHON
+    try:
+        return builder.getOrCreate()
+    finally:
+        if configured is None:
+            del os.environ["PYSPARK_PYTHON"]
+        else:
+            os.environ["PYSPARK_PYTHON"] = configured
+
+
+def _require_matching_pyspark(spark_version: str, pyspark_version: str,
+                             where: str) -> None:
+    """Raise unless the pyspark a process imports is the JVM's version: the
+    workers import the interpreter's installed pyspark, not the copy Spark
+    ships, and a different version would speak a different worker
+    protocol."""
+    if pyspark_version != spark_version:
+        raise RuntimeError(
+            f"pyspark {pyspark_version} on the {where} does not match Spark "
+            f"{spark_version} in the JVM: install pyspark=={spark_version} "
+            f"for the {where}'s interpreter.")
 
 
 _WARMED: set = set()
@@ -92,9 +143,12 @@ def _warm_worker_pools(spark, parallelism: int) -> None:
     """Pre-fork the Arrow Python worker pool and run the engine's kernel
     import chain in it, once per session (guide §4.5 — heavyweight init
     once): the first Arrow-kernel stage otherwise pays ~3.5 s PER WORKER
-    importing aezspark/pyarrow/pandas inside the timed query (measured: med
-    task init 3.7 s → 0.17 s with this warmup). ~3 s at session creation,
-    outside any timed region.
+    importing aezspark/pyarrow/pandas inside the timed query (measured
+    before WORKER_PYTHON: med task init 3.7 s → 0.17 s with this warmup;
+    the launcher then removed ~0.2 s of per-task archive re-read). ~3 s at
+    session creation, outside any timed region. Each warm-up task also
+    reports the pyspark version its worker imported, which must match the
+    JVM's.
 
     A failure here raises: a session whose workers cannot run the kernel
     imports would fail every kernel stage later, so it is not healthy."""
@@ -107,17 +161,23 @@ def _warm_worker_pools(spark, parallelism: int) -> None:
         from aezspark import joins as _j  # noqa: F401 — kernel imports
         import numpy as _np  # noqa: F401
         import pyarrow as _pa  # noqa: F401
+        import pyspark as _ps
         for b_ in it:
-            yield _pd.DataFrame({"id": b_["id"]})
+            yield _pd.DataFrame({"v": [_ps.__version__] * len(b_)})
 
     n = max(parallelism * 2, 2)
     try:
-        spark.range(0, n, 1, n).mapInPandas(_warm, "id long").count()
+        rows = spark.range(0, n, 1, n).mapInPandas(_warm, "v string").collect()
     except Exception as e:
         raise RuntimeError(
             "Python worker warm-up failed: the workers could not run the "
             "engine's kernel imports. Most likely they cannot import "
             "aezspark: start the driver from the repo root, or ship "
             "build/aezspark.zip with --py-files "
-            "(python tools/make_pyfiles.py builds it).") from e
+            "(python tools/make_pyfiles.py builds it). Local-master workers "
+            "start through aezspark/worker-python and import the pyspark "
+            "installed for the worker interpreter, so that interpreter "
+            "needs one too.") from e
+    for v in {r.v for r in rows}:
+        _require_matching_pyspark(spark.version, v, "workers")
     _WARMED.add(key)

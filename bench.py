@@ -19,12 +19,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 def bench_fx_dir(n_docs: int) -> str:
     # size-keyed dir: switching corpus size must not clobber (and force a
     # 30-minute regeneration of) a previously generated corpus
-    return f"/root/repo/build/fixtures/bench_{n_docs}"
+    return os.path.join(REPO, "build", "fixtures", f"bench_{n_docs}")
 
 
 _WORLD_CACHE: dict = {}

@@ -2,7 +2,7 @@
 
     python tools/make_pyfiles.py
     spark-submit --py-files build/aezspark.zip jobs/run_aez.py \
-        --fixtures /root/repo/build/fixtures/test --out /tmp/aez_run \
+        --fixtures build/fixtures/test --out /tmp/aez_run \
         [--resume] [--queries kg,wk,aez,tiles,docs,dedup]
 
 On a cluster, --py-files ships the engine; locally it runs in the driver.
@@ -17,12 +17,14 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--fixtures", default="/root/repo/build/fixtures/test")
+    ap.add_argument("--fixtures",
+                    default=os.path.join(REPO, "build", "fixtures", "test"))
     ap.add_argument("--out", required=True)
     ap.add_argument("--queries", default="wk,kg,aez,tiles,docs")
     ap.add_argument("--batch-size", type=int, default=4)

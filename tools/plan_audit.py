@@ -61,7 +61,7 @@ def main():
     from aezspark.pipelines import World
 
     spark = get_spark("plan-audit", master="local[8]")
-    fx = ensure_fixtures("/root/repo/build/fixtures/test")
+    fx = ensure_fixtures()
     w = World(spark, fx)
     plans = headline_plans(spark, w, SF_DIR)
 
