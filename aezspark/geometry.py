@@ -115,20 +115,38 @@ def point_seg_dist_deg(lon, lat, x1, y1, x2, y2):
     lat = np.asarray(lat, dtype=np.float64)[:, None]
     scale = np.cos(np.radians(lat))
     px = lon * scale
-    py = lat
-    ax1 = np.asarray(x1, dtype=np.float64)[None, :] * scale
-    ay1 = np.asarray(y1, dtype=np.float64)[None, :] + 0.0 * px
-    ax2 = np.asarray(x2, dtype=np.float64)[None, :] * scale
-    ay2 = np.asarray(y2, dtype=np.float64)[None, :] + 0.0 * px
-    dx = ax2 - ax1
-    dy = ay2 - ay1
-    seg_len2 = dx * dx + dy * dy
-    seg_len2 = np.where(seg_len2 == 0.0, 1e-300, seg_len2)
-    t = ((px - ax1) * dx + (py - ay1) * dy) / seg_len2
-    t = np.clip(t, 0.0, 1.0)
-    cx = ax1 + t * dx
-    cy = ay1 + t * dy
-    return np.sqrt((px - cx) ** 2 + (py - cy) ** 2)
+    # 0.0 * px is NaN for an infinite longitude: its whole row is NaN
+    py = lat + 0.0 * px
+    x1 = np.asarray(x1, dtype=np.float64)[None, :]
+    y1 = np.asarray(y1, dtype=np.float64)[None, :]
+    dy = np.asarray(y2, dtype=np.float64)[None, :] - y1
+    # three (N, M) buffers updated in place, every value in the operation
+    # order of the dense formula the tests freeze, so results are
+    # bit-identical to it; x1 * scale is computed twice instead of kept
+    dx = np.asarray(x2, dtype=np.float64)[None, :] * scale
+    t = x1 * scale
+    np.subtract(dx, t, out=dx)
+    np.subtract(px, t, out=t)
+    t *= dx
+    w = np.subtract(py, y1)
+    w *= dy
+    t += w
+    np.multiply(dx, dx, out=w)
+    w += dy * dy  # segment length²
+    np.copyto(w, 1e-300, where=w == 0.0)
+    t /= w
+    np.clip(t, 0.0, 1.0, out=t)
+    np.multiply(x1, scale, out=w)
+    dx *= t
+    w += dx  # closest point x
+    np.subtract(px, w, out=w)
+    w *= w
+    t *= dy
+    t += y1  # closest point y
+    np.subtract(py, t, out=t)
+    t *= t
+    w += t
+    return np.sqrt(w, out=w)
 
 
 def haversine_km(lat1, lon1, lat2, lon2):
@@ -325,7 +343,11 @@ class BoundaryIndex:
             pt, pp = pt[first], pp[first]
         return pt, pp
 
-    SEG_CHUNK = 2_000_000  # max points×segments distance cells per allocation
+    # max points × segments distance cells per point_seg_dist_deg call: a
+    # bound on cells, not bytes. Each cell holds at most three float64
+    # temporaries and one bool mask at once (25 B), so ~50 MB per worker at
+    # the bound, reached by nearest()'s dense path and by _feat_dist chunks
+    SEG_CHUNK = 2_000_000
 
     def _feat_dist(self, lon, lat, f: int):
         """Exact min boundary distance from points to feature f's segments,
@@ -564,8 +586,10 @@ class BoundaryIndex:
                 np.concatenate(out_d))
 
     def nearest_bruteforce(self, lon, lat):
-        """Dense (points × all segments) scan — the test baseline for
-        nearest(); never used in production kernels."""
+        """Dense (points × all segments) scan: nearest()'s path for every
+        batch with points × segments ≤ SEG_CHUNK (every bench batch on the
+        fixture boundaries), and the tests' baseline for its
+        branch-and-bound path."""
         lon = np.atleast_1d(np.asarray(lon, dtype=np.float64))
         lat = np.atleast_1d(np.asarray(lat, dtype=np.float64))
         d = point_seg_dist_deg(lon, lat, self.seg_x1, self.seg_y1,

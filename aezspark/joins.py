@@ -369,6 +369,35 @@ def _check_tile_lookup(tile_lookup, fine: GridSpec | None) -> None:
         raise ValueError("assign_points: tile_lookup requires the fine grid")
 
 
+def _one_wave(points: DataFrame) -> DataFrame:
+    """Plan a small kernel input as one wave of Python tasks, one per core:
+    the inverse of corpus._spread. Every Python task pays a fixed cost (the
+    worker hand-off, Arrow stream set-up, and in the fused kernel a tile
+    lookup per batch that can touch most shards), while the session's 3-waves
+    scan sizing (session.py) cuts even a few-MB documents file into 3 ×
+    cores splits. So when the optimizer's size estimate of `points` is below
+    one max-size scan split (Spark's spark.sql.files.maxPartitionBytes) the
+    input is coalesced to defaultParallelism partitions; at or above it the
+    scan's own 3-waves plan stands, because there the kernel work dominates
+    and the waves balance it.
+
+    coalesce is narrow: it adds no Exchange and merges whole partitions, so
+    every row of one doc stays in one partition (the emit='zone_counts'
+    precondition), and an input with ≤ cores partitions keeps them. The size
+    is a property of the optimized logical plan: no physical plan and no
+    .rdd are built. A streaming input has no finite size and passes
+    through."""
+    if points.isStreaming:
+        return points
+    spark = points.sparkSession
+    size = int(points._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if size >= max_split:
+        return points
+    return points.coalesce(spark.sparkContext.defaultParallelism)
+
+
 def assign_points(points: DataFrame, index, lat_col: str = "lat",
                   lon_col: str = "lon", knn_fallback: bool = True,
                   tile_lookup=None,
@@ -415,6 +444,7 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
         if doc_col not in [f.name for f in points.schema.fields]:
             raise ValueError(f"assign_points(emit='zone_counts') requires a "
                              f"{doc_col!r} column")
+    points = _one_wave(points)
     spark = points.sparkSession
     bidx = index if hasattr(index, "value") else broadcast_index(spark, index)
 
@@ -475,13 +505,14 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
         #
         # MEMORY BOUND: the irreducible per-partition working set is this
         # partition's TRUE distinct (combo, key) set — ≤ the partition's
-        # match-row count ≤ (split rows × match multiplicity), i.e. tens of
-        # MB as int64 pairs at the 64 MB local / core-aware split sizing
-        # (session.py). Transient growth ABOVE that (per-batch-deduped
-        # frames accumulating cross-batch duplicates) is capped by
-        # incremental compaction at ZC_DEDUP_BUDGET_ROWS (4M pairs ≈
-        # 64 MB): when the pending frames exceed the budget they
-        # are concat+dedup-compacted in place; if the compacted distinct set
+        # match-row count ≤ (partition rows × match multiplicity), i.e. tens
+        # of MB as int64 pairs: a partition holds one core-aware scan split
+        # (session.py) or, coalesced by _one_wave, less than one max-size
+        # split of input in total. Transient growth ABOVE that
+        # (per-batch-deduped frames accumulating cross-batch duplicates) is
+        # capped by incremental compaction at ZC_DEDUP_BUDGET_ROWS (4M pairs
+        # ≈ 64 MB): when the pending frames exceed the budget they are
+        # concat+dedup-compacted in place; if the compacted distinct set
         # itself exceeds the budget, the budget doubles (amortized O(n)
         # compaction work) — the kernel then degrades gracefully toward the
         # irreducible bound instead of holding every duplicate until EOF.

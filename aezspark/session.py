@@ -51,7 +51,8 @@ def get_spark(app: str = "aezspark", master: str | None = None,
          # tens of seconds in this single-JVM setup (measured 45s → 6.5s on
          # the PIP assign stage at local[32] after switching); ParallelGC +
          # a moderate heap is stable
-         .config("spark.driver.memory", os.environ.get("AEZSPARK_DRIVER_MEM", "16g"))
+         .config("spark.driver.memory",
+                 os.environ.get("AEZSPARK_DRIVER_MEM", _default_driver_memory()))
          .config("spark.driver.extraJavaOptions",
                  os.environ.get("AEZSPARK_JAVA_OPTS", "-XX:+UseParallelGC"))
          .config("spark.ui.enabled", "false"))
@@ -68,7 +69,12 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     # vs 128 MB = 32.9 s (round 3 measured the opposite with the heavier
     # string-key kernel — superseded; BENCH/BASELINE.md). The same 2-3
     # tasks/core rule is the standard sizing on a real cluster, where
-    # default.parallelism = total executor cores.
+    # default.parallelism = total executor cores. The Python kernel stage
+    # has its own rule for small inputs: joins.assign_points coalesces an
+    # input estimated below one maxPartitionBytes split to one task per
+    # core (joins._one_wave), since there the per-task Python cost
+    # outweighs the wave balance (BENCH/BASELINE.md "One kernel wave for
+    # small inputs").
     b = b.config("spark.sql.files.minPartitionNum",
                  str(shuffle_partitions * 3))
     # openCostInBytes FLOORS the split size: maxSplitBytes =
@@ -94,6 +100,15 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     _require_matching_pyspark(spark.version, pyspark.__version__, "driver")
     _warm_worker_pools(spark, shuffle_partitions)
     return spark
+
+
+def _default_driver_memory() -> str:
+    """16g, or half the host's physical memory where that is less. The one
+    local JVM holds the driver, every task and the broadcast dims, and a
+    heap larger than the host can back fails by the OS killing a process,
+    not by GC pressure showing first."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, physical // 2 >> 20)}m"
 
 
 def _create(builder, master: str) -> SparkSession:

@@ -4,7 +4,11 @@ docs partition-locally inside the assign kernel, so no doc id crosses a
 shuffle). It must equal the composed reference
 doc_zone_counts(with_aez(assign_documents(...))) exactly, and its
 co-location precondition must be demonstrably load-bearing (a scrambled
-input over-counts)."""
+input over-counts). A kernel input smaller than one max-size scan split runs
+as one wave of Python tasks, one per core; a larger one keeps its scan
+splits."""
+
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -18,6 +22,31 @@ def _enriched(world):
 
 def _as_dict(df):
     return {(r.country, r.aez_code): r.n_docs for r in df.collect()}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _estimated_bytes(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+@contextmanager
+def _max_partition_bytes(spark, n: int):
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _many_split_points(spark, n_parts: int):
+    """One doc per row, in n_parts partitions, all inside the test square."""
+    return spark.range(0, 40 * n_parts, 1, n_parts).selectExpr(
+        "id AS doc_id", "4.0 + (id % 7) * 0.5 AS lon", "4.0 AS lat")
 
 
 def test_fused_plan_has_no_wide_shuffle_of_doc_ids(spark, world):
@@ -149,3 +178,53 @@ def test_fused_kernel_null_country_is_true_null(spark, world):
     assert counts == {None: 1, "X": 1}
     rows = assign_points(pts, idx, tile_lookup=tl, fine=world.fine)
     assert {r.country for r in rows.select("country").collect()} == {None, "X"}
+
+
+def test_small_kernel_input_runs_one_wave(spark, world):
+    """The fixture docs are far below one max-size split: the fused plan
+    coalesces the kernel input to defaultParallelism (a narrow Coalesce, no
+    Exchange below the kernel), and an input planned as 3 × cores
+    partitions reaches the kernel as one task per core."""
+    cores = spark.sparkContext.defaultParallelism
+    plan = _plan(docs_mod.assign_zone_counts(
+        world.documents(), world.bidx, world.tile_lookup(), world.fine))
+    assert f"Coalesce {cores}" in plan
+    below_kernel = plan[plan.index("MapInPandas"):]
+    assert "Exchange" not in below_kernel
+    pts = _many_split_points(spark, 3 * cores)
+    assert pts.rdd.getNumPartitions() == 3 * cores
+    kernel = joins.assign_points(pts, world.bidx, tile_lookup=world.tile_lookup(),
+                                 fine=world.fine, emit="zone_counts",
+                                 project=["doc_id"])
+    assert kernel.rdd.getNumPartitions() == cores
+
+
+def test_kernel_input_of_one_split_or_more_keeps_its_splits(spark, world):
+    """The rule's boundary: an input estimated at maxPartitionBytes or more is
+    left as the scan planned it (no Coalesce), one byte less coalesces, and
+    the zone counts are equal either way."""
+    cores = spark.sparkContext.defaultParallelism
+    tl = world.tile_lookup()
+    docs = world.documents()
+    base = _as_dict(docs_mod.assign_zone_counts(docs, world.bidx, tl,
+                                                world.fine))
+    size = _estimated_bytes(docs_mod.geo_key_points(docs))
+    with _max_partition_bytes(spark, size):
+        fused = docs_mod.assign_zone_counts(docs, world.bidx, tl, world.fine)
+        assert "Coalesce" not in _plan(fused)
+        assert _as_dict(fused) == base and sum(base.values()) > 0
+    with _max_partition_bytes(spark, size + 1):
+        assert f"Coalesce {cores}" in _plan(docs_mod.assign_zone_counts(
+            docs, world.bidx, tl, world.fine))
+    pts = _many_split_points(spark, 3 * cores)
+    with _max_partition_bytes(spark, _estimated_bytes(pts)):
+        kernel = joins.assign_points(pts, world.bidx, tile_lookup=tl,
+                                     fine=world.fine, emit="zone_counts",
+                                     project=["doc_id"])
+        assert kernel.rdd.getNumPartitions() == 3 * cores
+
+
+def test_streaming_kernel_input_is_not_coalesced(spark):
+    """A streaming input has no finite size estimate: it passes through."""
+    stream = spark.readStream.format("rate").load()
+    assert joins._one_wave(stream) is stream

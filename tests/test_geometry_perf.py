@@ -7,7 +7,8 @@ import time
 import numpy as np
 import pytest
 
-from aezspark.geometry import BoundaryIndex, Polygon, point_in_ring
+from aezspark.geometry import (BoundaryIndex, Polygon, point_in_ring,
+                               point_seg_dist_deg)
 
 
 def _ref_point_in_ring(lon, lat, ring_lons, ring_lats):
@@ -31,6 +32,29 @@ def _ref_point_in_ring(lon, lat, ring_lons, ring_lats):
     return inside
 
 
+def _ref_point_seg_dist_deg(lon, lat, x1, y1, x2, y2):
+    """Frozen dense formula (twelve (N, M) temporaries) — the bit-parity
+    baseline of point_seg_dist_deg's in-place form."""
+    lon = np.asarray(lon, dtype=np.float64)[:, None]
+    lat = np.asarray(lat, dtype=np.float64)[:, None]
+    scale = np.cos(np.radians(lat))
+    px = lon * scale
+    py = lat
+    ax1 = np.asarray(x1, dtype=np.float64)[None, :] * scale
+    ay1 = np.asarray(y1, dtype=np.float64)[None, :] + 0.0 * px
+    ax2 = np.asarray(x2, dtype=np.float64)[None, :] * scale
+    ay2 = np.asarray(y2, dtype=np.float64)[None, :] + 0.0 * px
+    dx = ax2 - ax1
+    dy = ay2 - ay1
+    seg_len2 = dx * dx + dy * dy
+    seg_len2 = np.where(seg_len2 == 0.0, 1e-300, seg_len2)
+    t = ((px - ax1) * dx + (py - ay1) * dy) / seg_len2
+    t = np.clip(t, 0.0, 1.0)
+    cx = ax1 + t * dx
+    cy = ay1 + t * dy
+    return np.sqrt((px - cx) ** 2 + (py - cy) ** 2)
+
+
 def _star_ring(n_vertices: int, cx=10.0, cy=20.0, r0=8.0, r1=15.0):
     """Concave star polygon with n_vertices vertices (closed ring)."""
     ang = np.linspace(0.0, 2 * np.pi, n_vertices, endpoint=False)
@@ -49,6 +73,36 @@ def test_point_in_ring_parity_random_points():
     ref = _ref_point_in_ring(lon, lat, xs, ys)
     assert (got == ref).all()
     assert got.any() and not got.all()  # non-degenerate fixture
+
+
+def test_point_seg_dist_bit_identical_to_dense_formula():
+    """The in-place distance equals the frozen dense formula bit for bit
+    (uint64 view, so NaN payloads and zero signs count too) on random
+    points and segments plus the edge cases: zero-length segments, ±0.0
+    coordinates, NaN and infinite points and latitudes within 1e-9 of the
+    poles."""
+    rng = np.random.default_rng(11)
+    lon = np.concatenate([rng.uniform(-180, 180, 400),
+                          [0.0, -0.0, 0.0, -0.0, np.nan, 3.0, np.nan,
+                           12.5, -170.0, 179.9, 0.0, np.inf, -np.inf]])
+    lat = np.concatenate([rng.uniform(-89.9, 89.9, 400),
+                          [0.0, 0.0, -0.0, -0.0, 4.0, np.nan, np.nan,
+                           90.0, -90.0, 90.0 - 1e-9, -90.0 + 1e-9, 1.0, -0.0]])
+    x1 = np.concatenate([rng.uniform(-180, 180, 60),
+                         [0.0, -0.0, 5.0, -0.0, 0.0, 170.0, -179.0]])
+    y1 = np.concatenate([rng.uniform(-89.9, 89.9, 60),
+                         [0.0, -0.0, 5.0, 0.0, 89.999, 90.0, -90.0]])
+    # zero-length: x2/y2 equal x1/y1 in the last seven, with signed zeros
+    x2 = np.concatenate([rng.uniform(-180, 180, 60),
+                         [-0.0, 0.0, 5.0, -0.0, 0.0, 170.0, -179.0]])
+    y2 = np.concatenate([rng.uniform(-89.9, 89.9, 60),
+                         [-0.0, 0.0, 5.0, -0.0, 89.999, 90.0, -90.0]])
+    with np.errstate(invalid="ignore"):
+        got = point_seg_dist_deg(lon, lat, x1, y1, x2, y2)
+        want = _ref_point_seg_dist_deg(lon, lat, x1, y1, x2, y2)
+    assert got.shape == want.shape == (len(lon), len(x1))
+    assert np.isnan(got).any()
+    assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
 
 
 def test_point_in_ring_speedup_1000_vertices_65k_points():

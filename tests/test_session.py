@@ -57,6 +57,15 @@ def test_driver_pyspark_version_mismatch_raises(spark, monkeypatch):
     assert f"Spark {spark.version}" in str(e.value)
 
 
+@pytest.mark.parametrize("physical_gib, heap", [(64, "16384m"), (32, "16384m"),
+                                               (15, "7680m"), (4, "2048m")])
+def test_default_driver_memory_is_half_of_physical_up_to_16g(
+        monkeypatch, physical_gib, heap):
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": physical_gib << 18}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session._default_driver_memory() == heap
+
+
 def _fake_interpreter(tmp_path):
     """An executable that prints the arguments and PYTHONPATH it got."""
     fake = tmp_path / "fake-python"

@@ -103,6 +103,9 @@ Notes:
   doc_id string, and the in-kernel dedup is a pandas hash-dedup
   (drop_duplicates) over the two int64 (combo, key) columns — measured
   7.8x faster than np.unique(axis=0) at 2M pairs (BENCH/BASELINE.md).
+  The `Coalesce` under MapInPandas is `joins._one_wave`: a kernel input
+  estimated below one `spark.sql.files.maxPartitionBytes` split runs as
+  one task per core. It is narrow (no Exchange) and not a counted node.
 - **simhash** (round 3; widened 16→64 bit in round 5): one row per token
   through the single groupBy — the 64 per-bit sums are conditional
   aggregates on the same row, so the shuffle carries |tokens| rows (was
