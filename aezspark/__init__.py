@@ -17,7 +17,7 @@ Module map (see SURVEY.md §7):
   regions     admin normalization + list-valued region rollup (J3)
   documents   interleaved text+media doc corpus: span explode/enrich (input_hint)
   corpus      training-data ops: dedup, similarity search, text quality, multimodal
-  checkpoint  per-partition ledger, resume, lineage + metrics
+  checkpoint  per-partition resume over a snapshot table, lineage + metrics
   io          CSV/parquet sinks with reference formatting
 """
 

@@ -2,22 +2,27 @@
 
 The reference is restart-from-zero (single-process CLI loops). The engine
 makes every long pipeline resumable as batch-incremental processing over a
-deterministic partition manifest (SURVEY §2.7):
+deterministic key plan (SURVEY §2.7). The whole state is one snapshot table
+(`tables.SnapshotTable`) plus its write-once plan file:
 
   state_dir/
-    lineage.json        inputs, transform name, params, engine version
-    manifest.parquet    deterministic full set of partition keys (created once)
-    ledger/             one parquet per committed batch: completed keys + metrics
-    output/             result rows, partitionBy(key), dynamic-overwrite per batch
+    plan.json           lineage (inputs, transform name, params, engine
+                        version) + the sorted partition keys; written once
+                        with an atomic replace
+    data/, metadata/    the snapshot table holding the result rows
 
-Crash safety: a batch's output partitions are written BEFORE its ledger entry
-commits (write-ahead on data, commit on ledger). If the job dies mid-batch,
-the rerun anti-joins the ledger, re-selects the incomplete batch, and
-re-writes its partitions via dynamic partition overwrite — no duplicates, no
-missing rows, byte-identical to an uninterrupted run.
+Batches run over the sorted key plan in order, so the completed keys are
+always a prefix of it. Each batch is one `append` whose commit carries the
+prefix length as the `checkpoint_done_keys` table property: the batch's rows
+and the progress mark publish in the same atomic manifest swap. A crash
+mid-batch leaves only orphan data files (`vacuum` removes them), and the
+rerun resumes after the committed prefix — no duplicates, no missing rows.
+Table properties are carried forward by every commit, so resume stays exact
+after `compact()` and `expire_snapshots()`; `jobs/table_maintenance.py`
+inspects and maintains the state dir like any other table.
 
-Metrics per partition: rows_out, wall_ms, batch id — the per-partition
-lineage+metrics emission the north_rule asks for.
+Metrics per partition: rows_out, counted from the table; wall_ms and
+batch_id, from the batch's snapshot summary.
 """
 
 from __future__ import annotations
@@ -32,112 +37,76 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import __version__
 from .sources import local_dim
+from .tables import SnapshotTable
+
+DONE_KEYS = "checkpoint_done_keys"
 
 
 class PartitionCheckpointer:
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
+        self.table = SnapshotTable(spark, state_dir)
+        self.plan_path = os.path.join(state_dir, "plan.json")
 
-    # ---- paths ----
-    @property
-    def manifest_path(self):
-        return os.path.join(self.state_dir, "manifest.parquet")
+    def plan(self) -> dict:
+        with open(self.plan_path) as f:
+            return json.load(f)
 
-    @property
-    def ledger_dir(self):
-        return os.path.join(self.state_dir, "ledger")
+    def _write_plan(self, df: DataFrame, key_col: str, lineage: dict):
+        if os.path.exists(self.plan_path):
+            return
+        keys = [r[0] for r in
+                df.select(key_col).distinct().orderBy(key_col).collect()]
+        plan = {**lineage, "key_col": key_col, "keys": keys,
+                "engine_version": __version__,
+                "spark_version": self.spark.version}
+        tmp = f"{self.plan_path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(plan, f, indent=2, sort_keys=True)
+        os.replace(tmp, self.plan_path)
 
-    @property
-    def output_dir(self):
-        return os.path.join(self.state_dir, "output")
-
-    # ---- state ----
-    def _ensure_manifest(self, df: DataFrame, key_col: str) -> list:
-        if not os.path.exists(self.manifest_path):
-            keys = (df.select(key_col).distinct().orderBy(key_col)
-                    .toPandas()[key_col].tolist())
-            local_dim(self.spark, pd.DataFrame({key_col: keys}),
-                      f"{key_col} BIGINT") \
-                .coalesce(1).write.mode("overwrite").parquet(self.manifest_path)
-        pdf = self.spark.read.parquet(self.manifest_path).toPandas()
-        return sorted(pdf[key_col].tolist())
-
-    def completed_keys(self) -> set:
-        if not os.path.isdir(self.ledger_dir) or not any(
-                f.endswith(".parquet") for f in os.listdir(self.ledger_dir)):
-            return set()
-        pdf = self.spark.read.parquet(self.ledger_dir).toPandas()
-        return set(pdf["key"].tolist())
+    def completed_keys(self) -> list:
+        """The committed prefix of the key plan."""
+        done = int(self.table.properties().get(DONE_KEYS, 0))
+        return self.plan()["keys"][:done] if done else []
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(self.ledger_dir)
+        """One row per completed key: rows_out, and the batch's wall time
+        (transform + write + commit, split evenly over its keys) and id.
+        wall_ms and batch_id are null for keys whose batch snapshot
+        `expire_snapshots` has removed."""
+        batches = {}
+        for s in self.table.snapshots():
+            b = s["summary"]
+            if "batch_id" in b:
+                wall_ms = (s["timestamp_ms"] - b["started_ms"]) / len(b["keys"])
+                batches.update({k: (wall_ms, b["batch_id"]) for k in b["keys"]})
+        meta = local_dim(self.spark, pd.DataFrame(
+            [(k, *batches.get(k, (None, None))) for k in self.completed_keys()],
+            columns=["key", "wall_ms", "batch_id"]),
+            "key BIGINT, wall_ms DOUBLE, batch_id STRING")
+        rows = (self.table.read().groupBy(F.col(self.plan()["key_col"])
+                                          .alias("key"))
+                .agg(F.count("*").alias("rows_out")))
+        return (meta.join(rows, "key", "left")
+                .select("key", F.coalesce("rows_out", F.lit(0))
+                        .alias("rows_out"), "wall_ms", "batch_id"))
 
-    def _write_lineage(self, info: dict):
-        path = os.path.join(self.state_dir, "lineage.json")
-        if not os.path.exists(path):
-            info = dict(info)
-            info["engine_version"] = __version__
-            info["spark_version"] = self.spark.version
-            with open(path, "w") as f:
-                json.dump(info, f, indent=2, sort_keys=True)
-
-    # ---- run ----
     def run(self, df: DataFrame, key_col: str, transform,
-            batch_size: int = 4, lineage: dict | None = None,
-            failpoint_after_batches: int | None = None) -> str:
-        """Process df partition-by-partition, committing per batch.
-
-        transform: DataFrame → DataFrame; must keep key_col in its output.
-        Returns output_dir. Raises RuntimeError at the failpoint (test hook).
-        """
-        self._write_lineage({"transform": getattr(transform, "__name__", "transform"),
-                             "key_col": key_col, **(lineage or {})})
-        all_keys = self._ensure_manifest(df, key_col)
-        done = self.completed_keys()
-        pending = [k for k in all_keys if k not in done]
-        os.makedirs(self.ledger_dir, exist_ok=True)
-
-        prev_overwrite_mode = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        n_batches = 0
-        try:
-            for i in range(0, len(pending), batch_size):
-                batch = pending[i:i + batch_size]
-                t0 = time.monotonic()
-                sub = df.filter(F.col(key_col).isin(batch))
-                out = transform(sub)
-                # per-partition row counts ride the write itself via
-                # observe() — no extra action, no re-read of the accumulated
-                # output directory (which would be O(batches × total output))
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                out = out.observe(obs, *[
-                    F.count(F.when(F.col(key_col) == k, 1)).alias(f"k{j}")
-                    for j, k in enumerate(batch)])
-                (out.write.mode("overwrite").partitionBy(key_col)
-                 .parquet(self.output_dir))
-                observed = obs.get
-                wall_ms = (time.monotonic() - t0) * 1000.0
-                batch_id = str(uuid.uuid4())
-                ledger_rows = [(int(k), int(observed[f"k{j}"]),
-                                float(wall_ms / len(batch)), batch_id)
-                               for j, k in enumerate(batch)]
-                ledger_cols = ["key", "rows_out", "wall_ms", "batch_id"]
-                (local_dim(
-                    self.spark, pd.DataFrame(ledger_rows, columns=ledger_cols),
-                    "key BIGINT, rows_out BIGINT, wall_ms DOUBLE, batch_id STRING")
-                 .coalesce(1).write.mode("append").parquet(self.ledger_dir))
-                n_batches += 1
-                if failpoint_after_batches is not None and n_batches >= failpoint_after_batches:
-                    raise RuntimeError(f"failpoint: crashed after {n_batches} batches")
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                                prev_overwrite_mode)
-        return self.output_dir
-
-    def result(self) -> DataFrame:
-        return self.spark.read.parquet(self.output_dir)
+            batch_size: int = 4, lineage: dict | None = None) -> SnapshotTable:
+        """Process df partition-by-partition, committing one append per
+        batch. transform: DataFrame → DataFrame; must keep key_col in its
+        output. Returns the state table."""
+        self._write_plan(df, key_col, {
+            "transform": getattr(transform, "__name__", "transform"),
+            **(lineage or {})})
+        keys = self.plan()["keys"]
+        for i in range(len(self.completed_keys()), len(keys), batch_size):
+            batch = keys[i:i + batch_size]
+            started_ms = int(time.time() * 1000)
+            self.table.append(
+                transform(df.filter(F.col(key_col).isin(batch))),
+                summary={"batch_id": str(uuid.uuid4()), "keys": batch,
+                         "started_ms": started_ms},
+                properties={DONE_KEYS: i + len(batch)})
+        return self.table

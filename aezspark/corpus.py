@@ -673,40 +673,6 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.round(score, 6).alias("quality"))
 
 
-def neardup_canonical(clusters: DataFrame, docs: DataFrame,
-                      text_col: str = "text") -> DataFrame:
-    """The retention step after near-dup clustering — which duplicate do you
-    actually KEEP: per cluster, the document with the highest integer quality
-    key (n_tokens, then n_chars), ties broken by min doc_id. Deliberately
-    integer-only ordering (the `doc_top_term` discipline): a float composite
-    score in the ranking would make the kept document depend on summation
-    order; integers make the choice deterministic and engine-portable.
-    Returns (doc_id, cluster_id, keep) for every clustered document — the
-    keep=false rows are the dedup drop list; documents in no cluster are
-    singletons and are implicitly kept. "Every clustered document" is literal:
-    the quality join is a LEFT join, so a clustered doc_id missing from
-    `docs` (stale cluster table, partial corpus read) still gets a row — its
-    quality keys coalesce to -1, so unknown docs deterministically lose to
-    any known doc and tie-break among themselves by min doc_id, instead of
-    silently vanishing from both the keep list and the drop list.
-
-    Plan at scale: one hash join on doc_id, then one window argmax
-    partitioned by cluster_id — LSH clusters are near-cliques of a few
-    docs, so the window partitions are tiny and skew-free."""
-    from pyspark.sql import Window as W
-
-    q = quality_score(docs, text_col).select("doc_id", "n_tokens", "n_chars")
-    w = (W.partitionBy("cluster_id")
-         .orderBy(F.col("n_tokens").desc(), F.col("n_chars").desc(),
-                  F.col("doc_id").asc()))
-    return (clusters.join(q, "doc_id", "left")
-            .withColumn("n_tokens", F.coalesce("n_tokens", F.lit(-1)))
-            .withColumn("n_chars", F.coalesce("n_chars", F.lit(-1)))
-            .withColumn("rn", F.row_number().over(w))
-            .select("doc_id", "cluster_id",
-                    (F.col("rn") == 1).alias("keep")))
-
-
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens + a BPE-ish proxy: alnum runs + count of
     non-alnum/non-space marks (RE2-safe on both engines — no lookarounds)."""

@@ -26,9 +26,7 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     cores = os.cpu_count() or 8
     master = master or os.environ.get("AEZSPARK_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
-        # match parallelism: local[N] → N, local[*] → cores
-        inner = master[master.find("[") + 1:master.find("]")] if "[" in master else str(cores)
-        shuffle_partitions = cores if inner == "*" else int(inner)
+        shuffle_partitions = _master_cores(master, cores)
     b = (SparkSession.builder
          .master(master)
          .appName(app)
@@ -100,6 +98,16 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     _require_matching_pyspark(spark.version, pyspark.__version__, "driver")
     _warm_worker_pools(spark, shuffle_partitions)
     return spark
+
+
+def _master_cores(master: str, cores: int) -> int:
+    """Parallelism to match a master's task slots: local[N] and local[N,F]
+    (F = max task failures) → N; local[*], local[*,F] and masters without
+    a bracket → cores."""
+    if "[" not in master:
+        return cores
+    slots = master[master.find("[") + 1:master.find("]")].split(",")[0]
+    return cores if slots == "*" else int(slots)
 
 
 def _default_driver_memory() -> str:

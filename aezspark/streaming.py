@@ -42,18 +42,8 @@ def stream_documents(spark: SparkSession, in_dir: str,
 def _max_stream_batch_id(tbl) -> int:
     """Highest stream batch_id ever committed to `tbl` (-1 for none).
     O(1): read from the current snapshot's `max_stream_batch_id` table
-    property. Tables written before the property existed fall back to a
-    one-time chain scan of the retained summaries; the next commit
-    re-publishes the watermark as a property."""
-    try:
-        snap = tbl.snapshot()
-    except FileNotFoundError:
-        return -1
-    props = snap.get("properties", {})
-    if "max_stream_batch_id" in props:
-        return int(props["max_stream_batch_id"])
-    done = [s["summary"].get("stream_batch_id") for s in tbl.snapshots()]
-    return max((d for d in done if d is not None), default=-1)
+    property."""
+    return int(tbl.properties().get("max_stream_batch_id", -1))
 
 
 def enrich_stream_to_table(docs_stream: DataFrame, bidx, tile_lookup, fine,
@@ -218,20 +208,3 @@ def streaming_exact_dedup(docs_stream: DataFrame, ttl_ms: int | None = None):
     return (hashed.groupBy("text_hash")
             .applyInPandasWithState(dedup_fn, out_schema, state_schema,
                                     "append", timeout))
-
-
-def windowed_event_counts(events_stream: DataFrame,
-                          window: str = "10 minutes",
-                          watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling-window counts per event type — the late-data
-    pattern for event streams (the DOCUMENT corpus carries no event time,
-    but the engine's events path does): rows later than the watermark are
-    dropped and their window's state evicted; rows late-but-within-watermark
-    still merge into their window. Append output mode emits each window once,
-    when the watermark passes its end."""
-    return (events_stream
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"), "event_type", "n"))

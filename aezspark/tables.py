@@ -10,12 +10,14 @@ listing; a commit is one atomic pointer swap):
 
   table_dir/
     data/<uuid>.parquet          immutable data files
-    metadata/snap-<N>.json       manifest: files, schema, parent, summary
+    metadata/snap-<N>.json       manifest: files, schema, parent, commit
+                                 time, summary, properties
     metadata/version-hint.txt    current snapshot id (atomic rename swap)
 
 Guarantees (tested):
   * readers always see a complete snapshot — a writer crashing mid-append
-    leaves orphan data files but never a torn table;
+    leaves orphan data files (or a _staging_<uuid> dir) for vacuum, but
+    never a torn table;
   * append/overwrite are snapshot-isolated: a reader that planned from
     snapshot N is unaffected by a concurrent commit of N+1;
   * concurrent committers: optimistic concurrency — the manifest is staged to
@@ -37,6 +39,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,27 +90,13 @@ class SnapshotTable:
     def stat_cols(self) -> tuple[str, ...]:
         if self._stat_cols is not None:
             return self._stat_cols
-        try:
-            snap = self.snapshot()
-        except FileNotFoundError:
-            return ()
-        props = snap.get("properties", {})
-        if "stat_cols" in props:
-            return tuple(props["stat_cols"])
-        # pre-properties manifests: derive from the stats dict actually
-        # recorded (per-file column keys), so old tables keep pruning
-        cols: set[str] = set()
-        for fstats in snap.get("stats", {}).values():
-            if fstats:
-                cols.update(fstats)
-        return tuple(sorted(cols))
+        return tuple(self.properties().get("stat_cols", ()))
 
     def properties(self) -> dict:
         """Current table properties (Iceberg table-properties analog):
         key/values carried forward from parent to child at EVERY commit —
         append, replace (compaction), overwrite — so they survive
-        maintenance and snapshot expiry. Empty for tables with no commits
-        or pre-properties manifests."""
+        maintenance and snapshot expiry. Empty until a commit sets one."""
         try:
             return dict(self.snapshot().get("properties", {}))
         except FileNotFoundError:
@@ -151,8 +141,6 @@ class SnapshotTable:
                 os.rename(os.path.join(staging, f),
                           os.path.join(self.data_dir, dst))
                 files.append(dst)
-        import shutil
-
         shutil.rmtree(staging)
         return files
 
@@ -216,6 +204,7 @@ class SnapshotTable:
             "snapshot_id": sid,
             "parent_id": parent,
             "operation": operation,
+            "timestamp_ms": int(time.time() * 1000),
             "files": files,
             "schema": json.loads(schema_json),
             "summary": {"n_files": len(files), **(summary or {})},
@@ -540,7 +529,6 @@ class SnapshotTable:
         an unbounded loop can livelock under a steady appender, ADVICE r5),
         keeping the appender's files and replacing only `replaced`."""
         import random
-        import time
 
         for attempt in range(COMPACT_MAX_RETRIES):
             if attempt:
@@ -590,20 +578,28 @@ class SnapshotTable:
         its commit, so without the grace window a concurrent vacuum could
         delete files the imminent commit will reference — a torn table.
         grace_seconds=0 is only safe when no writer can be in flight
-        (tests / single-writer maintenance windows)."""
-        import time
+        (tests / single-writer maintenance windows).
 
+        Also deletes the `_staging_<uuid>` directories that a writer killed
+        mid-write leaves beside data/ (same grace rule). Returns the names
+        of the removed files and directories."""
         now = time.time()
         removed = []
-        for f in self.orphan_files():
-            p = os.path.join(self.data_dir, f)
+        paths = [os.path.join(self.data_dir, f) for f in self.orphan_files()]
+        paths += [os.path.join(self.table_dir, d)
+                  for d in sorted(os.listdir(self.table_dir))
+                  if d.startswith("_staging_")]
+        for p in paths:
             try:
                 if now - os.path.getmtime(p) < grace_seconds:
                     continue
-                os.remove(p)
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
             except FileNotFoundError:
                 continue  # another vacuum raced us — already gone
-            removed.append(f)
+            removed.append(os.path.basename(p))
         return removed
 
 

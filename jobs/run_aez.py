@@ -7,8 +7,11 @@
 
 On a cluster, --py-files ships the engine; locally it runs in the driver.
 Each query family writes its result under --out; the doc pipeline runs
-through PartitionCheckpointer so a killed run resumes from its ledger
-(north_rule: resumable from per-partition checkpoints with lineage+metrics).
+through PartitionCheckpointer, whose state is one snapshot table under
+<out>/docs_state, so a killed run resumes after the batches that table has
+committed (north_rule: resumable from per-partition checkpoints with
+lineage+metrics). `python jobs/table_maintenance.py --table
+<out>/docs_state status` shows the committed batches.
 """
 
 from __future__ import annotations
@@ -78,7 +81,8 @@ def main():
 
     if "docs" in todo:
         # checkpointed doc enrichment: partition key = quadtree parent cell
-        # of the span point (deterministic manifest; resume = anti-join ledger)
+        # of the span point (deterministic key plan; resume = after the
+        # committed prefix of it)
         from aezspark import cellindex
 
         docs = w.documents()
@@ -95,16 +99,17 @@ def main():
             return docs_mod.with_aez(assigned, tiles_df, fine)
 
         cp = PartitionCheckpointer(spark, os.path.join(args.out, "docs_state"))
-        out_dir = cp.run(pts, "part_key", transform, batch_size=args.batch_size,
-                         lineage={"input": args.fixtures, "job": "doc_enrich"})
+        tbl = cp.run(pts, "part_key", transform, batch_size=args.batch_size,
+                     lineage={"input": args.fixtures, "job": "doc_enrich"})
         # no-silent-fallbacks telemetry: how many assignments came from the
         # kNN nearest-zone fallback vs true containment (a fallback surge
         # flags bad boundary data before anyone reads the counts)
         by_method = {r["method"]: r["n"] for r in
-                     (spark.read.parquet(out_dir).groupBy("method")
+                     (tbl.read().groupBy("method")
                       .agg(F.count("*").alias("n")).collect())}
         n = sum(by_method.values())
-        print(f"doc enrichment complete: {n} assignment rows at {out_dir} "
+        print(f"doc enrichment complete: {n} assignment rows at "
+              f"{tbl.table_dir} "
               f"(pip={by_method.get('pip', 0)}, "
               f"knn_fallback={by_method.get('knn', 0)})")
 

@@ -1,5 +1,6 @@
 """spark-submit job: snapshot-table maintenance (the Iceberg-procedures
-analog for `aezspark.tables` tables — e.g. the streaming zone-counts sink).
+analog for `aezspark.tables` tables — e.g. the streaming zone-counts sink or
+a PartitionCheckpointer state dir).
 
     python tools/make_pyfiles.py
     spark-submit --py-files build/aezspark.zip jobs/table_maintenance.py \
@@ -11,8 +12,9 @@ analog for `aezspark.tables` tables — e.g. the streaming zone-counts sink).
     ... delete  --col doc_id --lo X --hi Y       # copy-on-write row delete
     ... changelog --after N [--until M] [--col c --lo X --hi Y] [--show 5]
 
-`status` prints the snapshot chain (id, operation, files, summary) and the
-current file count; `plan` shows planned-vs-total files for a range probe
+`status` prints the snapshot chain (id, operation, files, summary), the
+current table properties (e.g. a checkpoint's `checkpoint_done_keys`) and
+the orphan file count; `plan` shows planned-vs-total files for a range probe
 (the manifest-stats pruning a reader would get) without reading any data;
 `changelog` is the incremental-consumer example (read_appends): the rows
 appended after snapshot N, planned purely from manifests — compaction
@@ -81,6 +83,7 @@ def main():
             print(f"{cur} snap {s['snapshot_id']:>4} parent "
                   f"{str(s['parent_id']):>4} {s['operation']:<10} "
                   f"files={len(s['files'])} summary={s['summary']}")
+        print(f"properties: {tbl.properties()}")
         print(f"orphan data files: {len(tbl.orphan_files())}")
     elif args.cmd == "compact":
         sid = tbl.compact(target_file_bytes=args.target_mb << 20)
@@ -91,7 +94,7 @@ def main():
         print(f"expired snapshots: {expired or 'none'}")
     elif args.cmd == "vacuum":
         removed = tbl.vacuum(grace_seconds=args.grace_s)
-        print(f"vacuumed {len(removed)} orphan file(s)")
+        print(f"vacuumed {len(removed)} orphan file(s) or staging dir(s)")
     elif args.cmd == "plan":
         where = {args.col: (_conv(args.lo), _conv(args.hi))}
         planned = tbl.planned_files(where=where)

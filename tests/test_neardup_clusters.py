@@ -71,46 +71,3 @@ def test_one_action_per_round_no_separate_count(spark, monkeypatch):
     labels = {r.doc_id: r.cluster_id for r in got.collect()}
     assert labels == {"f": "f", "g": "f", "h": "f"}
 
-
-def test_neardup_canonical_keeps_best_per_cluster(spark):
-    """Retention: exactly one keep per cluster; winner = most tokens, then
-    most chars, then min doc_id — integer-only deterministic ordering."""
-    from aezspark import corpus
-
-    docs = spark.createDataFrame(
-        [("a", "the cat sat on the mat"),        # 6 tokens — cluster 'a' winner
-         ("b", "the cat sat on mat"),            # 5 tokens
-         ("c", "the cat sat"),                   # 3 tokens
-         ("x", "one two three"),                 # tie with y on tokens/chars
-         ("y", "one two threa")],                # -> min doc_id 'x' wins
-        "doc_id STRING, text STRING")
-    clusters = spark.createDataFrame(
-        [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")],
-        "doc_id STRING, cluster_id STRING")
-    got = {r.doc_id: (r.cluster_id, r.keep)
-           for r in corpus.neardup_canonical(clusters, docs).collect()}
-    assert got == {"a": ("a", True), "b": ("a", False), "c": ("a", False),
-                   "x": ("x", True), "y": ("x", False)}
-    # exactly one keep per cluster, drop list is everything else
-    kept = [d for d, (_, k) in got.items() if k]
-    assert sorted(kept) == ["a", "x"]
-
-
-def test_neardup_canonical_unknown_docs_survive(spark):
-    """A clustered doc_id absent from `docs` must still appear in the output
-    (ADVICE r5): unknown docs coalesce quality to -1, so they lose to any
-    known doc and tie-break among themselves by min doc_id."""
-    from aezspark import corpus
-
-    docs = spark.createDataFrame(
-        [("a", "the cat sat on the mat")],
-        "doc_id STRING, text STRING")
-    clusters = spark.createDataFrame(
-        # 'ghost1'/'ghost2' are clustered but missing from docs;
-        # cluster 'z' is ALL ghosts — one of them must still be kept
-        [("a", "a"), ("ghost1", "a"), ("ghost2", "z"), ("ghost3", "z")],
-        "doc_id STRING, cluster_id STRING")
-    got = {r.doc_id: (r.cluster_id, r.keep)
-           for r in corpus.neardup_canonical(clusters, docs).collect()}
-    assert got == {"a": ("a", True), "ghost1": ("a", False),
-                   "ghost2": ("z", True), "ghost3": ("z", False)}

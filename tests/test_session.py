@@ -66,6 +66,15 @@ def test_default_driver_memory_is_half_of_physical_up_to_16g(
     assert session._default_driver_memory() == heap
 
 
+@pytest.mark.parametrize("master, slots", [
+    ("local[4]", 4), ("local[4,2]", 4), ("local[*]", 6), ("local[*,3]", 6),
+    ("local", 6), ("spark://host:7077", 6)])
+def test_master_cores_takes_the_slot_field(master, slots):
+    """local[N,F] and local[*,F] (F = max task failures) are valid masters:
+    the parallelism is the first bracket field."""
+    assert session._master_cores(master, 6) == slots
+
+
 def _fake_interpreter(tmp_path):
     """An executable that prints the arguments and PYTHONPATH it got."""
     fake = tmp_path / "fake-python"

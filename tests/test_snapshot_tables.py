@@ -78,6 +78,19 @@ def test_expire_and_vacuum(spark, tmp_path):
     assert t.orphan_files() == []
 
 
+def test_vacuum_removes_abandoned_staging_dir(spark, tmp_path):
+    """A writer killed mid-write leaves its _staging_<uuid> dir beside
+    data/; vacuum removes it under the same grace rule as orphan files."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, 0, 5))
+    stray = os.path.join(t.table_dir, "_staging_dead")
+    _df(spark, 5, 10).write.parquet(stray)
+    assert t.vacuum() == []
+    assert t.vacuum(grace_seconds=0) == ["_staging_dead"]
+    assert not os.path.exists(stray)
+    assert t.read().count() == 5
+
+
 def test_concurrent_commit_loses_loudly(spark, tmp_path):
     """Two writers racing to the same snapshot id: exactly one wins; the
     loser gets ConcurrentCommitError instead of silently clobbering the
