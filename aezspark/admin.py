@@ -4,7 +4,7 @@ The reference's dim is a pure-Python module (admin_names.py:4-73 `adminmap`,
 :75-77 `lookup`, :81-408 `region_mapping`). The engine carries the same data
 as committed TSVs (aezspark/data/, regenerated by tools/extract_admin_dim.py)
 and exposes it both driver-side (dicts, for BoundaryIndex construction /
-fixture generation) and Spark-side (tiny broadcast dims).
+fixture generation) and Spark-side (the region-membership dim).
 
 Semantics reproduced exactly:
   * lookup(admin) = adminmap.get(admin, admin) — identity when unmapped;
@@ -63,14 +63,6 @@ def region_mapping() -> dict[str, list[str]]:
     for country, region in _read_tsv("region_mapping.tsv"):
         out.setdefault(country, []).append(region)
     return out
-
-
-def admin_dim(spark: SparkSession) -> DataFrame:
-    """(admin, canonical) normalization dim; canonical is null for dropped
-    features. Tiny — always broadcast."""
-    rows = list(adminmap().items())
-    return local_dim(spark, pd.DataFrame(rows, columns=["admin", "canonical"]),
-                     "admin STRING, canonical STRING")
 
 
 def region_memberships_dim(spark: SparkSession) -> DataFrame:

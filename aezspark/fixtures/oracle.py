@@ -29,7 +29,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 
 from ..grid import GridSpec
-from ..geometry import BoundaryIndex
+from ..geometry import BoundaryIndex, point_seg_dist_deg
 from .. import cellindex
 from . import world
 
@@ -45,10 +45,23 @@ from . import world
 # loop formulation) instead of the engine's even-odd ray-crossing parity.
 # For the simple (non-self-intersecting) fixture polygons the two must agree
 # everywhere off the boundary; fixtures avoid on-edge points by design.
-# The kNN *distance* path still shares point_seg_dist_deg with the engine —
-# covered by tests/test_geometry_perf.py's brute-force parity and
-# tests/test_core_numpy.py property tests, and documented here honestly.
+# The kNN oracles (doc_assignment's fallback, doc_knn_topk) share only the
+# segment metric point_seg_dist_deg with the engine: _dense_feature_dists
+# scans each Polygon's own segments, with no BoundaryIndex in the path, so
+# neither the engine's dense scan (nearest_bruteforce_k) nor its
+# branch-and-bound is under test by itself. point_seg_dist_deg is pinned by
+# tests/test_geometry_perf.py's frozen dense formula and
+# tests/test_within_distance.py's metric contract.
 # --------------------------------------------------------------------------
+
+def _dense_feature_dists(polys, lon, lat) -> np.ndarray:
+    """(N, n_features) min boundary distance from each point to each
+    feature: a dense scan of every feature's Polygon.segments()."""
+    dists = np.full((len(lon), len(polys)), np.inf)
+    for f, poly in enumerate(polys):
+        dists[:, f] = point_seg_dist_deg(lon, lat, *poly.segments()).min(axis=1)
+    return dists
+
 
 def winding_contains(lon, lat, ring_lons, ring_lats):
     """Nonzero winding number (Sunday's algorithm), vectorized over points."""
@@ -478,12 +491,12 @@ def doc_assignment(fx_dir: str, index_res: int, tiles: pd.DataFrame,
     unmatched_mask[np.unique(pt_i)] = False
     un = pts[unmatched_mask].reset_index(drop=True)
     if len(un):
-        # dense brute-force scan, NOT the engine's branch-and-bound nearest —
-        # keeps the oracle's kNN structurally independent of the production
-        # candidate-generation path (parity between the two is separately
-        # pinned by tests/test_geometry_perf.py)
-        pos, _d = bidx.nearest_bruteforce(un["lon"].to_numpy(),
-                                          un["lat"].to_numpy())
+        # a dense per-feature scan outside BoundaryIndex: the engine's
+        # nearest (its dense path on every fixture batch, and its
+        # branch-and-bound) is never its own oracle; argmin keeps the lowest
+        # position on ties, the engine's tie-break
+        pos = _dense_feature_dists(polys, un["lon"].to_numpy(),
+                                   un["lat"].to_numpy()).argmin(axis=1)
         un["feature_id"] = fids[pos].astype(np.int32)
         un["country"] = countries[pos]
         un["method"] = "knn"
@@ -529,20 +542,18 @@ def doc_knn_topk(fx_dir: str, k: int = 3) -> pd.DataFrame:
     """kNN top-k oracle: for every geo span contained in NO polygon
     (containment via the independent winding test), the k nearest features by
     boundary distance with rank 1..k ordered by (dist, feature position) —
-    a DENSE per-feature scan, structurally independent of the engine's
-    branch-and-bound nearest_k."""
-    from ..geometry import KM_PER_DEG, point_seg_dist_deg
+    a DENSE per-feature scan (_dense_feature_dists) outside BoundaryIndex,
+    so independent of both of nearest_k's paths."""
+    from ..geometry import KM_PER_DEG
 
     pts = doc_points(fx_dir)
     lonv = pts["lon"].to_numpy()
     latv = pts["lat"].to_numpy()
     polys = world.polygons()
     matched = np.zeros(len(pts), dtype=bool)
-    dists = np.full((len(pts), len(polys)), np.inf)
-    for f, poly in enumerate(polys):
+    for poly in polys:
         matched |= contains_checked(poly, lonv, latv)
-        x1, y1, x2, y2 = poly.segments()
-        dists[:, f] = point_seg_dist_deg(lonv, latv, x1, y1, x2, y2).min(axis=1)
+    dists = _dense_feature_dists(polys, lonv, latv)
     un = np.flatnonzero(~matched)
     k_eff = min(k, len(polys))
     fpos = np.broadcast_to(np.arange(len(polys)), (len(un), len(polys)))

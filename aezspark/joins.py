@@ -9,14 +9,18 @@ crossing-number test per batch. No shuffle happens in the join itself; the
 downstream grouped aggregations absorb hot countries/cells in their map-side
 partial aggregate.
 
-Two probe shapes:
-  * assign_points: arbitrary (lat, lon) rows → many-to-many feature matches,
-    with optional kNN nearest-zone fallback for points inside no polygon
-    (cell-ring candidate expansion, then exact min boundary distance), and
-    an optional AEZ tile lookup fused into the same kernel. The lookup has
-    one form: a broadcast shard manifest of the clustered tile sink
+Two join shapes:
+  * the probe joins: arbitrary (lat, lon) rows → feature matches, all through
+    one Arrow kernel (_probe_join) that differs only in its per-batch match
+    function. assign_points matches many-to-many by PIP, with optional kNN
+    nearest-zone fallback for points inside no polygon, and an optional AEZ
+    tile lookup fused into the same kernel. The lookup has one form: a
+    broadcast shard manifest of the clustered tile sink
     (tile_shard_lookup), whose memory is bounded by a per-worker LRU at any
-    grid size.
+    grid size. within_distance_join (range) and knn_topk_join (top-k by
+    boundary distance) are the other two match functions. assign_points'
+    emit='zone_counts' aggregates inside its own kernel, on the same
+    prologue (_probe_input) and match core (_match_arrays).
   * build_assignment: enumerate every grid cell inside each feature's bbox
     (driver emits only per-feature bbox row-range chunks, as one Arrow local
     relation; executors explode them with sequence()), PIP-filter the
@@ -37,13 +41,9 @@ import pandas as pd
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .geometry import BoundaryIndex
+from .geometry import KM_PER_DEG, BoundaryIndex
 from .grid import GridSpec
 from .sources import local_dim
-
-
-def broadcast_index(spark: SparkSession, index: BoundaryIndex):
-    return spark.sparkContext.broadcast(index)
 
 
 # ---------------------------------------------------------------- assignment
@@ -99,7 +99,7 @@ def build_assignment(spark: SparkSession, grid: GridSpec,
             .withColumn("lon", F.lit(grid.lon_min)
                         + (F.col("x") + F.lit(0.5)) * F.lit(grid.px_deg)))
 
-    bidx = broadcast_index(spark, index)
+    bidx = spark.sparkContext.broadcast(index)
     schema = T.StructType([
         T.StructField("cell_id", T.LongType()),
         T.StructField("y", T.IntegerType()),
@@ -136,11 +136,12 @@ def build_assignment(spark: SparkSession, grid: GridSpec,
 
 # ------------------------------------------------------------- point assign
 
-POINT_ASSIGN_FIELDS = [
-    T.StructField("feature_id", T.IntegerType()),
-    T.StructField("country", T.StringType()),
-    T.StructField("method", T.StringType()),
-]
+# the fields every probe join appends first: the matched polygon's id and
+# country; then its own (DIST_FIELDS for the distance joins)
+MATCH_FIELDS = [T.StructField("feature_id", T.IntegerType()),
+                T.StructField("country", T.StringType())]
+DIST_FIELDS = [T.StructField("dist_deg", T.DoubleType()),
+               T.StructField("dist_km", T.DoubleType())]
 
 # emit='zone_counts' kernel: pending deduped (combo, doc) pairs above this
 # are compacted in place (4M int64 pairs ≈ 64 MB); see zc_kernel
@@ -398,6 +399,61 @@ def _one_wave(points: DataFrame) -> DataFrame:
     return points.coalesce(spark.sparkContext.defaultParallelism)
 
 
+def _probe_input(points: DataFrame, index, project: list[str] | None,
+                 appended: list, op: str):
+    """Shared prologue of the probe joins: plan the input as one wave
+    (_one_wave), broadcast `index` unless it already is a Broadcast, check
+    the projection, and build the output schema (kept input columns, then
+    the `appended` fields). Returns (points, broadcast index, schema)."""
+    points = _one_wave(points)
+    bidx = (index if isinstance(index, Broadcast)
+            else points.sparkSession.sparkContext.broadcast(index))
+    keep = _validate_projection(points, project, [f.name for f in appended], op)
+    schema = T.StructType([f for f in points.schema.fields if f.name in keep]
+                          + appended)
+    return points, bidx, schema
+
+
+def _probe_join(points: DataFrame, index, op: str, fields: list, match,
+                lat_col: str, lon_col: str,
+                project: list[str] | None) -> DataFrame:
+    """The one row-emitting probe-join kernel. Per Arrow batch,
+    `match(idx, lon, lat)` returns (take, poly_pos, {col: values}): `take`
+    indexes the batch rows to emit (a row repeats once per match),
+    `poly_pos` the matched polygon positions, and the dict the values of
+    `fields`, aligned with `take`. The kernel appends feature_id and country
+    of each matched polygon, then those columns."""
+    points, bidx, schema = _probe_input(points, index, project,
+                                        MATCH_FIELDS + fields, op)
+    out_cols = [f.name for f in schema.fields]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        idx: BoundaryIndex = bidx.value
+        fids = idx.feature_ids().astype(np.int32)
+        countries = idx.countries()
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            lon = pdf[lon_col].to_numpy(dtype=np.float64)
+            lat = pdf[lat_col].to_numpy(dtype=np.float64)
+            take, ppos, cols = match(idx, lon, lat)
+            out = pdf.iloc[take].reset_index(drop=True)
+            out["feature_id"] = fids[ppos]
+            out["country"] = countries[ppos]
+            for name, values in cols.items():
+                out[name] = values
+            yield out[out_cols]
+
+    return points.mapInPandas(kernel, schema)
+
+
+def _dist_cols(dist) -> dict:
+    """dist_deg rounded to 6 dp, and dist_km derived from the rounded value
+    (× geometry.KM_PER_DEG), so both engines derive it identically."""
+    dd = np.round(dist, 6)
+    return {"dist_deg": dd, "dist_km": np.round(dd * KM_PER_DEG, 6)}
+
+
 def assign_points(points: DataFrame, index, lat_col: str = "lat",
                   lon_col: str = "lon", knn_fallback: bool = True,
                   tile_lookup=None,
@@ -444,43 +500,26 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
         if doc_col not in [f.name for f in points.schema.fields]:
             raise ValueError(f"assign_points(emit='zone_counts') requires a "
                              f"{doc_col!r} column")
-    points = _one_wave(points)
-    spark = points.sparkSession
-    bidx = index if hasattr(index, "value") else broadcast_index(spark, index)
-
-    extra = list(POINT_ASSIGN_FIELDS)
+    fields = [T.StructField("method", T.StringType())]
     if tile_lookup is not None:
         _check_tile_lookup(tile_lookup, fine)
-        extra = extra + [T.StructField("aez_code", T.IntegerType())]
-    keep = _validate_projection(points, project, [f.name for f in extra],
-                                "assign_points")
-    schema = T.StructType([f for f in points.schema.fields if f.name in keep]
-                          + extra)
-    out_cols = [f.name for f in schema.fields]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx: BoundaryIndex = bidx.value
-        fids = idx.feature_ids().astype(np.int32)
-        countries = idx.countries()
-        tl = tile_lookup.value if tile_lookup is not None else None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lon = pdf[lon_col].to_numpy(dtype=np.float64)
-            lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            take, ppos, isknn = _match_arrays(idx, lon, lat, knn_fallback)
-            out = pdf.iloc[take].reset_index(drop=True)
-            out["feature_id"] = fids[ppos]
-            out["country"] = countries[ppos]
-            out["method"] = np.where(isknn, "knn", "pip")
-            if tl is not None:
-                out["aez_code"] = _tile_codes(tl, fine, lon[take], lat[take])
-            yield out[out_cols]
+        fields.append(T.StructField("aez_code", T.IntegerType()))
 
     if emit == "rows":
-        return points.mapInPandas(kernel, schema)
+        def match(idx: BoundaryIndex, lon, lat):
+            take, ppos, isknn = _match_arrays(idx, lon, lat, knn_fallback)
+            cols = {"method": np.where(isknn, "knn", "pip")}
+            if tile_lookup is not None:
+                cols["aez_code"] = _tile_codes(tile_lookup.value, fine,
+                                               lon[take], lat[take])
+            return take, ppos, cols
 
-    if doc_col not in keep:
+        return _probe_join(points, index, "assign_points", fields, match,
+                           lat_col, lon_col, project)
+
+    points, bidx, _schema = _probe_input(points, index, project,
+                                         MATCH_FIELDS + fields, "assign_points")
+    if project is not None and doc_col not in project:
         raise ValueError(f"assign_points(emit='zone_counts'): {doc_col!r} "
                          f"must survive the projection")
     zc_schema = T.StructType([
@@ -582,44 +621,14 @@ def within_distance_join(points: DataFrame, index, d_deg: float,
     dist_deg, dist_km) with dist 0 for contained points — dist_km is the
     user-facing unit (dist_deg × geometry.KM_PER_DEG, the haversine-derived
     arc factor, computed from the 6dp-rounded deg so both engines derive it
-    from the identical value). Same broadcast-kernel shape as assign_points:
-    zero shuffle in the join, bbox lower-bound pruning inside the Arrow
-    kernel."""
-    from .geometry import KM_PER_DEG
+    from the identical value). The probe-join kernel of assign_points: zero
+    shuffle in the join, bbox lower-bound pruning inside the Arrow kernel."""
+    def match(idx: BoundaryIndex, lon, lat):
+        pt, pp, dist = idx.within(lon, lat, d_deg)
+        return pt, pp, _dist_cols(dist)
 
-    spark = points.sparkSession
-    bidx = index if hasattr(index, "value") else broadcast_index(spark, index)
-    keep = _validate_projection(points, project,
-                                ["feature_id", "country", "dist_deg",
-                                 "dist_km"],
-                                "within_distance_join")
-    schema = T.StructType(
-        [f for f in points.schema.fields if f.name in keep]
-        + [T.StructField("feature_id", T.IntegerType()),
-           T.StructField("country", T.StringType()),
-           T.StructField("dist_deg", T.DoubleType()),
-           T.StructField("dist_km", T.DoubleType())])
-    out_cols = [f.name for f in schema.fields]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx: BoundaryIndex = bidx.value
-        fids = idx.feature_ids().astype(np.int32)
-        countries = idx.countries()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lon = pdf[lon_col].to_numpy(dtype=np.float64)
-            lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            pt, pp, dist = idx.within(lon, lat, d_deg)
-            out = pdf.iloc[pt].reset_index(drop=True)
-            out["feature_id"] = fids[pp]
-            out["country"] = countries[pp]
-            dd = np.round(dist, 6)
-            out["dist_deg"] = dd
-            out["dist_km"] = np.round(dd * KM_PER_DEG, 6)
-            yield out[out_cols]
-
-    return points.mapInPandas(kernel, schema)
+    return _probe_join(points, index, "within_distance_join", DIST_FIELDS,
+                       match, lat_col, lon_col, project)
 
 
 def knn_topk_join(points: DataFrame, index, k: int,
@@ -635,55 +644,24 @@ def knn_topk_join(points: DataFrame, index, k: int,
     nearest-zone fallback population, same rule as assign_points' kNN path);
     False ranks every point. Appends (feature_id, country, dist_deg,
     dist_km, rank) — dist_km = dist_deg × geometry.KM_PER_DEG from the
-    6dp-rounded deg, the user-facing unit. Same broadcast-kernel shape as
+    6dp-rounded deg, the user-facing unit. The probe-join kernel of
     assign_points: zero shuffle, candidate generation via the bbox
     branch-and-bound with a k-element bound
     (geometry.BoundaryIndex.nearest_k)."""
-    from .geometry import KM_PER_DEG
+    def match(idx: BoundaryIndex, lon, lat):
+        sel = np.arange(len(lon))
+        if unmatched_only:
+            pt, _pp = idx.pip(lon, lat, many_to_many=False)
+            un = np.ones(len(lon), dtype=bool)
+            un[pt] = False
+            sel = sel[un]
+        pos, dist = idx.nearest_k(lon[sel], lat[sel], k)
+        k_eff = pos.shape[1]
+        cols = _dist_cols(dist.ravel())
+        cols["rank"] = np.tile(np.arange(1, k_eff + 1, dtype=np.int32),
+                               len(sel))
+        return np.repeat(sel, k_eff), pos.ravel(), cols
 
-    spark = points.sparkSession
-    bidx = index if hasattr(index, "value") else broadcast_index(spark, index)
-    keep = _validate_projection(points, project,
-                                ["feature_id", "country", "dist_deg",
-                                 "dist_km", "rank"],
-                                "knn_topk_join")
-    schema = T.StructType(
-        [f for f in points.schema.fields if f.name in keep]
-        + [T.StructField("feature_id", T.IntegerType()),
-           T.StructField("country", T.StringType()),
-           T.StructField("dist_deg", T.DoubleType()),
-           T.StructField("dist_km", T.DoubleType()),
-           T.StructField("rank", T.IntegerType())])
-    out_cols = [f.name for f in schema.fields]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx: BoundaryIndex = bidx.value
-        fids = idx.feature_ids().astype(np.int32)
-        countries = idx.countries()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lon = pdf[lon_col].to_numpy(dtype=np.float64)
-            lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            if unmatched_only:
-                pt, _pp = idx.pip(lon, lat, many_to_many=False)
-                sel = np.ones(len(pdf), dtype=bool)
-                sel[pt] = False
-                pdf = pdf.loc[sel].reset_index(drop=True)
-                lon, lat = lon[sel], lat[sel]
-            if not len(pdf):
-                continue
-            pos, dist = idx.nearest_k(lon, lat, k)
-            k_eff = pos.shape[1]
-            rep = np.repeat(np.arange(len(pdf)), k_eff)
-            out = pdf.iloc[rep].reset_index(drop=True)
-            out["feature_id"] = fids[pos.ravel()]
-            out["country"] = countries[pos.ravel()]
-            dd = np.round(dist.ravel(), 6)
-            out["dist_deg"] = dd
-            out["dist_km"] = np.round(dd * KM_PER_DEG, 6)
-            out["rank"] = np.tile(np.arange(1, k_eff + 1, dtype=np.int32),
-                                  len(pdf))
-            yield out[out_cols]
-
-    return points.mapInPandas(kernel, schema)
+    return _probe_join(points, index, "knn_topk_join",
+                       DIST_FIELDS + [T.StructField("rank", T.IntegerType())],
+                       match, lat_col, lon_col, project)

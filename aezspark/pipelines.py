@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import sources, zonal, tiles as tilesmod, regions as regionsmod
 from .fixtures import generate as genmod
 from .io import write_tiles
-from .joins import build_assignment, broadcast_index, tile_shard_lookup
+from .joins import build_assignment, tile_shard_lookup
 from .geometry import BoundaryIndex
 
 
@@ -36,7 +36,7 @@ class World:
         # inside the flagship's timed first run)
         self._boundaries: DataFrame | None = None
         self.index = sources.boundary_index_from_path(self.fx_dir)
-        self.bidx = broadcast_index(spark, self.index)
+        self.bidx = spark.sparkContext.broadcast(self.index)
         self._regions_dim: DataFrame | None = None
         self._asg: DataFrame | None = None
         self._asg_fine: DataFrame | None = None

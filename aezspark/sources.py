@@ -117,10 +117,6 @@ def boundaries_to_polygons(boundaries_df: DataFrame) -> list[Polygon]:
     return polys
 
 
-def boundary_index(boundaries_df: DataFrame) -> BoundaryIndex:
-    return BoundaryIndex(boundaries_to_polygons(boundaries_df))
-
-
 def boundary_index_from_path(fx_dir: str) -> BoundaryIndex:
     """Build the broadcast boundary index with a DRIVER-SIDE pyarrow read of
     the boundaries parquet — the dim is a handful of rows, and routing its

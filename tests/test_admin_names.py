@@ -48,10 +48,6 @@ def test_dim_sizes():
 
 
 def test_spark_dims(spark):
-    a = admin.admin_dim(spark)
-    assert a.count() == 68
-    dropped = a.filter(F.col("canonical").isNull()).count()
-    assert dropped == sum(1 for v in admin.adminmap().values() if v is None)
     m = admin.region_memberships_dim(spark)
     assert m.filter(F.col("country") == "Belgium").count() == 2
 

@@ -164,7 +164,7 @@ def test_nearest_matches_bruteforce_with_ties():
     # add points exactly equidistant between two shared-ish borders
     lon = np.append(lon, [-125.0, -100.0, 0.0])
     lat = np.append(lat, [-51.0, -51.0, 80.0])
-    pos_bf, d_bf = idx.nearest_bruteforce(lon, lat)
+    pos_bf, d_bf = (a[:, 0] for a in idx.nearest_bruteforce_k(lon, lat, 1))
     stats = {}
     pos, d = idx.nearest(lon, lat, stats=stats)
     assert (pos == pos_bf).all()
@@ -181,9 +181,9 @@ def test_nearest_points_inside_polygons():
     p = idx.polygons[0]
     cx = (p.ring_lons.min() + p.ring_lons.max()) / 2
     cy = (p.ring_lats.min() + p.ring_lats.max()) / 2
-    pos_bf, d_bf = idx.nearest_bruteforce([cx], [cy])
+    pos_bf, d_bf = idx.nearest_bruteforce_k([cx], [cy], 1)
     pos, d = idx.nearest([cx], [cy])
-    assert pos[0] == pos_bf[0] and d[0] == d_bf[0]
+    assert pos[0] == pos_bf[0, 0] and d[0] == d_bf[0, 0]
 
 
 def test_bucket_keys_clamped_at_domain_edges():
@@ -217,9 +217,49 @@ def test_nearest_k_matches_dense_topk_with_ties():
     assert (np.diff(d, axis=1) >= 0).all()
     frac = stats["segments_evaluated"] / stats["total_segment_pairs"]
     assert frac < 0.5, f"evaluated {frac:.2%} of all pairs"
-    # rank-1 column must equal the k=1 operator
+
+
+def _rect(fid, x0, x1, y0, y1):
+    return Polygon(fid, f"C{fid}", np.array([x0, x1, x1, x0, x0]),
+                   np.array([y0, y0, y1, y1, y0]))
+
+
+def _notch(fid, dx):
+    """A U-shaped feature around (dx, 0): its bbox contains the point, so it
+    is the point's min-bound seed, but every wall is exactly 1 away."""
+    xs = np.array([-3, 3, 3, 1, 1, -1, -1, -3, -3], dtype=np.float64) + dx
+    ys = np.array([-3, -3, 3, 3, -1, -1, 3, 3, -3], dtype=np.float64)
+    return Polygon(fid, f"C{fid}", xs, ys)
+
+
+def test_nearest_k_seed_ties_lose_to_lower_positions():
+    """The branch-and-bound seeds each point with its min-bound feature,
+    which can sit at a HIGHER position than a feature at exactly the same
+    distance. The refine pass must still evaluate that feature (bound ≤ the
+    k-th distance, ties included) so the lower position wins, as in the dense
+    scan. Point (0, 0): seed 3 (notch, d=1); features 0 and 1 closer; feature
+    2 at d=1 and bound 1 fills rank 3. Point (40, 0): seed 5 (notch, d=1),
+    feature 4 at d=1 and bound 1 is its nearest."""
+    idx = BoundaryIndex([
+        _rect(0, -0.25, 0.25, -0.75, -0.5),   # d 0.5
+        _rect(1, 0.6, 0.8, -0.2, 0.2),        # d 0.6
+        _rect(2, -0.5, 0.5, 1.0, 2.0),        # d 1, bound 1
+        _notch(3, 0.0),                       # d 1, bound 0: the seed
+        _rect(4, 39.5, 40.5, 1.0, 2.0),       # d 1, bound 1
+        _notch(5, 40.0),                      # d 1, bound 0: the seed
+    ])
+    rng = np.random.default_rng(11)
+    n_fill = idx.SEG_CHUNK // len(idx.seg_x1) + 1  # forces the B&B path
+    lon = np.concatenate([[0.0, 40.0], rng.uniform(-180, 180, n_fill)])
+    lat = np.concatenate([[0.0, 0.0], rng.uniform(-85, 85, n_fill)])
+    for k in (1, 3):
+        pos_bf, d_bf = idx.nearest_bruteforce_k(lon, lat, k)
+        pos, d = idx.nearest_k(lon, lat, k)
+        assert pos[:2].tolist() == ([[0], [4]] if k == 1
+                                    else [[0, 1, 2], [4, 5, 3]])
+        assert (pos == pos_bf).all() and np.array_equal(d, d_bf)
     pos1, d1 = idx.nearest(lon, lat)
-    assert (pos[:, 0] == pos1).all() and np.array_equal(d[:, 0], d1)
+    assert (pos1 == pos_bf[:, 0]).all() and np.array_equal(d1, d_bf[:, 0])
 
 
 def test_nearest_k_clamps_k_to_feature_count():

@@ -104,9 +104,9 @@ def test_pyarrow_index_equals_spark_index(spark, fx_dir):
     from aezspark import sources
 
     a = sources.boundary_index_from_path(fx_dir)
-    b = sources.boundary_index(sources.read_boundaries(spark, fx_dir))
-    assert len(a.polygons) == len(b.polygons)
-    for pa_, pb in zip(a.polygons, b.polygons):
+    b = sources.boundaries_to_polygons(sources.read_boundaries(spark, fx_dir))
+    assert len(a.polygons) == len(b)
+    for pa_, pb in zip(a.polygons, b):
         assert pa_.feature_id == pb.feature_id
         assert pa_.country == pb.country
         import numpy as np

@@ -19,6 +19,8 @@ PINNED = {
     "flagship_fused": (1, 0, 0, 1, 0, 1, 0),
     "embedding_neardup": (4, 2, 1, 2, 2, 0, 0),
     "within_distance": (1, 0, 0, 0, 0, 1, 0),
+    "knn_topk": (1, 0, 0, 0, 0, 1, 0),
+    "doc_assignment": (5, 5, 0, 0, 5, 1, 0),
     "simhash": (0, 1, 0, 2, 1, 0, 0),
     "ivf_probe_pruned": (0, 0, 0, 0, 0, 0, 0),
     "fao_slope_assembly": (0, 0, 0, 1, 0, 0, 0),

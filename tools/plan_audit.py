@@ -106,6 +106,12 @@ Notes:
   The `Coalesce` under MapInPandas is `joins._one_wave`: a kernel input
   estimated below one `spark.sql.files.maxPartitionBytes` split runs as
   one task per core. It is narrow (no Exchange) and not a counted node.
+- **within_distance / knn_topk / doc_assignment**: the three row-emitting
+  probe joins run one kernel builder (`joins._probe_join`, each passing
+  only its match function), so each is one MapInPandas over `_one_wave`'s
+  Coalesce with no Exchange in the join. doc_assignment's broadcast joins
+  are `documents.with_aez`: the composed tile lookup (the four of the tiles
+  plan, plus the equi-join on the fine cell id).
 - **simhash** (round 3; widened 16→64 bit in round 5): one row per token
   through the single groupBy — the 64 per-bit sums are conditional
   aggregates on the same row, so the shuffle carries |tokens| rows (was
@@ -172,6 +178,8 @@ def headline_plans(spark, world, sf_dir: str) -> dict:
         world.documents(), world.bidx, world.tile_lookup(), world.fine)
     plans["embedding_neardup"] = E.q_embedding_neardup(spark, sf_dir)
     plans["within_distance"] = E.q_sp_within_distance(spark, sf_dir)
+    plans["knn_topk"] = E.q_sp_knn_topk(spark, sf_dir)
+    plans["doc_assignment"] = E.q_sp_doc_assignment(spark, sf_dir)
     plans["simhash"] = E.q_simhash(spark, sf_dir)
     plans["ivf_probe_pruned"] = E.q_ivf_topk(spark, sf_dir)
     plans["fao_slope_assembly"] = E.q_sp_fao_slope(spark, sf_dir)
