@@ -467,6 +467,14 @@ class BoundaryIndex:
                 feats_eval += 1
             best[sl] = bbest
             pos[sl] = bpos
+        # a NaN/±inf point's bounds are NaN/inf, which no refine test admits
+        # (its row would keep the sentinel position): rank it as the dense
+        # scan does, SEG_CHUNK cells per call
+        bad = np.flatnonzero(~(np.isfinite(lon) & np.isfinite(lat)))
+        step = max(1, self.SEG_CHUNK // len(self.seg_x1))
+        for c0 in range(0, len(bad), step):
+            b = bad[c0:c0 + step]
+            pos[b], best[b] = self.nearest_bruteforce_k(lon[b], lat[b], k_eff)
         if stats is not None:
             stats["segments_evaluated"] = int(segs_eval)
             stats["total_segment_pairs"] = int(n * len(self.seg_x1))

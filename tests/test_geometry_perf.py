@@ -262,6 +262,26 @@ def test_nearest_k_seed_ties_lose_to_lower_positions():
     assert (pos1 == pos_bf[:, 0]).all() and np.array_equal(d1, d_bf[:, 0])
 
 
+def test_nearest_k_non_finite_points_match_dense_scan():
+    """A NaN or ±inf coordinate has NaN/inf bbox bounds, which no refine test
+    admits: on the branch-and-bound path such a point must still get the
+    dense scan's row (NaN distances, positions in order), never the
+    out-of-range sentinel position."""
+    idx = _many_feature_index()
+    rng = np.random.default_rng(13)
+    n_pts = 12000
+    assert n_pts * len(idx.seg_x1) > idx.SEG_CHUNK  # forces the B&B path
+    lon = np.append(rng.uniform(-180, 180, n_pts),
+                    [np.nan, np.inf, 0.0, -np.inf])
+    lat = np.append(rng.uniform(-85, 85, n_pts), [0.0, 0.0, np.nan, np.nan])
+    for k in (1, 3):
+        with np.errstate(invalid="ignore"):
+            pos_bf, d_bf = idx.nearest_bruteforce_k(lon, lat, k)
+            pos, d = idx.nearest_k(lon, lat, k)
+        assert (pos == pos_bf).all()
+        assert np.array_equal(d, d_bf, equal_nan=True)
+
+
 def test_nearest_k_clamps_k_to_feature_count():
     idx = _many_feature_index(n_feat=2)
     pos, d = idx.nearest_k([0.0, 10.0], [0.0, 5.0], 5)
