@@ -119,9 +119,9 @@ def main():
         return f"| {label} | {a:.1f} | {b:.1f} | {ratio} |"
 
     stage_rows = "\n".join([
-        srow("scan_parse_index_s", "scan + span explode + geo parse + cell index"),
-        srow("pip_knn_tile_kernel_s",
-             "fused PIP + kNN + tile-lookup + in-kernel doc dedup (delta)"),
+        srow("scan_project_s", "scan + (doc_key, kinds, texts) projection"),
+        srow("parse_pip_knn_tile_kernel_s",
+             "fused span parse + PIP + kNN + tile-lookup + doc dedup (delta)"),
         srow("distinct_zonal_agg_s", "final partial-count rollup (delta)"),
         srow("full_pipeline_s", "full pipeline (single action)"),
     ])
@@ -188,7 +188,7 @@ usually faster than its first measurement — the clamp plus this note replaces
 pretending the bound is tight). Reading:
 - the **Arrow kernel scales ~4×** (embarrassingly parallel, no cross-batch
   state) — the engine's own compute is not the bottleneck;
-- **scan+parse** scales with task count; with 32 MB splits the 1.4 GB corpus
+- **scan + projection** scales with task count; with 32 MB splits the 1.4 GB corpus
   is 44 tasks and wave quantization is gone (the raw parquet scan alone runs
   at page-cache speed, ~1.5 s for 1.4 GB);
 - round 2's non-scaling residue was the **distinct-doc shuffle** (20M rows of
@@ -197,15 +197,15 @@ pretending the bound is tight). Reading:
   (docs are partition-local through the narrow assignment chain, so the dedup
   runs per partition — but as a SECOND Arrow kernel it paid a full join-output
   round trip, measured as the largest stage), then full fusion: the dedup and
-  partial count now run INSIDE the assign kernel
-  (`assign_points(emit='zone_counts')`), so match rows never cross the Arrow
-  boundary and the single shuffle carries a few thousand (country, aez, n)
-  partials regardless of corpus size.
+  partial count now run INSIDE the assign kernel, so match rows never
+  cross the Arrow boundary and the single shuffle carries a few thousand
+  (country, aez, n) partials regardless of corpus size.
 - round 4 attacked the remaining per-row cost on both sides of the Arrow
-  boundary: **int64 doc keys** (xxhash64(doc_id) computed JVM-side BEFORE
-  the span explode — geo_key_points — so both the JVM parse stage and the
-  Arrow payload carry 8-byte keys instead of strings, and span_idx/
-  posexplode are dropped from the count-only path), **pandas hash-dedup**
+  boundary: **int64 doc keys** (xxhash64(doc_id) computed JVM-side, so the
+  Arrow payload carries 8-byte keys instead of strings; the span explode
+  and the geo parse have since moved into the kernel, which reads one
+  (doc_key, kinds, texts) row per document and hashes once per document
+  — joins.doc_zone_partials), **pandas hash-dedup**
   over two int64 columns in the kernel (7.8× faster than the previous
   np.unique(axis=0) void sort at 2M pairs), and **core-aware scan splits**
   (spark.sql.files.minPartitionNum = 3× parallelism, replacing the 128 MB

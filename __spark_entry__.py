@@ -2,9 +2,9 @@
 
 Three surfaces:
   entry(spark)    flagship: interleaved docs derived from sf0.001 → span
-                  extraction → cell index → broadcast PIP join → kNN
-                  fallback → AEZ tile lookup → zonal doc counts, fused
-                  into one Arrow kernel (documents.assign_zone_counts).
+                  extraction → broadcast PIP join → kNN fallback → AEZ
+                  tile lookup → zonal doc counts, fused into one Arrow
+                  kernel (documents.assign_zone_counts).
   queries()       one entry per implemented operator (SURVEY.md §2): relational
                   core on the driver's TPC-H-ish tables, training-data corpus
                   ops (dedup / similarity / text analysis / multimodal), and
@@ -863,10 +863,10 @@ def q_sp_within_distance(spark, sf_dir):
 
 def q_sp_doc_zone_counts(spark, sf_dir):
     """The production flagship aggregation under the full value-parity gate:
-    ONE Arrow kernel fusing PIP + kNN + shard-manifest tile lookup
-    (World.tile_lookup) + partition-local distinct-doc dedup (assign_points
-    emit='zone_counts') — match rows never cross the Arrow boundary; the
-    shuffle carries only (country, aez, n) partials. The composed form
+    ONE Arrow kernel over document rows fusing the span parse + PIP + kNN +
+    shard-manifest tile lookup (World.tile_lookup) + partition-local
+    distinct-doc dedup (joins.doc_zone_partials) — match rows never cross
+    the Arrow boundary; the shuffle carries only (country, aez, n) partials. The composed form
     (with_aez + doc_zone_counts) is parity-pinned in
     tests/test_doc_zone_counts.py."""
     w = _world(spark)

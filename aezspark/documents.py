@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import cellindex
 from .grid import GridSpec, lonlat_to_cell_col
-from .joins import assign_points
+from .joins import assign_points, doc_zone_partials
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -50,24 +50,22 @@ def indexed_points(docs: DataFrame, index_res: int = 6) -> DataFrame:
 
 
 def geo_key_points(docs: DataFrame) -> DataFrame:
-    """Minimal fused-path projection: (doc_key, lat, lon) — the count-only
-    consumer's input. Differences vs geo_points that matter at 20M+ docs/8c,
-    where the JVM scan+parse stage is itself bandwidth-bound:
-      * doc_id is hashed to int64 BEFORE the explode (one xxhash64 per doc,
-        and the exploded span rows carry 8-byte keys through the JVM
-        pipeline instead of doc_id strings);
-      * explode, not posexplode — span_idx is dead weight for a count.
-    Values: identical zone counts (the key is per-doc constant), pinned by
-    tests/test_doc_zone_counts.py fused-vs-composed parity.
+    """(doc_key, lat, lon) of every geo span, parsed in the JVM: the point
+    form of the flagship's input, with doc_key = xxhash64(doc_id). The
+    flagship no longer runs it (assign_zone_counts parses spans inside its
+    kernel); aezbench's traced prefix jobs still call it, and
+    tests/test_doc_zone_counts.py pins the kernel's parse to its values.
+
+    Its optimized plan is not the one the expressions suggest: Catalyst
+    carries doc_id through the Generate and applies xxhash64 in the final
+    Project, once per geo span, and it evaluates split + CAST twice per geo
+    span (in the null Filter and in the Project). Nested-field pruning does
+    not pass the explode, so the scan reads all four span fields.
 
     Written as SQL expression strings, not Column calls: every Column op is
-    one py4j round trip on the driver, and this projection is rebuilt on
-    every flagship job, so the strings cut its build about threefold
-    (0.028 → 0.010 s on a 4-vCPU host) for the same optimized plan
-    (BENCH/BASELINE.md "One kernel wave for small inputs"). geo_points
-    keeps its Column ops: it feeds the composed reference and the rows
-    path, which share explode_spans with the span-sequence invariant and
-    are not rebuilt per flagship job."""
+    one py4j round trip on the driver, so the strings cut its build about
+    threefold (0.028 → 0.010 s on a 4-vCPU host) for the same optimized plan
+    (BENCH/BASELINE.md "One kernel wave for small inputs")."""
     return (docs.selectExpr("xxhash64(doc_id) AS doc_key",
                             "explode(spans) AS span")
             .where("span.kind = 'geo'")
@@ -75,6 +73,15 @@ def geo_key_points(docs: DataFrame) -> DataFrame:
                         "CAST(split(span.text, ',')[0] AS DOUBLE) AS lat",
                         "CAST(split(span.text, ',')[1] AS DOUBLE) AS lon")
             .where("lat IS NOT NULL AND lon IS NOT NULL"))
+
+
+def keyed_spans(docs: DataFrame) -> DataFrame:
+    """The flagship's JVM side: one row per document, (doc_key, kinds,
+    texts) with doc_key = xxhash64(doc_id) and the two span fields the
+    zone count reads. Nested-field pruning takes it into the scan, whose
+    ReadSchema lists only doc_id, spans.kind and spans.text."""
+    return docs.selectExpr("xxhash64(doc_id) AS doc_key",
+                           "spans.kind AS kinds", "spans.text AS texts")
 
 
 def assign_documents(docs: DataFrame, index, index_res: int = 6,
@@ -99,35 +106,25 @@ def assign_documents(docs: DataFrame, index, index_res: int = 6,
 
 def assign_zone_counts(docs: DataFrame, index, tile_lookup,
                        fine: GridSpec) -> DataFrame:
-    """The fully-fused flagship aggregation: span explode → geo parse → cell
-    index → ONE Arrow kernel doing PIP + kNN + shard-manifest tile lookup
-    (`tile_lookup`: World.tile_lookup() or joins.tile_shard_lookup) +
-    partition-local distinct-doc dedup + partial zonal count — match rows
-    NEVER cross the Arrow boundary; each partition emits only (country,
-    aez_code, n) partials and the single shuffle carries those few-thousand
-    rows. Identical values to doc_zone_counts(with_aez(assign_documents(...)))
+    """The fully-fused flagship aggregation: distinct documents per
+    (country, aez_code) in ONE Arrow pass from the document row. The JVM
+    only projects keyed_spans (doc_key, kinds, texts) over the scan; one
+    mapInArrow kernel (joins.doc_zone_partials) explodes the spans, parses
+    the geo ones, runs PIP + kNN + the shard-manifest tile lookup
+    (`tile_lookup`: World.tile_lookup() or joins.tile_shard_lookup), dedups
+    docs and emits (country, aez_code, n) partials, so the single shuffle
+    carries a few thousand rows. Identical values to
+    doc_zone_counts(with_aez(assign_documents(...)))
     (tests/test_doc_zone_counts.py pins the parity).
 
-    The kernel input is projected to exactly (doc_key, lat, lon) — span_idx /
-    offset / index_cell are dead weight for a count-only consumer, and
-    mapInPandas transfers its ENTIRE input schema across the Arrow boundary
-    (Catalyst cannot prune into a Python kernel), so the projection must
-    happen before the kernel, not inside it.
-
-    doc_key = xxhash64(doc_id), computed JVM-side: the count only needs doc
-    DISTINCTNESS, so an int64 surrogate replaces the doc_id string in the
-    Arrow payload (8 bytes vs ~20 + offsets on this bus-bound stage) and
-    turns the kernel's dedup into int64-column hashing instead
-    of pandas object rows. Collision cost: two docs in the same zone cell
-    colliding merge into one count — P(any collision) ≈ n²/2⁶⁵ ≈ 1e-5 at 20M
-    docs, zero observed at fixture scale (the driver hash-gate would catch
-    one). Exact-key consumers use emit='rows' + doc_zone_counts. The hash is
-    applied BEFORE the span explode (geo_key_points), so the JVM parse
-    stage streams int64 keys, not doc_id strings."""
-    pts = geo_key_points(docs)
-    partials = assign_points(pts, index, tile_lookup=tile_lookup, fine=fine,
-                             project=["doc_key"], emit="zone_counts",
-                             doc_col="doc_key")
+    doc_key = xxhash64(doc_id), computed JVM-side once per document: the
+    count only needs doc DISTINCTNESS, so an int64 surrogate replaces the
+    doc_id string in the Arrow payload and turns the kernel's dedup into
+    int64-column hashing. Collision cost: two docs in the same zone cell
+    colliding merge into one count — P(any collision) ≈ n²/2⁶⁵ ≈ 1e-5 at
+    20M docs, zero observed at fixture scale (the driver hash-gate would
+    catch one). Exact-key consumers use assign_documents + doc_zone_counts."""
+    partials = doc_zone_partials(keyed_spans(docs), index, tile_lookup, fine)
     return (partials.groupBy("country", "aez_code")
             .agg(F.sum("n_docs").alias("n_docs")))
 
@@ -193,7 +190,7 @@ def doc_zone_counts(assigned_aez: DataFrame) -> DataFrame:
     high-cardinality doc_id, so a hot country is spread over all reducers;
     the final count runs on the deduplicated set with map-side partial
     aggregation. The production path is assign_zone_counts, which dedups
-    inside the assign kernel; tests/test_doc_zone_counts.py pins the two
+    inside its one kernel; tests/test_doc_zone_counts.py pins the two
     equal."""
     distinct = (assigned_aez
                 .select("country", "aez_code", "doc_id")

@@ -148,4 +148,3 @@ def lonlat_to_cell_col(grid: GridSpec, lat_col, lon_col):
 # to a smaller 2.5° coarse grid for speed; generators accept any GridSpec.
 COARSE = GridSpec(grid_id=1, px_deg=2.5)          # 144 × 72
 FINE = COARSE.refine(3, grid_id=2)                # 432 × 216 (×3 coupling)
-DOC_INDEX_RES = 6                                 # quadtree res for doc indexing

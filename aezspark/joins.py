@@ -4,12 +4,12 @@ The reference's only join is containment via pre-rasterized per-country masks
 (prepare_feature_masks.py:9-63 build; extract_country_data.py:231-245 probe).
 Here it is a true broadcast point-in-polygon join (north_rule): the polygon
 dim — rings + bbox-bucket index (geometry.BoundaryIndex) — is broadcast to all
-executors, and an Arrow-batched mapInPandas kernel evaluates the vectorized
-crossing-number test per batch. No shuffle happens in the join itself; the
-downstream grouped aggregations absorb hot countries/cells in their map-side
-partial aggregate.
+executors, and an Arrow-batched kernel (mapInPandas over points, mapInArrow
+over documents) evaluates the vectorized crossing-number test per batch. No
+shuffle happens in the join itself; the downstream grouped aggregations
+absorb hot countries/cells in their map-side partial aggregate.
 
-Two join shapes:
+Three join shapes:
   * the probe joins: arbitrary (lat, lon) rows → feature matches, all through
     one Arrow kernel (_probe_join) that differs only in its per-batch match
     function. assign_points matches many-to-many by PIP, with optional kNN
@@ -18,9 +18,11 @@ Two join shapes:
     broadcast shard manifest of the clustered tile sink
     (tile_shard_lookup), whose memory is bounded by a per-worker LRU at any
     grid size. within_distance_join (range) and knn_topk_join (top-k by
-    boundary distance) are the other two match functions. assign_points'
-    emit='zone_counts' aggregates inside its own kernel, on the same
-    prologue (_probe_input) and match core (_match_arrays).
+    boundary distance) are the other two match functions.
+  * the flagship's distinct-doc zone count (doc_zone_partials): one
+    mapInArrow kernel over document rows that explodes and parses the geo
+    spans in pyarrow.compute, then runs the same match core (_match_arrays)
+    and tile lookup, dedups docs and emits only per-partition partials.
   * build_assignment: enumerate every grid cell inside each feature's bbox
     (driver emits only per-feature bbox row-range chunks, as one Arrow local
     relation; executors explode them with sequence()), PIP-filter the
@@ -34,10 +36,13 @@ Two join shapes:
 from __future__ import annotations
 
 import os
+import sys
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -143,9 +148,13 @@ MATCH_FIELDS = [T.StructField("feature_id", T.IntegerType()),
 DIST_FIELDS = [T.StructField("dist_deg", T.DoubleType()),
                T.StructField("dist_km", T.DoubleType())]
 
-# emit='zone_counts' kernel: pending deduped (combo, doc) pairs above this
-# are compacted in place (4M int64 pairs ≈ 64 MB); see zc_kernel
+# zone-count kernel: pending deduped (combo, doc) pairs above this are
+# compacted in place (4M int64 pairs ≈ 64 MB); see doc_zone_partials
 ZC_DEDUP_BUDGET_ROWS = 4_000_000
+
+# what Java's String.trim (and so Spark's string → double cast) strips from
+# both ends: every code point up to U+0020
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
 
 
 def _validate_projection(points: DataFrame, project: list[str] | None,
@@ -352,7 +361,7 @@ def _validate_shard_geometry(shard_paths: dict, fine: GridSpec,
             f"nx={fine.nx} — wrong tile_px or grid for this sink")
 
 
-def _check_tile_lookup(tile_lookup, fine: GridSpec | None) -> None:
+def _check_tile_lookup(tile_lookup, fine: GridSpec | None, op: str) -> None:
     """A wrong tile_lookup (e.g. a broadcast of bare arrays) would otherwise
     fail only inside a Python worker, as an AttributeError."""
     if not isinstance(tile_lookup, Broadcast):
@@ -363,11 +372,11 @@ def _check_tile_lookup(tile_lookup, fine: GridSpec | None) -> None:
         got = None
     if got is not None:
         raise ValueError(
-            f"assign_points: tile_lookup must be a Broadcast of "
+            f"{op}: tile_lookup must be a Broadcast of "
             f"TileShardLookup (World.tile_lookup() or joins.tile_shard_lookup), "
             f"got {got}")
     if fine is None:
-        raise ValueError("assign_points: tile_lookup requires the fine grid")
+        raise ValueError(f"{op}: tile_lookup requires the fine grid")
 
 
 def _one_wave(points: DataFrame) -> DataFrame:
@@ -382,12 +391,19 @@ def _one_wave(points: DataFrame) -> DataFrame:
     scan's own 3-waves plan stands, because there the kernel work dominates
     and the waves balance it.
 
-    coalesce is narrow: it adds no Exchange and merges whole partitions, so
-    every row of one doc stays in one partition (the emit='zone_counts'
-    precondition), and an input with ≤ cores partitions keeps them. The size
-    is a property of the optimized logical plan: no physical plan and no
-    .rdd are built. A streaming input has no finite size and passes
-    through."""
+    coalesce is narrow: it adds no Exchange and merges whole partitions, and
+    an input with ≤ cores partitions keeps them. The size is a property of
+    the optimized logical plan: no physical plan and no .rdd are built. A
+    streaming input has no finite size and passes through.
+
+    The estimate is of the kernel input, so where the threshold falls in
+    corpus bytes depends on what that input carries. The flagship's is the
+    document projection (documents.keyed_spans: doc_key plus two span-field
+    lists), estimated at 0.82 of the documents file's bytes on the aezbench
+    corpus (2.9 MB), where the parsed (doc_key, lat, lon) points it replaced
+    estimated at 0.35 (1.2 MB). At the default 128 MB split, documents files
+    below ~156 MB are now coalesced, against ~366 MB before; the 0.7 and
+    1.4 GB scaling corpora keep their 3-wave plan."""
     if points.isStreaming:
         return points
     spark = points.sparkSession
@@ -458,8 +474,7 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
                   lon_col: str = "lon", knn_fallback: bool = True,
                   tile_lookup=None,
                   fine: GridSpec | None = None,
-                  project: list[str] | None = None,
-                  emit: str = "rows", doc_col: str = "doc_id") -> DataFrame:
+                  project: list[str] | None = None) -> DataFrame:
     """Broadcast PIP join of arbitrary points; optional kNN nearest-zone
     fallback for points inside no polygon (SURVEY §2.9 #4).
 
@@ -476,139 +491,164 @@ def assign_points(points: DataFrame, index, lat_col: str = "lat",
 
     project: input columns to keep in the output (default: all). Projecting
     INSIDE the kernel matters at scale — dropped columns never cross the
-    Arrow boundary back to the JVM nor enter the downstream shuffle.
-
-    emit='zone_counts' fuses a partition-local distinct-doc zonal count
-    INTO this kernel: match rows never cross the Arrow boundary at all —
-    each partition emits only its (country, aez_code, n_docs) partials;
-    finish with groupBy(country, aez_code).sum. Requires tile_lookup and a
-    `doc_col` input column (default doc_id; pass an int64 surrogate — e.g.
-    xxhash64(doc_id) — to keep the Arrow payload and the dedup integer-only:
-    distinctness is all the count needs, and the kernel then hash-dedups
-    int64 pairs instead of object rows). Precondition: every row of one doc
-    lives in ONE input partition, else the doc is counted once per partition
-    (tests/test_doc_zone_counts.py pins the scrambled-input counterexample).
-    Points derived from a documents scan by narrow ops
-    (documents.geo_key_points) meet it by construction. Aggregation pushed
-    into the join — the 10¹²-doc shape where the join output (≈ input rows ×
-    match multiplicity) is the dominant data volume."""
-    if emit not in ("rows", "zone_counts"):
-        raise ValueError(f"assign_points: unknown emit mode {emit!r}")
-    if emit == "zone_counts":
-        if tile_lookup is None:
-            raise ValueError("assign_points(emit='zone_counts') requires tile_lookup")
-        if doc_col not in [f.name for f in points.schema.fields]:
-            raise ValueError(f"assign_points(emit='zone_counts') requires a "
-                             f"{doc_col!r} column")
+    Arrow boundary back to the JVM nor enter the downstream shuffle. A
+    distinct-doc zone count aggregates inside its own kernel instead
+    (doc_zone_partials), so no match row leaves Python at all."""
     fields = [T.StructField("method", T.StringType())]
     if tile_lookup is not None:
-        _check_tile_lookup(tile_lookup, fine)
+        _check_tile_lookup(tile_lookup, fine, "assign_points")
         fields.append(T.StructField("aez_code", T.IntegerType()))
 
-    if emit == "rows":
-        def match(idx: BoundaryIndex, lon, lat):
-            take, ppos, isknn = _match_arrays(idx, lon, lat, knn_fallback)
-            cols = {"method": np.where(isknn, "knn", "pip")}
-            if tile_lookup is not None:
-                cols["aez_code"] = _tile_codes(tile_lookup.value, fine,
-                                               lon[take], lat[take])
-            return take, ppos, cols
+    def match(idx: BoundaryIndex, lon, lat):
+        take, ppos, isknn = _match_arrays(idx, lon, lat, knn_fallback)
+        cols = {"method": np.where(isknn, "knn", "pip")}
+        if tile_lookup is not None:
+            cols["aez_code"] = _tile_codes(tile_lookup.value, fine,
+                                           lon[take], lat[take])
+        return take, ppos, cols
 
-        return _probe_join(points, index, "assign_points", fields, match,
-                           lat_col, lon_col, project)
+    return _probe_join(points, index, "assign_points", fields, match,
+                       lat_col, lon_col, project)
 
-    points, bidx, _schema = _probe_input(points, index, project,
-                                         MATCH_FIELDS + fields, "assign_points")
-    if project is not None and doc_col not in project:
-        raise ValueError(f"assign_points(emit='zone_counts'): {doc_col!r} "
-                         f"must survive the projection")
-    zc_schema = T.StructType([
-        T.StructField("country", T.StringType()),
-        T.StructField("aez_code", T.IntegerType()),
-        T.StructField("n_docs", T.LongType())])
 
-    # read at plan-build time and captured in the closure, so a driver-side
-    # change to ZC_DEDUP_BUDGET_ROWS reaches the workers
-    zc_budget = ZC_DEDUP_BUDGET_ROWS
+def _geo_spans(batch: pa.RecordBatch):
+    """The zone-count kernel's span parse: (doc_key, lat, lon) numpy arrays
+    of every geo span with text in one batch of (doc_key, kinds, texts)
+    document rows, in span order. Null or empty span lists and spans with a
+    null kind yield nothing.
 
-    def zc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Integer dedup path: country → small int code (position in the
-        # sorted unique-country array, shared by construction across every
-        # batch of every partition), packed with the aez code into ONE int64
-        # (combo = ccode·512 + aez). Distinct (combo, doc_key) pairs per
-        # partition via pandas hash-dedup over two int64 columns (measured
-        # 7.8x faster than np.unique(axis=0) and ~an order of magnitude
-        # faster than object-row dedup). String doc keys run the same path
-        # with slower object hashing (the production path feeds an int64
-        # surrogate key).
-        #
-        # MEMORY BOUND: the irreducible per-partition working set is this
-        # partition's TRUE distinct (combo, key) set — ≤ the partition's
-        # match-row count ≤ (partition rows × match multiplicity), i.e. tens
-        # of MB as int64 pairs: a partition holds one core-aware scan split
-        # (session.py) or, coalesced by _one_wave, less than one max-size
-        # split of input in total. Transient growth ABOVE that
-        # (per-batch-deduped frames accumulating cross-batch duplicates) is
-        # capped by incremental compaction at ZC_DEDUP_BUDGET_ROWS (4M pairs
-        # ≈ 64 MB): when the pending frames exceed the budget they are
-        # concat+dedup-compacted in place; if the compacted distinct set
-        # itself exceeds the budget, the budget doubles (amortized O(n)
-        # compaction work) — the kernel then degrades gracefully toward the
-        # irreducible bound instead of holding every duplicate until EOF.
-        idx: BoundaryIndex = bidx.value
-        countries = idx.countries()
-        # null-country polygons: astype(str) would mint the literal 'None';
-        # encode nulls as a sentinel code and decode back to true null on
-        # emit so the fused path agrees with the rows/composed path
-        null_sentinel = "\x00<null-country>"
-        cstr = np.array([null_sentinel if pd.isna(c) else str(c)
-                         for c in countries], dtype=object)
-        c_uniq, poly_ccode = np.unique(cstr, return_inverse=True)
-        tl = tile_lookup.value
-        budget = zc_budget
-        parts: list[pd.DataFrame] = []
-        pending_rows = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lon = pdf[lon_col].to_numpy(dtype=np.float64)
-            lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            take, ppos, _ = _match_arrays(idx, lon, lat, knn_fallback)
+    The 'lat,lon' parse gives documents.geo_key_points' values: split on
+    commas, fields 0 and 1 trimmed and cast to float64, any further field
+    ignored. A malformed span raises (pyarrow.lib.ArrowInvalid), as Spark's
+    ANSI cast does, rather than being dropped. The trim removes what Java's
+    String.trim removes (the code points U+0000..U+0020, ASCII only): a
+    Unicode trim would also strip a no-break space (U+00A0), which the JVM
+    rejects. Java-only float syntax ('1d', '0x1p3') is the one difference,
+    and it raises here (tests/test_doc_zone_counts.py pins both)."""
+    kinds = batch.column("kinds")
+    # each span's document row. Not list_parent_indices: it also counts the
+    # slots a null list may keep in its offsets, which list_flatten skips
+    n_spans = pc.fill_null(pc.list_value_length(kinds), 0).to_numpy()
+    parent = pa.array(np.repeat(np.arange(len(n_spans)), n_spans))
+    text = pc.list_flatten(batch.column("texts"))
+    geo = pc.and_(pc.equal(pc.list_flatten(kinds), "geo"), pc.is_valid(text))
+    parts = pc.split_pattern(text.filter(geo), ",")
+    lat, lon = (pc.cast(pc.ascii_trim(pc.list_element(parts, i), _JAVA_TRIM),
+                        pa.float64()).to_numpy()
+                for i in (0, 1))
+    keys = pc.take(batch.column("doc_key"), parent.filter(geo))
+    return keys.to_numpy(), lat, lon
+
+
+def _zone_partials(batches: Iterator[pa.RecordBatch], idx: BoundaryIndex,
+                   tl: TileShardLookup, fine: GridSpec, budget: int,
+                   slice_rows: int) -> Iterator[pa.RecordBatch]:
+    """doc_zone_partials' kernel over one partition's document batches: one
+    RecordBatch of (country, aez_code, n_docs) over the partition's distinct
+    (zone, doc) pairs, or none when nothing matched. Each _match_arrays call
+    gets at most `slice_rows` parsed points.
+
+    Integer dedup path: country → small int code (position in the sorted
+    unique-country array, shared by construction across every batch of
+    every partition), packed with the aez code into ONE int64 (combo =
+    ccode·512 + aez). Distinct (combo, doc_key) pairs per partition via
+    pandas hash-dedup over two int64 columns (measured 7.8x faster than
+    np.unique(axis=0)).
+
+    MEMORY BOUND: the irreducible per-partition working set is this
+    partition's TRUE distinct (combo, key) set — ≤ the partition's match-row
+    count ≤ (partition points × match multiplicity), i.e. tens of MB as
+    int64 pairs: a partition holds one core-aware scan split (session.py)
+    or, coalesced by _one_wave, less than one max-size split of input in
+    total. Transient growth ABOVE that (per-slice-deduped frames
+    accumulating cross-slice duplicates) is capped by incremental
+    compaction at `budget` (ZC_DEDUP_BUDGET_ROWS): when the pending frames
+    exceed it they are concat+dedup-compacted in place; if the compacted
+    distinct set itself exceeds it, the budget doubles (amortized O(n)
+    compaction work), so the kernel degrades gracefully toward the
+    irreducible bound instead of holding every duplicate until EOF."""
+    # null-country polygons: astype(str) would mint the literal 'None';
+    # encode nulls as a sentinel code and decode back to true null on emit
+    # so the fused path agrees with the rows/composed path
+    null_sentinel = "\x00<null-country>"
+    cstr = np.array([null_sentinel if pd.isna(c) else str(c)
+                     for c in idx.countries()], dtype=object)
+    c_uniq, poly_ccode = np.unique(cstr, return_inverse=True)
+    parts: list[pd.DataFrame] = []
+    pending_rows = 0
+    for batch in batches:
+        keys_all, lat_all, lon_all = _geo_spans(batch)
+        for s in range(0, len(keys_all), slice_rows):
+            lon = lon_all[s:s + slice_rows]
+            lat = lat_all[s:s + slice_rows]
+            take, ppos, _ = _match_arrays(idx, lon, lat, True)
             if not len(take):
                 continue
             aez = _tile_codes(tl, fine, lon[take], lat[take]).astype(np.int64)
             if aez.size and (aez.min() < 0 or aez.max() >= 512):
-                raise ValueError("assign_points(emit='zone_counts'): aez code "
-                                 "outside [0, 512) breaks the packed dedup key")
+                raise ValueError("doc_zone_partials: aez code outside "
+                                 "[0, 512) breaks the packed dedup key")
             combo = poly_ccode[ppos].astype(np.int64) * 512 + aez
-            keys = pdf[doc_col].to_numpy()[take]
-            if np.issubdtype(keys.dtype, np.integer):
-                keys = keys.astype(np.int64)
-            # hash-based dedup (int64 columns): measured 7.8x faster than
-            # np.unique(axis=0) (void-dtype sort) at 2M pairs; object doc
-            # keys take the same path, just with slower object hashing
+            keys = keys_all[s:s + slice_rows][take]
             bdf = pd.DataFrame({"combo": combo, "k": keys}).drop_duplicates()
             parts.append(bdf)
             pending_rows += len(bdf)
             if pending_rows > budget:
-                parts = [pd.concat(parts, ignore_index=True)
-                         .drop_duplicates()]
+                parts = [pd.concat(parts, ignore_index=True).drop_duplicates()]
                 pending_rows = len(parts[0])
                 if pending_rows > budget:
                     budget = pending_rows * 2
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True).drop_duplicates()
-        agg = allp.groupby("combo", sort=False).size()
-        combos = agg.index.to_numpy(dtype=np.int64)
-        counts = agg.to_numpy()
-        country_out = c_uniq[combos // 512].astype(object)
-        country_out[country_out == null_sentinel] = None
-        yield pd.DataFrame({"country": country_out,
-                            "aez_code": (combos % 512).astype("int32"),
-                            "n_docs": counts.astype("int64")})
+    if not parts:
+        return
+    allp = pd.concat(parts, ignore_index=True).drop_duplicates()
+    agg = allp.groupby("combo", sort=False).size()
+    combos = agg.index.to_numpy(dtype=np.int64)
+    country_out = c_uniq[combos // 512].astype(object)
+    country_out[country_out == null_sentinel] = None
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(country_out, pa.string()),
+         pa.array((combos % 512).astype(np.int32)),
+         pa.array(agg.to_numpy().astype(np.int64))],
+        names=["country", "aez_code", "n_docs"])
 
-    return points.mapInPandas(zc_kernel, zc_schema)
+
+def doc_zone_partials(docs: DataFrame, index, tile_lookup,
+                      fine: GridSpec) -> DataFrame:
+    """The fused distinct-doc zone count over document rows: one mapInArrow
+    kernel takes (doc_key BIGINT, kinds ARRAY<STRING>, texts ARRAY<STRING>)
+    rows (documents.keyed_spans) and per partition emits only (country,
+    aez_code, n_docs) partials; finish with groupBy(country, aez_code).sum.
+
+    Per Arrow batch the kernel explodes and parses the geo spans itself
+    (_geo_spans), then runs PIP with kNN fallback (_match_arrays), the shard
+    tile lookup (_tile_codes) and a hash-dedup of (zone, doc_key) pairs. No
+    span row, match row or doc id crosses the Arrow boundary or a shuffle.
+    One input row is one document, so every doc is deduped within one
+    partition by construction. mapInArrow, not mapInPandas: pandas would
+    turn each list cell into a Python object.
+
+    A batch holds up to maxRecordsPerBatch documents, so it can parse into
+    more points than that. The parsed points are matched in slices of at
+    most the session's spark.sql.execution.arrow.maxRecordsPerBatch (read
+    here, at plan-build time), which keeps each kNN call at the point count
+    a points batch had, on the dense side of BoundaryIndex.SEG_CHUNK."""
+    _check_tile_lookup(tile_lookup, fine, "doc_zone_partials")
+    docs = _one_wave(docs)
+    spark = docs.sparkSession
+    bidx = (index if isinstance(index, Broadcast)
+            else spark.sparkContext.broadcast(index))
+    # read at plan-build time and captured in the closure, so a driver-side
+    # change to ZC_DEDUP_BUDGET_ROWS or the batch size reaches the workers
+    zc_budget = ZC_DEDUP_BUDGET_ROWS
+    slice_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if slice_rows <= 0:  # Spark's "no limit"
+        slice_rows = sys.maxsize
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _zone_partials(batches, bidx.value, tile_lookup.value, fine,
+                              zc_budget, slice_rows)
+
+    return docs.mapInArrow(kernel, "country STRING, aez_code INT, n_docs BIGINT")
 
 
 def within_distance_join(points: DataFrame, index, d_deg: float,

@@ -68,7 +68,7 @@ def get_spark(app: str = "aezspark", master: str | None = None,
     # string-key kernel — superseded; BENCH/BASELINE.md). The same 2-3
     # tasks/core rule is the standard sizing on a real cluster, where
     # default.parallelism = total executor cores. The Python kernel stage
-    # has its own rule for small inputs: joins.assign_points coalesces an
+    # has its own rule for small inputs: the joins kernels coalesce an
     # input estimated below one maxPartitionBytes split to one task per
     # core (joins._one_wave), since there the per-task Python cost
     # outweighs the wave balance (BENCH/BASELINE.md "One kernel wave for

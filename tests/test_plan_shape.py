@@ -16,7 +16,7 @@ PINNED = {
     "zonal_wk": (1, 1, 1, 2, 1, 1, 0),
     "aez": (3, 4, 1, 4, 4, 1, 0),
     "tiles": (4, 4, 0, 0, 4, 0, 0),
-    "flagship_fused": (1, 0, 0, 1, 0, 1, 0),
+    "flagship_fused": (0, 0, 0, 1, 0, 1, 0),
     "embedding_neardup": (4, 2, 1, 2, 2, 0, 0),
     "within_distance": (1, 0, 0, 0, 0, 1, 0),
     "knn_topk": (1, 0, 0, 0, 0, 1, 0),

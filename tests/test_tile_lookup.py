@@ -120,7 +120,7 @@ def test_shard_lookup_miss_bound(world, sink36, tables, monkeypatch):
 
 def test_shard_lookup_zone_counts_parity(world, tables):
     """sp_doc_zone_counts parity with the shard path forced: the fused
-    emit='zone_counts' kernel over the shard lookup — at the default LRU and
+    zone-count kernel over the shard lookup — at the default LRU and
     at a 1-shard LRU — equals the composed with_aez broadcast join exactly,
     so the engine's best plan needs no tile broadcast at the real 300 m
     grid."""

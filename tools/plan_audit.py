@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.01"
 
 EXCERPT_PATTERNS = re.compile(
-    r"Exchange|Join|MapInPandas|HashAggregate|PushedFilters|ReadSchema|"
+    r"Exchange|Join|MapIn(Pandas|Arrow)|HashAggregate|PushedFilters|ReadSchema|"
     r"Scan parquet|WholeStageCodegen|Bucketed|PartitionFilters")
 
 
@@ -38,7 +38,7 @@ def counts(plan: str) -> dict:
         "smj": names.count("SortMergeJoin"),
         "exchanges": names.count("Exchange"),
         "bcast_exchanges": names.count("BroadcastExchange"),
-        "python": names.count("MapInPandas"),
+        "python": names.count("MapInPandas") + names.count("MapInArrow"),
         "cartesian": (names.count("CartesianProduct")
                       + names.count("BroadcastNestedLoopJoin")),
     }
@@ -80,8 +80,8 @@ def main():
 Generated by `python tools/plan_audit.py` on the fixture world at local[8]
 (embedding_neardup at sf0.01). Per SURVEY §4 / the scale checklist: filters and
 projections must reach the parquet scan (PushedFilters / ReadSchema), small
-dims go broadcast, Python appears only as MapInPandas kernels, NO plan
-contains a cartesian, and every Exchange is accounted for.
+dims go broadcast, Python appears only as MapInPandas / MapInArrow kernels,
+NO plan contains a cartesian, and every Exchange is accounted for.
 
 ## Summary
 
@@ -90,22 +90,23 @@ contains a cartesian, and every Exchange is accounted for.
 {chr(10).join(rows)}
 
 Notes:
-- **flagship_fused** (round 3; the one flagship doc-count path, run by
-  `entry()` and the benched, oracled `sp_doc_zone_counts`): the dedup and
-  partial count run INSIDE the assign kernel (`emit='zone_counts'`) — one
-  MapInPandas, one Exchange carrying only per-partition (country, aez, n)
-  partials; join output rows never cross the Arrow boundary at all. Its
-  tile codes come from the broadcast shard manifest (`World.tile_lookup()`:
-  per-worker LRU over the clustered tile sink), so no tile dim is
-  broadcast. Round 4:
-  the kernel input ships `xxhash64(doc_id)` (int64, computed JVM-side —
-  visible as the xxhash64 projection feeding MapInPandas) instead of the
-  doc_id string, and the in-kernel dedup is a pandas hash-dedup
-  (drop_duplicates) over the two int64 (combo, key) columns — measured
-  7.8x faster than np.unique(axis=0) at 2M pairs (BENCH/BASELINE.md).
-  The `Coalesce` under MapInPandas is `joins._one_wave`: a kernel input
-  estimated below one `spark.sql.files.maxPartitionBytes` split runs as
-  one task per core. It is narrow (no Exchange) and not a counted node.
+- **flagship_fused** (the one flagship doc-count path, run by `entry()`
+  and the benched, oracled `sp_doc_zone_counts`): one Arrow pass from the
+  document row. The JVM projects only `xxhash64(doc_id) AS doc_key,
+  spans.kind, spans.text` over the scan (`documents.keyed_spans`; nested
+  pruning puts just those fields in its ReadSchema), and ONE MapInArrow
+  kernel (`joins.doc_zone_partials`) explodes and parses the geo spans in
+  pyarrow.compute, runs PIP + kNN + the tile lookup, dedups (zone, doc_key)
+  pairs with a pandas hash-dedup over two int64 columns and emits
+  per-partition (country, aez, n) partials — the one Exchange carries only
+  those. No Generate: the span explode that used to run in the JVM (and
+  whose `IsNotNull(spans)` was the plan's one pushed filter) is gone, as
+  is its double `split` + CAST per geo span. Tile codes come from the
+  broadcast shard manifest (`World.tile_lookup()`: per-worker LRU over the
+  clustered tile sink), so no tile dim is broadcast. The `Coalesce` under
+  MapInArrow is `joins._one_wave`: a kernel input estimated below one
+  `spark.sql.files.maxPartitionBytes` split runs as one task per core. It
+  is narrow (no Exchange) and not a counted node.
 - **within_distance / knn_topk / doc_assignment**: the three row-emitting
   probe joins run one kernel builder (`joins._probe_join`, each passing
   only its match function), so each is one MapInPandas over `_one_wave`'s
